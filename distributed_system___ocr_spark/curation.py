@@ -52,20 +52,24 @@ import json
 import os
 import uuid
 
-import pandas as pd  # module level: pandas_udf string hints must
-# resolve in module globals under `from __future__ import annotations`
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.bucket import salted_bucket
+from .functions.bucket import split_stamp
 from .functions.minhash import BAND_SIZE, N_HASHES, TOKEN_HASH_VERSION
+from .functions.tokens import dup_bigram_fraction
+from .operators import sampling, textdedup
 from .operators.components import _free_ckpt, connected_components
 from .operators.neardup import minhash_lsh_pairs_scale
-from .operators.packing import greedy_pack_bins, monotone_hash_bucket
+from .operators.packing import (
+    chunk_text,
+    greedy_pack_bins,
+    monotone_hash_bucket,
+)
 from .operators.resume import _atomic_write
 from .operators.urlcanon import URL_CANON_VERSION, canonicalize_docs
 from .operators.diversify import CLUSTER_BALANCE_VERSION
+from .operators.lmquality import lm_quality_tail_drop
 from .operators.semdedup import SEMDEDUP_EMBED_VERSION
 from .operators.urlfilter import URL_FILTER_VERSION, filter_blocked_domains
 
@@ -350,205 +354,62 @@ def quality_gate(
     dup_bigram_max: float = 0.05,
 ) -> DataFrame:
     """Scan-stage quality filter over (url, text, ...): length bounds
-    plus the Gopher duplicate-bigram repetition cut — the DataFrame
-    twin of the oracle-gated ``quality_gate_verdict`` registry query,
-    keyed on url instead of doc_id so it chains inside the curation
-    job. One Arrow-batched scan-stage predicate, zero shuffles at any
-    corpus size. Round-7: the dup-bigram fraction runs as a vectorized
-    pandas batch (set of adjacent token pairs) instead of Catalyst
-    zip_with+concat+array_distinct — the interpreted per-element
-    higher-order functions were 9 s over 195k docs vs 1.4 s here, with
-    a bit-identical keep-set (same float64 `1.0 - distinct/n` and the
-    same per-space split; equality pinned by tests and the registry
-    twin's oracle)."""
-
-    @F.pandas_udf("boolean")
-    def _gate_ok(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            t = t or ""
-            n = len(t)
-            if n < min_chars or (max_chars is not None and n > max_chars):
-                out.append(False)
-                continue
-            toks = [x for x in t.split(" ") if x]
-            nb = len(toks) - 1
-            if nb > 0:
-                dup = 1.0 - len(set(zip(toks, toks[1:]))) / nb
-            else:
-                dup = 0.0
-            out.append(dup <= dup_bigram_max)
-        return pd.Series(out)
-
-    return docs.filter(_gate_ok(F.col("text")))
-
-
-def _token_ngrams(n: int):
-    """(tokens array, n-gram array) column pair over ``text`` —
-    whitespace tokens, empties dropped, n consecutive tokens joined by
-    single spaces. Shared by span removal and decontamination so both
-    stages agree on what an n-gram is."""
-    toks = F.expr("filter(split(text, ' '), x -> x <> '')")
-    parts = ", ".join(f"element_at(t, i+{j})" for j in range(n))
-    grams = F.expr(
-        f"transform(sequence(1, size(t) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts}))"
+    plus the Gopher duplicate-bigram repetition cut, whose fraction is
+    the vectorized batch kernel ``functions.tokens.dup_bigram_fraction``
+    (the ``quality_gate_verdict`` registry query runs it too). Zero
+    shuffles at any corpus size."""
+    n = F.length("text")
+    ok = n >= min_chars
+    if max_chars is not None:
+        ok = ok & (n <= max_chars)
+    return docs.filter(
+        ok & (dup_bigram_fraction(F.col("text")) <= dup_bigram_max)
     )
-    return toks, grams
 
 
 def remove_boilerplate_spans(
     docs: DataFrame, min_docs: int = 3, n: int = 5
 ) -> DataFrame:
-    """Cross-doc repeated-span removal: every token position covered by
-    any occurrence of an n-gram appearing in >= ``min_docs`` distinct
-    docs is dropped and the survivors reassembled in order — the
-    curation-pipeline twin of the oracle-gated ``remove_common_spans``
-    registry query (plans/curationops.py), keyed on url and emitting
-    the full (url, text, lang) doc schema so it chains ahead of dedup.
-    Inter-token whitespace is canonicalized to single spaces (same as
-    the registry op). Scale shape: linear gram explode, one gram
-    document-frequency aggregation, bounded n x coverage explode of
-    MATCHED grams only aggregated to one positions-array per doc, and
-    a per-row array rebuild — nothing pairwise, and the token stream
-    never crosses a shuffle.
-
-    ``docs`` must be url-unique (the extraction output's contract —
-    last-wins dedup guarantees it); duplicate urls would merge token
-    streams in the reassembly.
-    """
-    toks, grams_expr = _token_ngrams(n)
-    staged = docs.select("url", "lang", toks.alias("t"))
-    grams = (
-        staged.filter(F.size("t") >= n)
-        .select("url", F.posexplode(grams_expr).alias("s0", "g"))
-        .select("url", (F.col("s0") + 1).alias("s"), "g")
-    )
-    # covered positions aggregate to ONE array per doc (shuffle
-    # bounded by MATCHED grams only); the rebuild is then a per-row
-    # array program — keep_pos = array_except(1..n, cov) (hash-set
-    # linear), kept = transform(keep_pos, p -> t[p]) — so the token
-    # stream itself never crosses a shuffle (round-5: the round-4
-    # shape token-exploded the corpus and re-collected every doc).
-    # Round-7: the gram document-frequency is annotated IN PLACE with
-    # a window over the gram partition (dense_rank by url peaks at the
-    # distinct-doc count; max fans it back — both spill-safe) instead
-    # of a groupBy + join back, so the corpus-sized tokenize+gram
-    # explode executes ONCE, not twice. Same output (registry twin
-    # remove_common_spans pins the formulation against the oracle).
-    dr = F.dense_rank().over(Window.partitionBy("g").orderBy("url"))
-    cd = F.max("_dr").over(Window.partitionBy("g"))
-    cov = (
-        grams.withColumn("_dr", dr)
-        .withColumn("_cd", cd)
-        .filter(F.col("_cd") >= min_docs)
-        .select(
-            "url",
-            F.explode(
-                F.sequence(F.col("s"), F.col("s") + n - 1)
-            ).alias("pos"),
-        )
-        .groupBy("url")
-        .agg(F.collect_set("pos").alias("_cov"))
-    )
-    joined = staged.join(cov, "url", "left")
-    cov_arr = F.coalesce(F.col("_cov"), F.array())
-    keep_pos = F.when(
-        F.size("t") > 0,
-        F.array_except(F.sequence(F.lit(1), F.size("t")), cov_arr),
-    ).otherwise(F.array())  # sequence(1, 0) would count DOWN;
-    # whitespace-only docs keep an empty (nonblank-filtered later) text
-    kept = F.transform(keep_pos, lambda p: F.element_at("t", p))
-    return joined.select(
-        "url", F.array_join(kept, " ").alias("text"), "lang"
-    )
+    """Cross-doc repeated-span removal ahead of dedup: every token
+    position covered by an n-gram appearing in >= ``min_docs`` docs is
+    dropped (``operators.textdedup.remove_common_spans`` keyed on url).
+    Whitespace-only docs keep an empty text, which the stage's
+    nonblank filter drops. ``docs`` must be url-unique (the extraction
+    output's contract), or reassembly would merge token streams."""
+    return textdedup.remove_common_spans(
+        docs, "url", min_docs, n, carry=("lang",)
+    ).select("url", "text", "lang")
 
 
 def dedup_segments_first(docs: DataFrame, n: int = 8) -> DataFrame:
-    """Keep-FIRST global segment dedup — the C4 "three-sentence span" /
-    CCNet paragraph rule: the corpus is tiled into non-overlapping
-    ``n``-token segments, the globally first occurrence (min (url, s))
-    of every distinct segment survives, every later occurrence (any
-    doc, any position) is dropped, and docs are reassembled from their
-    surviving tiles in order. The pipeline twin of the oracle-gated
-    ``dedup_segments_keep_first`` registry query (plans/curationops.py),
-    keyed on url and emitting the (url, text, lang) doc schema so it
-    chains ahead of exact dedup (a doc reduced to previously-seen
-    boilerplate empties here and is nonblank-filtered by the stage
-    wrapper). Complements span removal: that stage drops EVERY
-    occurrence of a >= K-doc n-gram, this one keeps the first.
-
-    Scale shape: the tile explode is linear; the winner per distinct
-    segment is ONE segment-keyed min(struct(url, s)) aggregation —
-    partially aggregatable, so a web-scale boilerplate tile collapses
-    map-side instead of single-task-sorting a mega-group in a
-    row_number window; reassembly is a per-doc collect + array_sort
-    (bounded by the doc's own tiles) and one url-keyed join. The
-    segment text crosses the shuffle once — the winner must carry it
-    for reassembly. ``docs`` must be url-unique (the extraction
-    contract), or reassembly would merge token streams.
-    """
-    toks = F.expr("filter(split(text, ' '), x -> x <> '')")
-    staged = docs.select("url", "lang", toks.alias("t"))
-    tiles = F.expr(
-        f"transform(sequence(1, size(t), {int(n)}), "
-        f"i -> struct(i AS s, concat_ws(' ', slice(t, i, {int(n)})) AS seg))"
-    )
-    segs = (
-        staged.filter(F.size("t") > 0)
-        .select("url", F.explode(tiles).alias("x"))
-        .select("url", F.col("x.s").alias("s"), F.col("x.seg").alias("seg"))
-    )
-    winners = (
-        segs.groupBy("seg")
-        .agg(F.min(F.struct("url", "s")).alias("w"))
-        .select(F.col("w.url").alias("url"), F.col("w.s").alias("s"), "seg")
-    )
-    kept = winners.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("s", "seg"))),
-                lambda x: x["seg"],
-            ),
-            " ",
-        ).alias("text")
-    )
-    # whitespace-only docs (no tiles) keep an empty text, like the
-    # span-removal stage — the pipeline's nonblank filter drops them
-    return (
-        staged.select("url", "lang")
-        .join(kept, "url", "left")
-        .select("url", F.coalesce("text", F.lit("")).alias("text"), "lang")
-    )
+    """Keep-FIRST global segment dedup of ``n``-token tiles ahead of
+    exact dedup (``operators.textdedup.dedup_segments_keep_first``
+    keyed on url, so "first" is the min (url, s) occurrence). A doc
+    reduced to previously-seen boilerplate empties here and is
+    nonblank-filtered by the stage wrapper. Complements span removal:
+    that stage drops EVERY occurrence of a >= K-doc n-gram, this one
+    keeps the first. ``docs`` must be url-unique."""
+    return textdedup.dedup_segments_keep_first(
+        docs, "url", n, carry=("lang",)
+    ).select("url", "text", "lang")
 
 
 def decontaminate_against(
     docs: DataFrame, eval_docs: DataFrame, n: int = 5
 ) -> DataFrame:
     """Drop every doc sharing ANY token n-gram with the eval corpus —
-    the GPT-3/Llama decontamination rule, as the pipeline twin of the
-    oracle-gated ``decontaminate_ngram_overlap`` registry query.
-    ``eval_docs`` needs a ``text`` column. Scale shape: the eval-gram
-    side is a bounded benchmark vocabulary at any corpus size (AQE
-    broadcasts it from measured size); contaminated urls form a
-    url-level semi-join result, and the anti-join back runs on url.
-    Document text stays out of the shuffle as long as AQE broadcasts
-    the contaminated-url set (the typical case — it is bounded by the
-    eval suite's actual overlap); a pathological eval set that
-    contaminates a large fraction of the corpus falls back to a
-    url-keyed exchange of the doc rows."""
-    toks, grams_expr = _token_ngrams(n)
-    doc_grams = (
-        docs.select("url", toks.alias("t"))
-        .filter(F.size("t") >= n)
-        .select("url", F.explode(grams_expr).alias("g"))
-    )
-    eval_grams = (
-        eval_docs.select(toks.alias("t"))
-        .filter(F.size("t") >= n)
-        .select(F.explode(grams_expr).alias("g"))
-        .distinct()
-    )
+    the GPT-3/Llama decontamination rule. ``eval_docs`` needs a
+    ``text`` column. Scale shape: the eval-gram side is a bounded
+    benchmark vocabulary at any corpus size (AQE broadcasts it from
+    measured size); contaminated urls form a url-level semi-join
+    result, and the anti-join back runs on url. Document text stays
+    out of the shuffle as long as AQE broadcasts the contaminated-url
+    set (the typical case — it is bounded by the eval suite's actual
+    overlap); a pathological eval set that contaminates a large
+    fraction of the corpus falls back to a url-keyed exchange of the
+    doc rows."""
+    doc_grams = textdedup.ngram_explode(docs, n, ("url",))
+    eval_grams = textdedup.ngram_explode(eval_docs, n).distinct()
     contaminated = doc_grams.join(eval_grams, "g", "left_semi").select(
         "url"
     ).distinct()
@@ -556,56 +417,31 @@ def decontaminate_against(
 
 
 def temperature_sample(docs: DataFrame, alpha: float) -> DataFrame:
-    """Temperature-based language rebalancing (XLM-R style): keep rate
-    r_l = (n_l / n_min)^(alpha-1), so the smallest language keeps 100%
-    and dominant languages are downsampled toward a flatter mixture.
-    Selection is the engine's stateless md5-bucket filter on url — no
-    RNG, identical keep-set on rerun/resume — with the integer
-    threshold (rate * 10^6, rounded) the oracle-gated
-    ``temperature_sampled_corpus`` registry query pins. The per-lang
-    counts are a languages-sized aggregate, safe to broadcast at any
-    corpus size."""
-    c = docs.groupBy("lang").agg(F.count("*").alias("_n"))
-    m = c.agg(F.min("_n").alias("_n_min"))
-    r = c.crossJoin(F.broadcast(m)).select(
-        "lang",
-        F.round(
-            F.pow(F.col("_n") / F.col("_n_min"), alpha - 1) * 1_000_000, 0
-        ).cast("long").alias("_keep_thresh"),
+    """Temperature-based language rebalancing (XLM-R style) over the
+    doc schema: ``operators.sampling.temperature_sample`` with its
+    md5 bucket on url."""
+    return sampling.temperature_sample(docs, alpha, "url").select(
+        "url", "text", "lang"
     )
-    # UNSALTED by design: the oracle-gated temperature_sampled_corpus
-    # registry query pins this exact formula
-    bucket = salted_bucket("url", 1_000_000)
-    return (
-        docs.join(F.broadcast(r), "lang")
-        .filter(bucket < F.col("_keep_thresh"))
-        .drop("_keep_thresh")
-        .select("url", "text", "lang")
-    )
+
+
+def _url_host():
+    return F.coalesce(F.expr("parse_url(url, 'HOST')"), F.lit(""))
+
+
+def _longest_first():
+    return [F.length("text").desc(), "url"]
 
 
 def domain_cap_docs(docs: DataFrame, cap: int) -> DataFrame:
     """Per-domain document quota (C4/RefinedWeb anti-spam rule): keep
     at most ``cap`` docs per url host, preferring the longest texts
-    with a url tie-break — the curation-pipeline twin of the
-    oracle-gated ``domain_cap_survivors`` registry query, keyed on the
-    url's parsed host instead of the documents table's source column.
-    Scale shape: the rank<=K predicate over a per-host window becomes
-    WindowGroupLimit — a per-partition top-K heap BEFORE the shuffle,
-    so a hot domain ships K rows per map task, not millions (plan
-    pinned in tests/test_curation.py)."""
-    host = F.coalesce(
-        F.expr("parse_url(url, 'HOST')"), F.lit("")
-    )
-    w = Window.partitionBy("_host").orderBy(
-        F.length("text").desc(), "url"
-    )
-    return (
-        docs.withColumn("_host", host)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn", "_host")
-    )
+    with a url tie-break (``operators.sampling.top_k_per_group``, which
+    plans as WindowGroupLimit; pinned in tests/test_curation.py)."""
+    return sampling.top_k_per_group(
+        docs.withColumn("_host", _url_host()), "_host", _longest_first(),
+        cap,
+    ).drop("_host")
 
 
 def domain_cap_docs_incremental(
@@ -618,99 +454,26 @@ def domain_cap_docs_incremental(
     semantics: a host at or over quota admits nothing. The base
     per-host counts are a hosts-sized aggregate (thin, but unbounded
     cardinality — never statically broadcast; AQE decides)."""
-    host = F.coalesce(F.expr("parse_url(url, 'HOST')"), F.lit(""))
     base_counts = (
-        base.withColumn("_host", host)
+        base.withColumn("_host", _url_host())
         .groupBy("_host")
         .agg(F.count("*").alias("_base_n"))
     )
-    w = Window.partitionBy("_host").orderBy(
-        F.length("text").desc(), "url"
-    )
-    return (
-        new_docs.withColumn("_host", host)
-        .join(base_counts, "_host", "left")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            F.col("_rn")
-            <= F.lit(cap) - F.coalesce(F.col("_base_n"), F.lit(0))
-        )
-        .drop("_rn", "_host", "_base_n")
-    )
+    return sampling.top_k_per_group(
+        new_docs.withColumn("_host", _url_host())
+        .join(base_counts, "_host", "left"),
+        "_host", _longest_first(),
+        F.lit(cap) - F.coalesce(F.col("_base_n"), F.lit(0)),
+    ).drop("_host", "_base_n")
 
 
 def lm_quality_survivors(docs: DataFrame, drop_z: float) -> DataFrame:
-    """CCNet-style LM-quality tail drop: score each doc by its average
-    unigram log-probability under the corpus's own model, then drop
-    docs scoring below mu_lang - drop_z * sigma_lang — keep the head
-    and middle of each language's quality distribution. The pipeline
-    twin of the oracle-gated ``lm_quality_zbuckets`` registry query
-    (plans/curationops.py), url-keyed, with the same scale shape: ONE
-    token explode staged as (url, term, cnt), a vocabulary-sized model
-    aggregate, a languages-sized stats broadcast, and a scan-stage
-    filter — never a per-lang single-task sort (the ntile shape).
+    """CCNet-style LM-quality tail drop: keep the docs scoring at or
+    above mu_lang - drop_z * sigma_lang under the corpus's own unigram
+    model (``operators.lmquality.lm_quality_tail_drop`` keyed on url).
     Docs with zero whitespace tokens cannot be scored and drop here
     (they cannot train either)."""
-    toks_expr = "filter(split(text, ' '), x -> x <> '')"
-    # explicit isnotnull(url) (url is never null by the extraction
-    # contract, so no row changes): the score side's inner join on url
-    # INFERS this filter into its copy of the token-explode subtree;
-    # carrying it on the tf side too keeps both (url, term) exchanges
-    # canonically equal so AQE runs the explode stage ONCE and reuses
-    # it (r07 — same fix as the registry twin lm_quality_zbuckets)
-    docs = docs.filter(F.col("url").isNotNull())
-    dtf = (
-        docs.select("url", F.explode(F.expr(toks_expr)).alias("term"))
-        .groupBy("url", "term")
-        .agg(F.count("*").alias("cnt"))
-    )
-    tot = docs.agg(
-        F.sum(F.size(F.expr(toks_expr))).alias("n_total")
-    )  # no-explode scan-sum == counting exploded instances
-    tf = dtf.groupBy("term").agg(F.sum("cnt").alias("ctf"))
-    lp = tf.crossJoin(F.broadcast(tot)).select(
-        "term",
-        F.round(F.log(F.col("ctf") / F.col("n_total")), 9)
-        .cast("decimal(20,9)").alias("logp"),
-    )
-    score = (
-        dtf.join(lp, "term")
-        .groupBy("url")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("cnt").cast("decimal(10,0)") * F.col("logp")
-                ).cast("double") / F.sum("cnt"), 6
-            ).alias("_s")
-        )
-    )
-    sl = docs.select("url", "lang").join(score, "url")
-    # round-7: the per-lang stats are a WINDOW over the lang partition
-    # of the scored rows instead of a groupBy + broadcast-join back —
-    # `sl` previously fed both the stats aggregate and the keep
-    # filter, so the whole corpus-sized score pipeline executed twice.
-    # Sums stay decimal-exact so the kept set is identical (the
-    # registry twin lm_quality_zbuckets pins the formulation against
-    # the oracle).
-    wl = Window.partitionBy("lang")
-    n = F.count("*").over(wl)
-    sum_s = (
-        F.sum(F.round(F.col("_s"), 6).cast("decimal(20,6)")).over(wl)
-        .cast("double")
-    )
-    sum_s2 = (
-        F.sum(F.round(F.col("_s") * F.col("_s"), 9).cast("decimal(25,9)"))
-        .over(wl).cast("double")
-    )
-    mu = sum_s / n
-    sigma = F.sqrt(
-        F.greatest((sum_s2 - sum_s * sum_s / n) / n, F.lit(0.0))
-    )
-    keep = (
-        sl.withColumn("_keep", F.col("_s") >= mu - drop_z * sigma)
-        .filter(F.col("_keep"))
-        .select("url")
-    )
+    keep = lm_quality_tail_drop(docs, "url", drop_z).select("url")
     return docs.join(keep, "url", "left_semi")
 
 
@@ -735,40 +498,17 @@ def cluster_balance_docs(docs: DataFrame, alpha: float) -> DataFrame:
 def stamp_split(
     docs: DataFrame, train_frac: float, val_frac: float
 ) -> DataFrame:
-    """Append the deterministic train/val/test ``split`` column — the
-    pipeline twin of the oracle-gated ``train_val_test_split`` registry
-    query, keyed on url: a stateless scan-stage md5 bucket, so a
-    document's split never changes when the corpus grows or the job
-    resumes (the property that keeps eval sets uncontaminated across
-    corpus refreshes). The bucket is "split:"-SALTED: the survivors
-    reaching this stamp already passed the sampling stages' acceptance
-    buckets, and an unsalted stamp on the same key would draw val/test
-    only from strata whose keep threshold exceeds the train fraction
-    (the round-6 cluster-balance review finding — stacked decisions on
-    one bucket are correlated, not independent)."""
-    t1 = int(round(train_frac * 1_000_000))
-    t2 = t1 + int(round(val_frac * 1_000_000))
-    bucket = salted_bucket("url", 1_000_000, salt="split:")
+    """Append the deterministic train/val/test ``split`` column: the
+    "split:"-salted md5 bucket of url (``functions.bucket.split_stamp``)."""
     return docs.withColumn(
-        "split",
-        F.when(bucket < t1, "train")
-        .when(bucket < t2, "val")
-        .otherwise("test"),
+        "split", split_stamp("url", train_frac, val_frac)
     )
 
 
 def exact_dedup_survivors(docs: DataFrame) -> DataFrame:
-    """Keep one doc per exact text: min url wins (deterministic
-    representative). One hash-partitioned window, no pairwise work."""
-    w = Window.partitionBy("content_hash").orderBy("url")
-    return (
-        docs.withColumn(
-            "content_hash", F.md5(F.col("text").cast("binary"))
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "content_hash")
-    )
+    """Keep one doc per exact text: min url wins
+    (``operators.textdedup.exact_dedup``)."""
+    return textdedup.exact_dedup(docs, "url").drop("content_hash")
 
 
 def neardup_survivors(docs: DataFrame) -> DataFrame:
@@ -818,31 +558,6 @@ def _write_survivor_bands(survivors: DataFrame, run_dir: str) -> None:
     )
 
 
-def _chain_hashes(
-    spark: SparkSession, out_dir: str, chain: list[str]
-) -> DataFrame:
-    """(content_hash) rows of every committed survivor in the chain:
-    stored hash manifests where present, recomputed from survivor
-    text otherwise (md5 has no version knob — only presence is
-    checked)."""
-    parts = []
-    for rid in chain:
-        p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")
-        parts.append(
-            spark.read.parquet(p).select("content_hash")
-            if os.path.isdir(p)
-            else spark.read.parquet(
-                _survivors_path(out_dir, rid)
-            ).select(
-                F.md5(F.col("text").cast("binary")).alias("content_hash")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
-
-
 def _chain_bands(
     spark: SparkSession, out_dir: str, chain: list[str]
 ) -> DataFrame:
@@ -890,7 +605,7 @@ def exact_dedup_survivors_incremental(
     and any new doc whose text matches a COMMITTED base survivor
     drops — committed survivors are never revoked. One hash window
     over the new batch + one hash anti-join against the base;
-    ``base_hashes`` (the per-run stored manifests, `_chain_hashes`)
+    ``base_hashes`` (the per-run stored manifests, `_chain_url_hashes`)
     keeps the anti-join off the base TEXT entirely — without it the
     hashes are recomputed from survivor text (one linear pass).
 
@@ -913,13 +628,10 @@ def exact_dedup_survivors_incremental(
             new_docs.select(h.alias("content_hash")), base_hashes,
             "content_hash", expected=new_docs.count(),
         )
-    w = Window.partitionBy("content_hash").orderBy("url")
     return (
-        new_docs.withColumn("content_hash", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        textdedup.exact_dedup(new_docs, "url")
         .join(base_hashes, "content_hash", "left_anti")
-        .drop("_rn", "content_hash")
+        .drop("content_hash")
     )
 
 
@@ -1046,41 +758,12 @@ def chunk_docs(
     chunk_stride: int,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fixed-size character chunks with overlap (same operator family
-    as the oracle-gated chunk_documents; bounded per-row explode, runs
-    in the scan stage). ``extra_cols`` carry per-doc metadata (e.g.
-    the train/val/test split) onto every chunk."""
-    idx = F.explode(
-        F.sequence(
-            F.lit(0),
-            F.floor(
-                F.greatest(F.length("text") - 1, F.lit(0)) / chunk_stride
-            ).cast("int"),
-        )
-    )
-    c = docs.filter(F.length("text") > 0).select(
-        "url", "lang", *extra_cols, "text", idx.alias("chunk_idx")
-    )
-    chunk = F.expr(
-        f"substring(text, chunk_idx * {int(chunk_stride)} + 1, "
-        f"{int(chunk_size)})"
-    )
-    # n_chars arithmetically, NOT length(substring(...)): equivalent
-    # (== length(chunk), pinned in tests), but lets a consumer that
-    # only needs sizes — the two-phase packer's per-bucket totals
-    # branch — prune the chunk bytes instead of re-materializing every
-    # substring just to measure it (one full text scan saved per pack)
-    n_chars = F.least(
-        F.lit(int(chunk_size)),
-        F.length("text") - F.col("chunk_idx") * int(chunk_stride),
-    )
-    return c.select(
-        "url",
-        "lang",
-        *extra_cols,
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        chunk.alias("chunk"),
-        n_chars.cast("long").alias("n_chars"),
+    """Fixed-size character chunks with overlap
+    (``operators.packing.chunk_text``, the kernel the oracle-gated
+    ``chunk_documents`` query runs). ``extra_cols`` carry per-doc
+    metadata (e.g. the train/val/test split) onto every chunk."""
+    return chunk_text(
+        docs, chunk_size, chunk_stride, ("url", "lang", *extra_cols)
     )
 
 
@@ -1321,7 +1004,10 @@ def run_curation(
         # TEXT at all — resume/cap touch urls, exact dedup touches
         # stored hashes, near-dup touches stored bands
         base_bands = _chain_bands(spark, out_dir, chain)
-        base_hashes = _chain_hashes(spark, out_dir, chain)
+        base_hashes = (
+            _chain_url_hashes(spark, out_dir, chain)
+            .select("content_hash").distinct()
+        )
         # every url EVALUATED by the chain (processed manifests; runs
         # committed before the manifest existed fall back to their
         # survivor urls — a url those runs dropped would be
@@ -2232,8 +1918,8 @@ def _chain_url_hashes(
 ) -> DataFrame:
     """(url, content_hash) of every committed survivor in the chain:
     stored per-run hash manifests where present, recomputed from
-    survivor text otherwise (the keyed twin of `_chain_hashes`, which
-    serves the increment anti-join and needs no url)."""
+    survivor text otherwise (md5 has no version knob — only presence
+    is checked)."""
     parts = []
     for rid in chain:
         p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")

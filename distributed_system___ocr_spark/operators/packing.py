@@ -115,3 +115,43 @@ def greedy_pack_bins(
             "long"
         ),
     ).drop("_bucket_offset")
+
+
+def chunk_text(
+    docs: DataFrame, chunk_size: int, chunk_stride: int, cols: tuple[str, ...]
+) -> DataFrame:
+    """(*cols, chunk_idx, chunk, n_chars): fixed-size character chunks
+    of ``text`` starting every ``chunk_stride`` chars (overlap =
+    size - stride) — the pre-tokenizer form of sequence slicing that
+    feeds the packer. A bounded per-row explode (len/stride rows), no
+    shuffle: it runs in the scan stage. Empty texts yield no chunk."""
+    idx = F.explode(
+        F.sequence(
+            F.lit(0),
+            F.floor(
+                F.greatest(F.length("text") - 1, F.lit(0)) / chunk_stride
+            ).cast("int"),
+        )
+    )
+    c = docs.filter(F.length("text") > 0).select(
+        *cols, "text", idx.alias("chunk_idx")
+    )
+    chunk = F.expr(
+        f"substring(text, chunk_idx * {int(chunk_stride)} + 1, "
+        f"{int(chunk_size)})"
+    )
+    # n_chars arithmetically, NOT length(substring(...)): equivalent
+    # (== length(chunk), pinned in tests), but lets a consumer that
+    # only needs sizes — the two-phase packer's per-bucket totals
+    # branch — prune the chunk bytes instead of re-materializing every
+    # substring just to measure it (one full text scan saved per pack)
+    n_chars = F.least(
+        F.lit(int(chunk_size)),
+        F.length("text") - F.col("chunk_idx") * int(chunk_stride),
+    )
+    return c.select(
+        *cols,
+        F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        chunk.alias("chunk"),
+        n_chars.cast("long").alias("n_chars"),
+    )

@@ -23,8 +23,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.bucket import split_stamp, split_thresholds
+from ..functions.tokens import DUCK_TOKENS, dup_bigram_fraction, tokens
+from ..operators import textdedup
+from ..operators.lmquality import (
+    doc_logprob_scores,
+    doc_term_counts,
+    lm_quality_tail_drop as _lm_tail_drop,
+    lm_quality_zscored,
+    weighted_decimal_sum,
+)
+from ..operators.sampling import temperature_sample, top_k_per_group
 from .queries import _t, register
-from .textops2 import _duck_bucket, _spark_bucket
+from .textops2 import _DUCK_BIGRAMS, _DUCK_SW, _STOPWORDS, _duck_bucket
 
 # --------------------------------------------------------------------------
 # cross-doc boilerplate: fraction of a doc's 5-grams shared corpus-wide
@@ -37,15 +48,13 @@ from .textops2 import _duck_bucket, _spark_bucket
 # the join back is gram-hash partitioned — nothing is all-pairs.
 
 _CNG_MIN_DOCS = 3
-_DUCK_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SPARK_TOKS = "filter(split(text, ' '), x -> x <> '')"
 
 
 @register(
     "common_ngram_fraction",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id,
@@ -72,16 +81,9 @@ def common_ngram_fraction(spark, sf_dir):
     a within-doc repeat doesn't inflate ndocs."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
-    s1 = d.select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("t")
-    ).filter(F.size("t") >= 5)
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
-    )
-    grams = s1.select("doc_id", F.explode(gram).alias("g")).distinct()
+    grams = textdedup.ngram_explode(
+        _t(spark, sf_dir, "documents"), 5, ("doc_id",)
+    ).distinct()
     # grams are (doc_id, g)-distinct, so the per-gram doc frequency is
     # a plain count over the g window — annotated in place so the
     # corpus-sized explode+distinct executes ONCE instead of feeding
@@ -123,7 +125,7 @@ _SPAN_N = 5
     "remove_common_spans",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
     ),
     tokpos AS (
       SELECT doc_id,
@@ -161,67 +163,16 @@ _SPAN_N = 5
     """,
 )
 def remove_common_spans(spark, sf_dir):
-    """Round-5 plan: reassembly is DOC-level, not token-level. The
-    round-4 shape exploded every token into (doc_id, pos, tok) rows,
-    joined them against covered positions and re-collected each doc —
-    two corpus-sized token shuffles just to rebuild strings the scan
-    already had. Covered positions aggregate to one array per doc
-    (shuffle bounded by MATCHED grams only) and the rebuild is a
-    per-row array program: keep_pos = array_except(1..n, cov) (hash
-    set, linear), kept = transform(keep_pos, p -> t[p]) — the token
-    stream itself never crosses a shuffle. Round-7: the gram
-    document-frequency is annotated IN PLACE with a window over the
-    gram partition (dense_rank by doc_id, then max — both spill-safe)
-    instead of a groupBy + join back, so the corpus-sized
-    tokenize+gram explode executes ONCE, not twice (1.40 -> 1.05 s at
-    sf0.1; one Generate in the plan). Output identical (the DuckDB
-    oracle is the regression gate)."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    staged = d.select("doc_id", F.expr(_SPARK_TOKS).alias("t"))
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
-    )
-    grams = (
-        staged.filter(F.size("t") >= _SPAN_N)
-        .select("doc_id", F.posexplode(gram).alias("s0", "g"))
-        .select("doc_id", (F.col("s0") + 1).alias("s"), "g")
-    )
-    # cd == countDistinct(doc_id) per gram: dense_rank over (g, doc_id)
-    # peaks at the distinct-doc count; max over the g partition fans it
-    # back onto every occurrence row
-    dr = F.dense_rank().over(
-        Window.partitionBy("g").orderBy("doc_id")
-    )
-    cd = F.max("_dr").over(Window.partitionBy("g"))
-    cov = (
-        grams.withColumn("_dr", dr)
-        .withColumn("_cd", cd)
-        .filter(F.col("_cd") >= _SPAN_MIN_DOCS)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("s"), F.col("s") + _SPAN_N - 1)
-            ).alias("pos"),
+    """operators/textdedup.remove_common_spans keyed on doc_id — the
+    kernel the chain's span-removal stage runs. A 0-token doc yields
+    no tokpos rows in the oracle formulation, so it drops here."""
+    return (
+        textdedup.remove_common_spans(
+            _t(spark, sf_dir, "documents"), "doc_id", _SPAN_MIN_DOCS,
+            _SPAN_N,
         )
-        .groupBy("doc_id")
-        .agg(F.collect_set("pos").alias("cov"))  # dedups; per-doc bounded
-    )
-    # a 0-token doc yields no tokpos rows in the oracle formulation,
-    # so it must not appear here either (and sequence(1, 0) would
-    # count DOWN)
-    joined = staged.filter(F.size("t") > 0).join(cov, "doc_id", "left")
-    cov_arr = F.coalesce(F.col("cov"), F.array())
-    keep_pos = F.array_except(F.sequence(F.lit(1), F.size("t")), cov_arr)
-    kept = F.transform(keep_pos, lambda p: F.element_at("t", p))
-    return joined.select(
-        "doc_id",
-        F.size("t").cast("long").alias("n_tokens"),
-        F.size(cov_arr).cast("long").alias("n_removed"),
-        F.array_join(kept, " ").alias("cleaned_text"),
+        .filter(F.col("n_tokens") > 0)
+        .withColumnRenamed("text", "cleaned_text")
     )
 
 
@@ -242,10 +193,6 @@ _TEMP_ALPHA = 0.3
 _DUCK_BUCKET1M = _duck_bucket(1_000_000)
 
 
-def _spark_bucket1m():
-    return _spark_bucket(1_000_000)
-
-
 @register(
     "temperature_sampled_corpus",
     f"""
@@ -263,21 +210,9 @@ def _spark_bucket1m():
     """,
 )
 def temperature_sampled_corpus(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    c = d.groupBy("lang").agg(F.count("*").alias("n"))
-    m = c.agg(F.min("n").alias("n_min"))
-    r = c.crossJoin(F.broadcast(m)).select(
-        "lang",
-        F.round(
-            F.pow(F.col("n") / F.col("n_min"), _TEMP_ALPHA - 1) * 1000000,
-            0,
-        ).cast("long").alias("keep_thresh"),
-    )
-    return (
-        d.join(F.broadcast(r), "lang")
-        .filter(_spark_bucket1m() < F.col("keep_thresh"))
-        .select("doc_id", "lang", "keep_thresh")
-    )
+    return temperature_sample(
+        _t(spark, sf_dir, "documents"), _TEMP_ALPHA, "doc_id"
+    ).select("doc_id", "lang", "keep_thresh")
 
 
 # --------------------------------------------------------------------------
@@ -300,31 +235,11 @@ def temperature_sampled_corpus(spark, sf_dir):
 # plan pin (<= 1 explode) lives in tests/test_curationops.py.
 
 
-def _doc_term_counts(d, id_col: str = "doc_id"):
-    """(id, term, cnt) from ONE whitespace-token explode of ``text``;
-    the shared staging frame for every unigram-model query."""
-    return (
-        d.select(id_col, F.explode(F.expr(_SPARK_TOKS)).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def _weighted_decimal_sum(weight_col: str, logp_col: str):
-    """sum(cnt * logp) in exact decimal arithmetic == summing logp
-    once per token instance (the pre-round-6 shape), order-independent
-    under any shuffle. cnt casts to DECIMAL(10,0) so the product stays
-    inside precision 38 (20+10+1 = 31, scale 9)."""
-    return F.sum(
-        F.col(weight_col).cast("decimal(10,0)") * F.col(logp_col)
-    )
-
-
 @register(
     "unigram_logprob_score",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents
+      SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
     ),
     tf AS (SELECT term, count(*) AS ctf FROM toks GROUP BY term),
     tot AS (SELECT count(*) AS n_total FROM toks),
@@ -341,33 +256,7 @@ def _weighted_decimal_sum(weight_col: str, logp_col: str):
     """,
 )
 def unigram_logprob_score(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    dtf = _doc_term_counts(d)
-    tf = dtf.groupBy("term").agg(F.sum("cnt").alias("ctf"))
-    # n_total as a NO-EXPLODE scan-sum of per-row token counts
-    # (identical value: sum of sizes == count of exploded instances) —
-    # deriving it from tf would make tf a two-consumer subtree and
-    # Catalyst copies, not shares, subplans
-    tot = d.agg(
-        F.sum(F.size(F.expr(_SPARK_TOKS))).alias("n_total")
-    )
-    lp = tf.crossJoin(F.broadcast(tot)).select(
-        "term",
-        F.round(F.log(F.col("ctf") / F.col("n_total")), 9)
-        .cast("decimal(20,9)").alias("logp"),
-    )
-    n_tok = F.sum("cnt")
-    return (
-        dtf.join(lp, "term")
-        .groupBy("doc_id")
-        .agg(
-            n_tok.cast("long").alias("n_tokens"),
-            F.round(
-                _weighted_decimal_sum("cnt", "logp").cast("double")
-                / n_tok, 6
-            ).alias("avg_logprob"),
-        )
-    )
+    return doc_logprob_scores(_t(spark, sf_dir, "documents"), "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -376,8 +265,9 @@ def unigram_logprob_score(spark, sf_dir):
 # The decision surface a real curation pipeline runs: combine the
 # individual signals (length bounds, Gopher repetition, stopword
 # poverty) into one keep flag plus an audit-trail reason string —
-# per-row built-ins only, so at 10^12 docs this is a scan-stage
-# filter with zero shuffles. Cut values are tuned to the synthetic
+# per-row work only (the chain gate's pandas dup-bigram batch plus
+# Catalyst built-ins), so at 10^12 docs this is a scan-stage filter
+# with zero shuffles. Cut values are tuned to the synthetic
 # corpus's distributions so EVERY reason fires at test sf (a verdict
 # column that never rejects is not evidence). Reasons are joined in a
 # fixed order, so the string is deterministic and the driver's
@@ -394,7 +284,7 @@ _QG_SW_MIN = 0.02
     f"""
     WITH t AS (
       SELECT doc_id, text, length(text) AS n_chars,
-             {{toks}} AS toks, {{bg}} AS bg
+             {DUCK_TOKENS} AS toks, {_DUCK_BIGRAMS} AS bg
       FROM documents
     ),
     sig AS (
@@ -403,7 +293,7 @@ _QG_SW_MIN = 0.02
                1.0 - CAST(len(list_distinct(bg)) AS DOUBLE) / len(bg)
              ELSE 0.0 END AS dup_bg,
              CASE WHEN len(toks) > 0 THEN
-               CAST(len(list_filter(toks, x -> list_contains({{sw}}, x)))
+               CAST(len(list_filter(toks, x -> list_contains({_DUCK_SW}, x)))
                     AS DOUBLE) / len(toks)
              ELSE 0.0 END AS sw_frac
       FROM t
@@ -424,36 +314,22 @@ _QG_SW_MIN = 0.02
 def quality_gate_verdict(spark, sf_dir):
     """Signals staged once per row (the gopher lesson: CollapseProject
     keeps non-cheap aliases referenced more than once, SPARK-36718)."""
-    from .textops2 import _SPARK_TOKENS2, _STOPWORDS
-
     d = _t(spark, sf_dir, "documents")
+    # the duplicate-bigram fraction is the chain gate's vectorized
+    # batch kernel; the stopword fraction stays a Catalyst array filter
     s1 = d.select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        F.expr(_SPARK_TOKENS2).alias("toks"),
+        tokens().alias("toks"),
+        dup_bigram_fraction(F.col("text")).alias("dup_bg"),
     )
-    bg = F.when(
-        F.size("toks") >= 2,
-        F.zip_with(
-            F.slice(F.col("toks"), 1, F.size("toks") - 1),
-            F.slice(F.col("toks"), 2, F.size("toks") - 1),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        ),
-    ).otherwise(F.array())
-    s2 = s1.select("doc_id", "n_chars", "toks", bg.alias("bg"))
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
-    dup_bg = F.when(
-        F.size("bg") > 0,
-        1.0 - F.size(F.array_distinct("bg")).cast("double") / F.size("bg"),
-    ).otherwise(F.lit(0.0))
     sw_frac = F.when(
         F.size("toks") > 0,
         F.size(F.filter("toks", lambda x: F.array_contains(sw, x)))
         .cast("double") / F.size("toks"),
     ).otherwise(F.lit(0.0))
-    s3 = s2.select(
-        "doc_id", "n_chars", dup_bg.alias("dup_bg"), sw_frac.alias("sw_frac")
-    )
+    s2 = s1.select("doc_id", "n_chars", "dup_bg", sw_frac.alias("sw_frac"))
     reason = F.concat_ws(
         ",",
         F.when(F.col("n_chars") < _QG_MIN_CHARS, F.lit("too_short")),
@@ -461,7 +337,7 @@ def quality_gate_verdict(spark, sf_dir):
         F.when(F.col("dup_bg") > _QG_DUP_BG_MAX, F.lit("repetitive")),
         F.when(F.col("sw_frac") < _QG_SW_MIN, F.lit("low_stopword")),
     )
-    return s3.select(
+    return s2.select(
         "doc_id", "n_chars",
         reason.alias("reasons"),
         (
@@ -471,23 +347,6 @@ def quality_gate_verdict(spark, sf_dir):
             & (F.col("sw_frac") >= _QG_SW_MIN)
         ).alias("keep"),
     )
-
-
-# inject the shared token/stopword SQL fragments (defined in textops2,
-# kept single-sourced) into the oracle at registration time
-def _qg_patch_sql() -> None:
-    from .queries import REGISTRY
-    from .textops2 import _DUCK_BIGRAMS, _DUCK_SW, _DUCK_TOKENS2
-
-    REGISTRY["quality_gate_verdict"]["sql"] = (
-        REGISTRY["quality_gate_verdict"]["sql"]
-        .replace("{toks}", _DUCK_TOKENS2)
-        .replace("{bg}", _DUCK_BIGRAMS)
-        .replace("{sw}", _DUCK_SW)
-    )
-
-
-_qg_patch_sql()
 
 
 # --------------------------------------------------------------------------
@@ -532,7 +391,7 @@ def approx_distinct_users(spark, sf_dir):
     "dsir_importance_weight",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents
+      SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
     ),
     vocab AS (SELECT count(DISTINCT term) AS v FROM toks),
     tgt AS (
@@ -563,7 +422,7 @@ def dsir_importance_weight(spark, sf_dir):
     # corpus-sized explode four times (tgt, src, consts, scoring).
     # Both model sides collapse to vocab-sized aggregates of dtf.
     d = _t(spark, sf_dir, "documents")
-    dtf = _doc_term_counts(d)
+    dtf = doc_term_counts(d)
     tv = dtf.groupBy("term").agg(
         F.sum("cnt").alias("cs"),
         F.sum(F.when(F.col("doc_id") % 50 == 0, F.col("cnt"))
@@ -594,7 +453,7 @@ def dsir_importance_weight(spark, sf_dir):
         .agg(
             n_tok.cast("long").alias("n_tokens"),
             F.round(
-                _weighted_decimal_sum("cnt", "logr").cast("double"), 6
+                weighted_decimal_sum("cnt", "logr").cast("double"), 6
             ).alias("importance"),
         )
     )
@@ -620,7 +479,7 @@ _MIX_MAX_EPOCHS = 3.0
     f"""
     WITH lt AS (
       SELECT lang, count(*) AS n_docs,
-             CAST(sum(len({_DUCK_TOKS})) AS BIGINT) AS n_tokens
+             CAST(sum(len({DUCK_TOKENS})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY lang
     ),
     w AS (
@@ -644,7 +503,7 @@ def mixture_token_budget(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     lt = d.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(F.expr(_SPARK_TOKS))).alias("n_tokens"),
+        F.sum(F.size(tokens())).alias("n_tokens"),
     )
     # decimal-sum discipline (CLAUDE.md): the per-lang weight is
     # rounded to 9 dp and summed as DECIMAL so wsum is exact and
@@ -1029,16 +888,9 @@ _DOMAIN_CAP = 15
     """,
 )
 def domain_cap_survivors(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), "doc_id"
-    )
-    return (
-        d.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= _DOMAIN_CAP)
-        .drop("_rn")
+    return top_k_per_group(
+        _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars"),
+        "source", [F.col("n_chars").desc(), "doc_id"], _DOMAIN_CAP,
     )
 
 
@@ -1050,10 +902,11 @@ def domain_cap_survivors(spark, sf_dir):
 # corpus-sized single-task sort per language — exactly the skew class
 # the round-4 verdict flagged for packing — so this uses the SCALABLE
 # equivalent: z-score buckets against per-lang mean/stddev of the
-# unigram log-prob score. The stats side is one languages-sized
-# aggregate (broadcast at any corpus size); bucketing is then a
-# scan-stage CASE. Cross-engine determinism: the score is the proven
-# bit-exact unigram_logprob_score value; mean/std come from
+# unigram log-prob score. The stats side is a window over the lang
+# partition of the scored rows (operators/lmquality.py, shared with
+# the chain's lm_quality stage); bucketing is then a CASE.
+# Cross-engine determinism: the score is the proven bit-exact
+# unigram_logprob_score value; mean/std come from
 # decimal-exact sums of (score, score^2) rounded to fixed scales, cast
 # to double only for the final identical-in-both-engines arithmetic.
 
@@ -1064,7 +917,7 @@ _ZB_HI = 0.5  # z > +0.5 -> head; z < -0.5 -> tail
     "lm_quality_zbuckets",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents
+      SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
     ),
     tf AS (SELECT term, count(*) AS ctf FROM toks GROUP BY term),
     tot AS (SELECT count(*) AS n_total FROM toks),
@@ -1104,70 +957,16 @@ _ZB_HI = 0.5  # z > +0.5 -> head; z < -0.5 -> tail
     """,
 )
 def lm_quality_zbuckets(spark, sf_dir):
-    from pyspark.sql import Window
-
-    # explicit isnotnull(doc_id) — doc_id is the table key, so no row
-    # changes — because the score side's inner join on doc_id INFERS
-    # this filter and pushes it into its copy of the token-explode
-    # scan; without the same filter on the tf side the two (doc_id,
-    # term) exchanges are not canonically equal and AQE cannot reuse
-    # the explode stage (r07: restores the exchange reuse pinned by
-    # test_unigram_model_queries_explode_tokens_once)
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
-    # ONE token explode (round-6) and ONE score pipeline (round-7):
-    # the per-lang stats are a WINDOW over the lang partition of the
-    # scored rows instead of a groupBy + broadcast-join back — `sl`
-    # previously fed both the stats aggregate and the final join, so
-    # the whole corpus-sized score pipeline executed twice. (The term
-    # frequency stays a groupBy+join: a term-window variant was
-    # measured SLOWER — it trades a vocab-sized partial-agg shuffle
-    # for a full dtf sort.) All sums stay decimal-exact and
-    # order-independent; values are identical (the DuckDB oracle is
-    # the regression gate).
-    dtf = _doc_term_counts(d)
-    tf = dtf.groupBy("term").agg(F.sum("cnt").alias("ctf"))
-    tot = d.agg(
-        F.sum(F.size(F.expr(_SPARK_TOKS))).alias("n_total")
-    )  # no-explode scan-sum, same value as counting exploded instances
-    lp = tf.crossJoin(F.broadcast(tot)).select(
-        "term",
-        F.round(F.log(F.col("ctf") / F.col("n_total")), 9)
-        .cast("decimal(20,9)").alias("logp"),
-    )
-    score = (
-        dtf.join(lp, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                _weighted_decimal_sum("cnt", "logp").cast("double")
-                / F.sum("cnt"), 6
-            ).alias("s")
-        )
-    )
-    sl = d.select("doc_id", "lang").join(score, "doc_id")
-    wl = Window.partitionBy("lang")
-    n = F.count("*").over(wl)
-    sum_s = (
-        F.sum(F.round(F.col("s"), 6).cast("decimal(20,6)")).over(wl)
-        .cast("double")
-    )
-    sum_s2 = (
-        F.sum(F.round(F.col("s") * F.col("s"), 9).cast("decimal(25,9)"))
-        .over(wl).cast("double")
-    )
-    mu = sum_s / n
-    sigma = F.sqrt(
-        F.greatest((sum_s2 - sum_s * sum_s / n) / n, F.lit(0.0))
-    )
+    """operators/lmquality.lm_quality_zscored keyed on doc_id, bucketed
+    by a scan-stage CASE on the per-lang z-score."""
+    z = lm_quality_zscored(_t(spark, sf_dir, "documents"), "doc_id")
+    s, mu, sigma = F.col("avg_logprob"), F.col("_mu"), F.col("_sigma")
     bucket = (
-        F.when(F.col("s") > mu + _ZB_HI * sigma, "head")
-        .when(F.col("s") < mu - _ZB_HI * sigma, "tail")
+        F.when(s > mu + _ZB_HI * sigma, "head")
+        .when(s < mu - _ZB_HI * sigma, "tail")
         .otherwise("middle")
     )
-    return sl.select(
-        "doc_id", "lang", F.col("s").alias("avg_logprob"),
-        bucket.alias("bucket"),
-    )
+    return z.select("doc_id", "lang", "avg_logprob", bucket.alias("bucket"))
 
 
 # --------------------------------------------------------------------------
@@ -1222,8 +1021,8 @@ def doc_length_quantiles_sketch(spark, sf_dir):
 # proportions hold by hash uniformity — pinned by a tolerance test,
 # not assumed.
 
-_SPLIT_TRAIN = 800_000  # buckets [0, 800k) of 1M -> 80% train
-_SPLIT_VAL = 900_000    # [800k, 900k) -> 10% val; rest -> 10% test
+_SPLIT_FRACS = (0.8, 0.1)  # 80% train, 10% val, the rest test
+_SPLIT_TRAIN, _SPLIT_VAL = split_thresholds(*_SPLIT_FRACS)  # of 1M buckets
 
 
 @register(
@@ -1239,16 +1038,8 @@ _SPLIT_VAL = 900_000    # [800k, 900k) -> 10% val; rest -> 10% test
     """,
 )
 def train_val_test_split(spark, sf_dir):
-    # "split:"-salted bucket: the stamp must be INDEPENDENT of every
-    # sampling stage's acceptance bucket, or val/test would be drawn
-    # only from strata whose keep-rate threshold exceeds the train
-    # fraction (the round-6 cluster-balance review finding)
-    b = _spark_bucket(1_000_000, "split:")
     return _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang",
-        F.when(b < _SPLIT_TRAIN, "train")
-        .when(b < _SPLIT_VAL, "val")
-        .otherwise("test").alias("split"),
+        "doc_id", "lang", split_stamp("doc_id", *_SPLIT_FRACS).alias("split")
     )
 
 
@@ -1267,7 +1058,7 @@ def train_val_test_split(spark, sf_dir):
     "lm_quality_tail_drop",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents
+      SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
     ),
     tf AS (SELECT term, count(*) AS ctf FROM toks GROUP BY term),
     tot AS (SELECT count(*) AS n_total FROM toks),
@@ -1305,15 +1096,9 @@ def train_val_test_split(spark, sf_dir):
     """,
 )
 def lm_quality_tail_drop(spark, sf_dir):
-    """Survivors = every doc not in its language's quality tail; built
-    by filtering the z-buckets (one dataflow, keep semantics applied).
-    The composed curation stage (curation.lm_quality_survivors) runs
-    the identical kernel url-keyed with a configurable z."""
-    return (
-        lm_quality_zbuckets(spark, sf_dir)
-        .filter(F.col("bucket") != "tail")
-        .select("doc_id", "lang", "avg_logprob")
-    )
+    """operators/lmquality.lm_quality_tail_drop keyed on doc_id — the
+    kernel the chain's lm_quality stage runs, here at z = 0.5."""
+    return _lm_tail_drop(_t(spark, sf_dir, "documents"), "doc_id", _ZB_HI)
 
 
 # --------------------------------------------------------------------------
@@ -1369,7 +1154,7 @@ _SEG_N = 8
     "dedup_segments_keep_first",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS t FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
     ),
     seg AS (
       SELECT doc_id,
@@ -1397,60 +1182,18 @@ _SEG_N = 8
     """,
 )
 def dedup_segments_keep_first(spark, sf_dir):
-    """Keep-first occurrence of every distinct token tile; later
-    occurrences (any doc, any position) are dropped and the doc is
-    reassembled from its surviving tiles in order. The oracle's
-    row_number formulation and this aggregation formulation agree
-    because (doc_id, s) is unique: rn == 1 <=> (doc_id, s) ==
-    min(struct(doc_id, s)) over the segment group."""
-    d = _t(spark, sf_dir, "documents")
-    staged = (
-        d.select("doc_id", F.expr(_SPARK_TOKS).alias("t"))
-        .filter(F.size("t") > 0)
-    )
-    tiles = F.expr(
-        f"transform(sequence(1, size(t), {_SEG_N}), "
-        f"i -> struct(i AS s, concat_ws(' ', slice(t, i, {_SEG_N})) AS seg))"
-    )
-    segs = (
-        staged.select("doc_id", F.explode(tiles).alias("x"))
-        .select("doc_id", F.col("x.s").alias("s"), F.col("x.seg").alias("seg"))
-    )
-    winners = (
-        segs.groupBy("seg")
-        .agg(F.min(F.struct("doc_id", "s")).alias("w"))
-        .select(
-            F.col("w.doc_id").alias("doc_id"),
-            F.col("w.s").alias("s"),
-            "seg",
+    """operators/textdedup.dedup_segments_keep_first keyed on doc_id —
+    the kernel the chain's segment-dedup stage runs. The oracle's
+    row_number formulation and the kernel's aggregation agree because
+    (doc_id, s) is unique: rn == 1 <=> (doc_id, s) ==
+    min(struct(doc_id, s)) over the segment group. A 0-token doc has
+    no segments in the oracle, so it drops here."""
+    return (
+        textdedup.dedup_segments_keep_first(
+            _t(spark, sf_dir, "documents"), "doc_id", _SEG_N
         )
-    )
-    # n_segments is arithmetic — ceil(n_tokens / n) — so the totals
-    # side never re-runs the corpus-sized tokenize+tile explode (the
-    # round-6 verdict item: winners and totals were separate subtrees
-    # over segs, executing the heavy explode twice per query)
-    totals = staged.select(
-        "doc_id",
-        F.expr(f"(size(t) + {_SEG_N - 1}) div {_SEG_N}")
-        .alias("n_segments"),
-    )
-    kept = winners.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("s", "seg"))),
-                lambda x: x["seg"],
-            ),
-            " ",
-        ).alias("deduped_text"),
-    )
-    return totals.join(kept, "doc_id", "left").select(
-        "doc_id",
-        "n_segments",
-        (F.col("n_segments") - F.coalesce(F.col("n_kept"), F.lit(0)))
-        .cast("long")
-        .alias("n_dropped"),
-        F.coalesce("deduped_text", F.lit("")).alias("deduped_text"),
+        .filter(F.col("n_segments") > 0)
+        .withColumnRenamed("text", "deduped_text")
     )
 
 

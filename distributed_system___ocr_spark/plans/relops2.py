@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.tokens import DUCK_TOKENS, SPARK_TOKENS
 from ..operators.asof import asof_join
 from .queries import _t, register
 
@@ -464,12 +465,12 @@ def merge_upsert_events(spark, sf_dir):
 
 @register(
     "unpivot_doc_metrics",
-    """
+    f"""
     SELECT doc_id, 'n_chars' AS metric, CAST(n_chars AS BIGINT) AS value
     FROM documents
     UNION ALL
     SELECT doc_id, 'n_tokens' AS metric,
-           CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+           CAST(len({DUCK_TOKENS})
                 AS BIGINT) AS value
     FROM documents
     """,
@@ -478,8 +479,7 @@ def unpivot_doc_metrics(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "cast(n_chars as long) as n_chars",
-        "cast(size(filter(split(text, ' '), x -> x <> '')) as long)"
-        " as n_tokens",
+        f"cast(size({SPARK_TOKENS}) as long) as n_tokens",
     )
     return d.selectExpr(
         "doc_id",

@@ -27,26 +27,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.tokens import DUCK_TOKENS, SPARK_TOKENS
 from .queries import _t, register
-
-# tokenization shared by all text ops (documents.text is space-joined)
-_SPARK_TOKENS = "filter(split(text, ' '), x -> x <> '')"
-_DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 # trigram shingles over the token array (guard: <3 tokens -> empty)
 _SPARK_TRIGRAMS = f"""
-CASE WHEN size({_SPARK_TOKENS}) >= 3 THEN
-  transform(sequence(1, size({_SPARK_TOKENS}) - 2),
-            i -> concat(element_at({_SPARK_TOKENS}, i), ' ',
-                        element_at({_SPARK_TOKENS}, i + 1), ' ',
-                        element_at({_SPARK_TOKENS}, i + 2)))
+CASE WHEN size({SPARK_TOKENS}) >= 3 THEN
+  transform(sequence(1, size({SPARK_TOKENS}) - 2),
+            i -> concat(element_at({SPARK_TOKENS}, i), ' ',
+                        element_at({SPARK_TOKENS}, i + 1), ' ',
+                        element_at({SPARK_TOKENS}, i + 2)))
 ELSE array() END
 """
 _DUCK_TRIGRAMS = f"""
-CASE WHEN len({_DUCK_TOKENS}) >= 3 THEN
-  list_transform(generate_series(1, len({_DUCK_TOKENS}) - 2),
-                 i -> {_DUCK_TOKENS}[i] || ' ' || {_DUCK_TOKENS}[i+1]
-                      || ' ' || {_DUCK_TOKENS}[i+2])
+CASE WHEN len({DUCK_TOKENS}) >= 3 THEN
+  list_transform(generate_series(1, len({DUCK_TOKENS}) - 2),
+                 i -> {DUCK_TOKENS}[i] || ' ' || {DUCK_TOKENS}[i+1]
+                      || ' ' || {DUCK_TOKENS}[i+2])
 ELSE [] END
 """
 
@@ -67,7 +64,7 @@ def _staged_trigram_docs(spark, sf_dir):
     toks = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _PAIR_LIMIT)
-        .select("doc_id", F.expr(_SPARK_TOKENS).alias("t"))
+        .select("doc_id", F.expr(SPARK_TOKENS).alias("t"))
     )
     tri = F.expr(
         """
@@ -300,7 +297,7 @@ _DUCK_SIMHASH_VAL = " + ".join(
     "simhash_buckets",
     f"""
     WITH words AS (
-      SELECT doc_id, unnest(list_distinct({_DUCK_TOKENS})) AS w
+      SELECT doc_id, unnest(list_distinct({DUCK_TOKENS})) AS w
       FROM documents
     ),
     hashed AS (
@@ -321,7 +318,7 @@ def simhash_buckets(spark, sf_dir):
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(F.expr(_SPARK_TOKENS))
+                F.array_distinct(F.expr(SPARK_TOKENS))
             ).alias("w"),
         )
     )
@@ -368,7 +365,7 @@ _LEXICONS = {
 
 def _duck_lex(name):
     arr = ", ".join(f"'{w}'" for w in _LEXICONS[name])
-    return f"len(list_intersect(list_distinct({_DUCK_TOKENS}), [{arr}]))"
+    return f"len(list_intersect(list_distinct({DUCK_TOKENS}), [{arr}]))"
 
 
 @register(
@@ -387,7 +384,7 @@ def _duck_lex(name):
 )
 def lang_id_lexicon(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.expr(_SPARK_TOKENS))
+    toks = F.array_distinct(F.expr(SPARK_TOKENS))
 
     def score(name):
         lex = F.array(*[F.lit(w) for w in _LEXICONS[name]])
@@ -416,23 +413,23 @@ def lang_id_lexicon(spark, sf_dir):
     "quality_score",
     f"""
     SELECT doc_id,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct({_DUCK_TOKENS})) AS BIGINT) AS n_distinct,
-           round(CAST(len(list_distinct({_DUCK_TOKENS})) AS DOUBLE)
-                 / len({_DUCK_TOKENS}), 6) AS distinct_ratio,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len(list_distinct({DUCK_TOKENS})) AS BIGINT) AS n_distinct,
+           round(CAST(len(list_distinct({DUCK_TOKENS})) AS DOUBLE)
+                 / len({DUCK_TOKENS}), 6) AS distinct_ratio,
            round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                 / len({_DUCK_TOKENS}), 6) AS avg_token_len,
-           round(0.5 * (CAST(len(list_distinct({_DUCK_TOKENS})) AS DOUBLE)
-                        / len({_DUCK_TOKENS}))
+                 / len({DUCK_TOKENS}), 6) AS avg_token_len,
+           round(0.5 * (CAST(len(list_distinct({DUCK_TOKENS})) AS DOUBLE)
+                        / len({DUCK_TOKENS}))
                  + 0.5 * least(CAST(1.0 AS DOUBLE),
-                               CAST(len({_DUCK_TOKENS}) AS DOUBLE) / 100.0), 6)
+                               CAST(len({DUCK_TOKENS}) AS DOUBLE) / 100.0), 6)
              AS quality
-    FROM documents WHERE len({_DUCK_TOKENS}) > 0
+    FROM documents WHERE len({DUCK_TOKENS}) > 0
     """,
 )
 def quality_score(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = F.expr(_SPARK_TOKENS)
+    toks = F.expr(SPARK_TOKENS)
     nt = F.size(toks).cast("long")
     nd = F.size(F.array_distinct(toks)).cast("long")
     dr = nd.cast("double") / nt
@@ -542,7 +539,7 @@ _TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
     "token_stats_regex",
     f"""
     SELECT doc_id,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_ws_tokens,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_ws_tokens,
            CAST(len(regexp_extract_all(lower(text), '{_TOKEN_REGEX}'))
                 AS BIGINT) AS n_bpe_tokens,
            round(CAST(length(text) AS DOUBLE)
@@ -554,7 +551,7 @@ _TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 )
 def token_stats_regex(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    ws = F.size(F.expr(_SPARK_TOKENS)).cast("long")
+    ws = F.size(F.expr(SPARK_TOKENS)).cast("long")
     bpe = F.size(
         F.regexp_extract_all(F.lower("text"), F.lit(_TOKEN_REGEX), 0)
     ).cast("long")
@@ -625,7 +622,7 @@ def dedup_clusters(spark, sf_dir):
 
 _DUCK_SIMHASH_PER_DOC = f"""
     WITH words AS (
-      SELECT doc_id, unnest(list_distinct({_DUCK_TOKENS})) AS w
+      SELECT doc_id, unnest(list_distinct({DUCK_TOKENS})) AS w
       FROM documents WHERE doc_id < {_PAIR_LIMIT}
     ),
     hashed AS (
@@ -663,7 +660,7 @@ def dedup_simhash_hamming1(spark, sf_dir):
         .filter(F.col("doc_id") < _PAIR_LIMIT)
         .select(
             "doc_id",
-            F.explode(F.array_distinct(F.expr(_SPARK_TOKENS))).alias("w"),
+            F.explode(F.array_distinct(F.expr(SPARK_TOKENS))).alias("w"),
         )
     )
     hashed = words.withColumn(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.bucket import salted_bucket
+from ..functions.tokens import DUCK_TOKENS, dup_bigram_fraction, tokens
 from .queries import _t, register
 
 # hash bucket in [0, mod): same md5-hex arithmetic both engines —
@@ -38,15 +39,7 @@ def _duck_bucket(mod: int, salt: str = "") -> str:
     )
 
 
-def _spark_bucket(mod: int, salt: str = ""):
-    return salted_bucket("doc_id", mod, salt=salt)
-
-
 _DUCK_BUCKET100 = _duck_bucket(100)
-
-
-def _spark_bucket100():
-    return _spark_bucket(100)
 
 
 # --------------------------------------------------------------------------
@@ -80,7 +73,7 @@ def sample_stratified_docs(spark, sf_dir):
     rate = F.lit(_DEFAULT_RATE)
     for k, v in reversed(_RATES.items()):
         rate = F.when(F.col("lang") == k, v).otherwise(rate)
-    b = _spark_bucket100()
+    b = salted_bucket("doc_id", 100)
     return (
         _t(spark, sf_dir, "documents")
         .filter(b < rate)
@@ -151,20 +144,11 @@ def redact_pii_text(spark, sf_dir):
 _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "that")
 _DUCK_SW = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 
-_DUCK_TOKENS2 = "list_filter(string_split(text, ' '), x -> x <> '')"
 _DUCK_BIGRAMS = f"""
-CASE WHEN len({_DUCK_TOKENS2}) >= 2 THEN
-  list_transform(generate_series(1, len({_DUCK_TOKENS2}) - 1),
-                 i -> {_DUCK_TOKENS2}[i] || ' ' || {_DUCK_TOKENS2}[i+1])
+CASE WHEN len({DUCK_TOKENS}) >= 2 THEN
+  list_transform(generate_series(1, len({DUCK_TOKENS}) - 1),
+                 i -> {DUCK_TOKENS}[i] || ' ' || {DUCK_TOKENS}[i+1])
 ELSE [] END
-"""
-_SPARK_TOKENS2 = "filter(split(text, ' '), x -> x <> '')"
-_SPARK_BIGRAMS = f"""
-CASE WHEN size({_SPARK_TOKENS2}) >= 2 THEN
-  transform(sequence(1, size({_SPARK_TOKENS2}) - 1),
-            i -> concat(element_at({_SPARK_TOKENS2}, i), ' ',
-                        element_at({_SPARK_TOKENS2}, i + 1)))
-ELSE array() END
 """
 
 
@@ -172,8 +156,8 @@ ELSE array() END
     "gopher_quality_filters",
     f"""
     WITH t AS (
-      SELECT doc_id, text, {_DUCK_TOKENS2} AS toks, {_DUCK_BIGRAMS} AS bg
-      FROM documents WHERE len({_DUCK_TOKENS2}) >= 2
+      SELECT doc_id, text, {DUCK_TOKENS} AS toks, {_DUCK_BIGRAMS} AS bg
+      FROM documents WHERE len({DUCK_TOKENS}) >= 2
     )
     SELECT doc_id,
            round(1.0 - CAST(len(list_distinct(bg)) AS DOUBLE) / len(bg), 6)
@@ -191,8 +175,8 @@ ELSE array() END
     """,
 )
 def gopher_quality_filters(spark, sf_dir):
-    """Per-row built-ins only: at 10^12 docs this is a scan-stage
-    filter with zero shuffles. Rule directions follow Gopher (Rae et
+    """Per-row work only: at 10^12 docs this is a scan-stage filter
+    with zero shuffles. Rule directions follow Gopher (Rae et
     al. 2021): reject REPETITIVE docs (high duplicate-bigram fraction)
     and reject stopword-POOR docs (stopword presence signals natural
     language — the rule keeps docs with ENOUGH stopwords, not few).
@@ -201,11 +185,11 @@ def gopher_quality_filters(spark, sf_dir):
     passes_gopher occur at every test sf — a filter that never rejects
     is not evidence (the embedding_near_dup lesson).
 
-    Plan shape: the interpreted higher-order expressions (split/filter/
-    transform) are STAGED — toks, then bg, then the three scalar
-    metrics, each in its own projection. CollapseProject will not
-    inline a non-cheap alias referenced more than once (SPARK-36718),
-    so every array is evaluated once per row inside one codegen stage;
+    Plan shape: the interpreted higher-order expressions (split/filter)
+    are STAGED — toks, then the three scalar metrics, each in its own
+    projection. CollapseProject will not inline a non-cheap alias
+    referenced more than once (SPARK-36718), so every array is
+    evaluated once per row inside one codegen stage;
     the round-2 inline form re-evaluated the split+filter ~6x per row
     and was the slowest query on the board (5.4 s -> sub-second)."""
     d = _t(spark, sf_dir, "documents")
@@ -213,20 +197,11 @@ def gopher_quality_filters(spark, sf_dir):
     # stage 1: tokens, once (the filter below re-derives size(toks)
     # at the scan via predicate pushdown — one cheap extra split in the
     # filter, instead of shipping all rows to a post-project filter)
-    s1 = d.select("doc_id", "text", F.expr(_SPARK_TOKENS2).alias("toks"))
+    s1 = d.select("doc_id", "text", tokens().alias("toks"))
     s1 = s1.filter(F.size("toks") >= 2)
-    # stage 2: bigrams from the materialized toks column (size >= 2 is
-    # guaranteed, so no CASE guard; zip_with over two slices is one
-    # pass, vs transform + element_at probing)
-    bg = F.zip_with(
-        F.slice(F.col("toks"), 1, F.size("toks") - 1),
-        F.slice(F.col("toks"), 2, F.size("toks") - 1),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )
-    s2 = s1.select("doc_id", "text", "toks", bg.alias("bg"))
-    # stage 3: the three metrics as scalars; toks/bg are plain
-    # attributes here so multiple references cost nothing
-    dup = 1.0 - F.size(F.array_distinct("bg")).cast("double") / F.size("bg")
+    # stage 2: the three metrics as scalars; toks is a plain attribute
+    # here so multiple references cost nothing. The duplicate-bigram
+    # fraction is the quality gate's vectorized batch kernel.
     swf = (
         F.size(F.filter("toks", lambda x: F.array_contains(sw, x)))
         .cast("double") / F.size("toks")
@@ -235,11 +210,12 @@ def gopher_quality_filters(spark, sf_dir):
         F.length(F.regexp_replace("text", "[a-z0-9 ]", "")).cast("double")
         / F.length("text")
     )
-    s3 = s2.select(
-        "doc_id", dup.alias("dup"), swf.alias("swf"), sym.alias("sym")
+    s2 = s1.select(
+        "doc_id", dup_bigram_fraction(F.col("text")).alias("dup"),
+        swf.alias("swf"), sym.alias("sym"),
     )
     # final: rounding + the pass flag over cheap scalar attributes
-    return s3.select(
+    return s2.select(
         "doc_id",
         F.round("dup", 6).alias("dup_bigram_frac"),
         F.round("swf", 6).alias("stopword_frac"),

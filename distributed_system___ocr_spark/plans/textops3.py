@@ -17,7 +17,11 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.bucket import split_stamp, split_thresholds
+from ..functions.tokens import DUCK_TOKENS
+from ..operators.textdedup import exact_dedup, ngram_explode
 from .queries import _t, register
+from .textops2 import _duck_bucket
 
 # --------------------------------------------------------------------------
 # Unicode NFC normalization
@@ -82,14 +86,13 @@ def normalize_text_nfc(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 _TOPK_TERMS = 3
-_DUCK_TOKENS3 = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
 @register(
     "tfidf_top_terms",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS3}) AS term FROM documents
+      SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
     df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
@@ -313,36 +316,12 @@ _CHUNK_STRIDE = 180  # 20-char overlap between consecutive chunks
     """,
 )
 def chunk_documents(spark, sf_dir):
-    """Training-window chunking: fixed-size character chunks with
-    overlap (the pre-tokenizer form of sequence slicing). Pure per-row
-    explode — row inflation is len/stride (bounded, linear), no
-    shuffle; at 10^12 docs this runs in the scan stage and feeds the
-    packer below."""
-    d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    idx = F.explode(
-        F.sequence(
-            F.lit(0),
-            F.floor(
-                F.greatest(F.length("text") - 1, F.lit(0)) / _CHUNK_STRIDE
-            ).cast("int"),
-        )
-    )
-    c = d.select("doc_id", "text", idx.alias("chunk_idx"))
-    chunk = F.expr(
-        f"substring(text, chunk_idx * {_CHUNK_STRIDE} + 1, {_CHUNK_SZ})"
-    )
-    # n_chars arithmetically (== length(chunk), same value the oracle
-    # computes): a size-only consumer prunes the chunk bytes instead
-    # of re-materializing every substring to measure it
-    n_chars = F.least(
-        F.lit(_CHUNK_SZ),
-        F.length("text") - F.col("chunk_idx") * _CHUNK_STRIDE,
-    )
-    return c.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        chunk.alias("chunk"),
-        n_chars.cast("long").alias("n_chars"),
+    """operators/packing.chunk_text keyed on doc_id — the kernel the
+    chain's chunk step runs."""
+    from ..operators.packing import chunk_text
+
+    return chunk_text(
+        _t(spark, sf_dir, "documents"), _CHUNK_SZ, _CHUNK_STRIDE, ("doc_id",)
     )
 
 
@@ -382,9 +361,18 @@ def pack_docs_greedy(spark, sf_dir):
     balanced when ids are near-dense (crawl-counter ids are); the
     per-lang (min, max) stats are a languages-sized aggregate, safe
     to broadcast at any corpus size."""
+    d = _t(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
+    return _pack_doc_id_buckets(d, ["lang"]).select(
+        "lang", "doc_id", "n_chars", "bin_id"
+    )
+
+
+def _pack_doc_id_buckets(d, part_col: list[str]):
+    """greedy_pack_bins over per-lang doc_id-range buckets
+    floor((doc_id - min) / span), monotone in doc_id within every
+    ``part_col`` partition."""
     from ..operators.packing import N_PACK_BUCKETS, greedy_pack_bins
 
-    d = _t(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
     stats = d.groupBy("lang").agg(
         F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx")
     )
@@ -401,8 +389,8 @@ def pack_docs_greedy(spark, sf_dir):
         .drop("_mn", "_mx")
     )
     return greedy_pack_bins(
-        bucketed, _PACK_TARGET, "_bkt", ["doc_id"]
-    ).select("lang", "doc_id", "n_chars", "bin_id")
+        bucketed, _PACK_TARGET, "_bkt", ["doc_id"], part_col=part_col
+    )
 
 
 # --------------------------------------------------------------------------
@@ -439,14 +427,8 @@ def dedup_keep_representative(spark, sf_dir):
     clones = d.filter(F.col("doc_id") % 20 == 0).select(
         (F.col("doc_id") + _DEDUP_CLONE_OFFSET).alias("doc_id"), "text"
     )
-    corpus = d.unionByName(clones).select(
-        "doc_id", F.md5(F.col("text").cast("binary")).alias("content_hash")
-    )
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
-    return (
-        corpus.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    return exact_dedup(d.unionByName(clones), "doc_id").select(
+        "doc_id", "content_hash"
     )
 
 
@@ -459,15 +441,13 @@ def dedup_keep_representative(spark, sf_dir):
 # provably fires (the corpus's dup-of-earlier docs collide with it).
 
 _DECON_N = 5  # overlap gram width
-_DUCK_TOKS_DECON = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SPARK_TOKS_DECON = "filter(split(text, ' '), x -> x <> '')"
 
 
 @register(
     "decontaminate_ngram_overlap",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS_DECON} AS t FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
     ),
     grams AS (
       SELECT doc_id,
@@ -495,16 +475,9 @@ def decontaminate_ngram_overlap(spark, sf_dir):
     any corpus size, so AQE broadcasts it and the expensive side never
     re-shuffles; per-doc aggregation is partial+final. Token arrays
     are staged once per row (the gopher lesson)."""
-    d = _t(spark, sf_dir, "documents")
-    s1 = d.select(
-        "doc_id", F.expr(f"{_SPARK_TOKS_DECON}").alias("t")
-    ).filter(F.size("t") >= _DECON_N)
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
+    grams = ngram_explode(
+        _t(spark, sf_dir, "documents"), _DECON_N, ("doc_id",)
     )
-    grams = s1.select("doc_id", F.explode(gram).alias("g"))
     eval_g = (
         grams.filter(F.col("doc_id") % 50 == 0)
         .select("g").distinct()
@@ -535,8 +508,9 @@ def decontaminate_ngram_overlap(spark, sf_dir):
 # shape: identical to pack_docs_greedy — the split key only narrows
 # each partition, it never concentrates one.
 
-_PACK_SPLIT_TRAIN = 800_000  # of 1M md5 buckets -> 80% train
-_PACK_SPLIT_VAL = 900_000    # next 10% val; rest test
+_PACK_SPLIT_FRACS = (0.8, 0.1)  # 80% train, 10% val, the rest test
+_PACK_SPLIT_TRAIN, _PACK_SPLIT_VAL = split_thresholds(*_PACK_SPLIT_FRACS)
+_SPLIT_BUCKET = _duck_bucket(1_000_000, "split:")
 
 
 @register(
@@ -544,8 +518,8 @@ _PACK_SPLIT_VAL = 900_000    # next 10% val; rest test
     f"""
     WITH s AS (
       SELECT lang, doc_id, n_chars,
-             CASE WHEN {{bucket}} < {_PACK_SPLIT_TRAIN} THEN 'train'
-                  WHEN {{bucket}} < {_PACK_SPLIT_VAL} THEN 'val'
+             CASE WHEN {_SPLIT_BUCKET} < {_PACK_SPLIT_TRAIN} THEN 'train'
+                  WHEN {_SPLIT_BUCKET} < {_PACK_SPLIT_VAL} THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     )
@@ -561,53 +535,16 @@ def pack_docs_greedy_split(spark, sf_dir):
     bucketing as pack_docs_greedy (a per-lang bucket stays monotone
     within every (lang, split) sub-partition), composite partition
     key via greedy_pack_bins(part_col=["lang", "split"])."""
-    from ..operators.packing import N_PACK_BUCKETS, greedy_pack_bins
-    from .textops2 import _spark_bucket
-
-    # same "split:"-salted bucket as train_val_test_split, so both
-    # queries agree on every doc's split (and the stamp stays
-    # independent of sampling-stage acceptance buckets)
-    split = (
-        F.when(_spark_bucket(1_000_000, "split:") < _PACK_SPLIT_TRAIN,
-               "train")
-        .when(_spark_bucket(1_000_000, "split:") < _PACK_SPLIT_VAL, "val")
-        .otherwise("test")
-    )
+    # the split stamp train_val_test_split and the chain use
     d = _t(spark, sf_dir, "documents").select(
-        "lang", "doc_id", "n_chars", split.alias("split")
+        "lang", "doc_id", "n_chars",
+        split_stamp("doc_id", *_PACK_SPLIT_FRACS).alias("split"),
     )
-    stats = d.groupBy("lang").agg(
-        F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx")
-    )
-    span = F.greatest(
-        F.ceil((F.col("_mx") - F.col("_mn") + 1) / N_PACK_BUCKETS),
-        F.lit(1),
-    )
-    bucketed = (
-        d.join(F.broadcast(stats), "lang")
-        .withColumn(
-            "_bkt",
-            F.floor((F.col("doc_id") - F.col("_mn")) / span).cast("int"),
-        )
-        .drop("_mn", "_mx")
-    )
-    return greedy_pack_bins(
-        bucketed, _PACK_TARGET, "_bkt", ["doc_id"],
-        part_col=["lang", "split"],
-    ).select("lang", "split", "doc_id", "n_chars", "bin_id")
-
-
-def _pack_split_patch_sql() -> None:
-    from .queries import REGISTRY
-    from .textops2 import _duck_bucket
-
-    REGISTRY["pack_docs_greedy_split"]["sql"] = (
-        REGISTRY["pack_docs_greedy_split"]["sql"]
-        .replace("{bucket}", _duck_bucket(1_000_000, "split:"))
+    return _pack_doc_id_buckets(d, ["lang", "split"]).select(
+        "lang", "split", "doc_id", "n_chars", "bin_id"
     )
 
 
-_pack_split_patch_sql()
 
 
 # --------------------------------------------------------------------------
@@ -688,10 +625,10 @@ def url_host_blocklist(spark, sf_dir):
     f"""
     WITH toks AS (
       SELECT doc_id,
-             CASE WHEN {{bucket}} < {_PACK_SPLIT_TRAIN} THEN 'train'
-                  WHEN {{bucket}} < {_PACK_SPLIT_VAL} THEN 'val'
+             CASE WHEN {_SPLIT_BUCKET} < {_PACK_SPLIT_TRAIN} THEN 'train'
+                  WHEN {_SPLIT_BUCKET} < {_PACK_SPLIT_VAL} THEN 'val'
                   ELSE 'test' END AS split,
-             {_DUCK_TOKS_DECON} AS t
+             {DUCK_TOKENS} AS t
       FROM documents
     ),
     grams AS (
@@ -719,32 +656,17 @@ def split_leakage_ngram(spark, sf_dir):
     """Per val/test doc: how many of its distinct 5-grams appear in
     ANY train-split doc ("split:"-salted bucket, identical to
     train_val_test_split, so the stamp agrees across queries)."""
-    from .textops2 import _spark_bucket
-
-    b = _spark_bucket(1_000_000, "split:")
-    split = (
-        F.when(b < _PACK_SPLIT_TRAIN, "train")
-        .when(b < _PACK_SPLIT_VAL, "val")
-        .otherwise("test")
-    )
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", split.alias("split"),
-        F.expr(_SPARK_TOKS_DECON).alias("t"),
-    ).filter(F.size("t") >= _DECON_N)
-    gram = F.expr(
-        "transform(sequence(1, size(t) - 4), i -> concat_ws(' ', "
-        "element_at(t, i), element_at(t, i+1), element_at(t, i+2), "
-        "element_at(t, i+3), element_at(t, i+4)))"
+        "doc_id", split_stamp("doc_id", *_PACK_SPLIT_FRACS).alias("split"),
+        "text",
     )
-    grams = d.select("doc_id", "split", F.explode(gram).alias("g"))
+    grams = ngram_explode(d, _DECON_N, ("doc_id", "split"))
     # round-7: annotate "appears in ANY train doc" with one window max
     # over the gram partition instead of a distinct + join back — the
     # corpus-sized tokenize+gram explode executes ONCE, not twice
     # (train_g and ev were separate subtrees over grams); _hit is
     # non-null iff the gram group contains a train row, exactly the
     # left-join hit the oracle encodes
-    from pyspark.sql import Window
-
     hit = F.max(F.when(F.col("split") == "train", 1)).over(
         Window.partitionBy("g")
     )
@@ -762,14 +684,3 @@ def split_leakage_ngram(spark, sf_dir):
     )
 
 
-def _split_leakage_patch_sql() -> None:
-    from .queries import REGISTRY
-    from .textops2 import _duck_bucket
-
-    REGISTRY["split_leakage_ngram"]["sql"] = (
-        REGISTRY["split_leakage_ngram"]["sql"]
-        .replace("{bucket}", _duck_bucket(1_000_000, "split:"))
-    )
-
-
-_split_leakage_patch_sql()

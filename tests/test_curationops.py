@@ -459,8 +459,9 @@ def test_lm_quality_zbuckets_ordered_and_all_fire(spark):
 
 def test_unigram_model_queries_explode_tokens_once(spark):
     """Round-6 verdict item: the corpus-sized tokenize+explode must
-    appear ONCE in each unigram-model query's plan — the old shapes
-    re-derived it per subtree (3x in lm_quality_zbuckets, 4x in
+    appear ONCE in each unigram-model query's plan, and in the curation
+    chain's lm_quality stage, which runs the same kernel keyed on url.
+    The old shapes re-derived it per subtree (3x in lm_quality_zbuckets, 4x in
     dsir_importance_weight), multiplying the dominant scan cost. The
     model totals now derive from the vocab-sized tf frame and the
     per-doc score weights logp by the staged term count (value
@@ -478,10 +479,23 @@ def test_unigram_model_queries_explode_tokens_once(spark):
     # (unigram 2: tf-side + score-side; lm 4: the score subtree feeds
     # both the per-lang stats and the final select; dsir 3: the
     # term-vocab frame feeds the smoothing constants and the ratio)
+    def chain_lm_quality(spark, sf_dir):
+        # the chain stage runs the same kernel keyed on url; the
+        # explicit isnotnull(key) filter must hold there too
+        from distributed_system___ocr_spark.curation import (
+            lm_quality_survivors,
+        )
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            F.col("doc_id").cast("string").alias("url"), "text", "lang"
+        )
+        return lm_quality_survivors(docs, 0.5)
+
     for q, max_static in (
         (unigram_logprob_score, 2),
         (lm_quality_zbuckets, 4),
         (dsir_importance_weight, 3),
+        (chain_lm_quality, 4),
     ):
         df = q(spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -8,6 +8,7 @@ synthetic mini-tables (round-1 verdict, missing item 2).
 from __future__ import annotations
 
 import datetime as dt
+import os
 import re
 from collections import Counter
 
@@ -15,6 +16,11 @@ import pandas as pd
 import pytest
 
 REF = "/root/reference"
+# the reference checkout is mounted read-only where it exists; a host
+# without it has nothing to compare against
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF), reason=f"reference repo not mounted at {REF}"
+)
 _BLOCK_RE = r'\t<p>\n\t\t<img src="(.*?)"><br/>\n\t\t(.*?)\n\t</p>\n'
 
 
