@@ -617,7 +617,9 @@ def exact_dedup_survivors_incremental(
     IDENTICAL either way: false negatives are impossible, false
     positives fall through to the exact anti-join. Best with a
     materialized ``new_docs`` (the composed chain's stage inputs are
-    checkpointed) — the bloom build re-reads it once."""
+    checkpointed) — the bloom build re-reads it once. No bloom is
+    built while the manifest fits the broadcast threshold
+    (``bloom_semi_reduce``)."""
     from .functions.bloom import bloom_semi_reduce
 
     h = F.md5(F.col("text").cast("binary"))
@@ -626,7 +628,7 @@ def exact_dedup_survivors_incremental(
     if bloom_prefilter:
         base_hashes = bloom_semi_reduce(
             new_docs.select(h.alias("content_hash")), base_hashes,
-            "content_hash", expected=new_docs.count(),
+            "content_hash",
         )
     return (
         textdedup.exact_dedup(new_docs, "url")
@@ -665,21 +667,20 @@ def neardup_survivors_incremental(
     bulk) never shuffle into the pair join. Output IDENTICAL (no
     false negatives; false positives only add join input); the new
     bands are checkpointed once so the batch is minhashed once, not
-    once per consumer."""
-    from .functions.bloom import bloom_semi_reduce
+    once per consumer. Neither happens while the band manifest fits
+    the broadcast threshold (``bloom_semi_reduce``)."""
+    from .functions.bloom import bloom_semi_reduce, fits_broadcast
     from .operators.neardup import minhash_bands
 
     new_bands = minhash_bands(new_docs, id_col="url", text_col="text")
-    if bloom_prefilter:
+    if base_bands is None:
+        base_bands = minhash_bands(base, id_col="url", text_col="text")
+    if bloom_prefilter and not fits_broadcast(base_bands):
         # materialize: the bloom build, the pair join's probe side and
         # the union below would each re-run the minhash UDF otherwise
         new_bands = new_bands.localCheckpoint()
-    if base_bands is None:
-        base_bands = minhash_bands(base, id_col="url", text_col="text")
-    if bloom_prefilter:
         base_bands = bloom_semi_reduce(
             new_bands, base_bands, ("band_idx", "band_val"),
-            expected=new_bands.count(),
         )
     all_bands = new_bands.unionByName(base_bands)
     # pairs touching at least one NEW doc; canonical (min, max) order
@@ -1450,15 +1451,14 @@ def run_curation(
             ("chunk", n_survivors, n_chunks),
             ("pack", n_chunks, n_bins),
         ]
-        lineage = spark.createDataFrame(
+        _local_frame(
+            spark,
             [
                 (run_id, i, stage, n_in, n_out, n_in - n_out)
                 for i, (stage, n_in, n_out) in enumerate(stages)
             ],
-            "run_id string, stage_idx int, stage string, n_in long, "
-            "n_out long, n_dropped long",
-        )
-        lineage.write.mode("overwrite").parquet(lineage_path)
+            _LINEAGE_SCHEMA,
+        ).write.mode("overwrite").parquet(lineage_path)
 
         n = (prev["n"] + 1) if prev else 0
         snap = {
@@ -1640,6 +1640,21 @@ def _run_chain(snap: dict, run_id: str) -> list[str]:
     return chain
 
 
+_LINEAGE_SCHEMA = (
+    "run_id string, stage_idx int, stage string, n_in long, "
+    "n_out long, n_dropped long"
+)
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """A small local frame built through Arrow: a row list would
+    start a pool of Python-RDD workers just to serialize it."""
+    import pandas as pd
+
+    names = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
 def _survivors_path(out_dir: str, run_id: str) -> str:
     return os.path.join(
         out_dir, "curated", f"run_id={run_id}", "survivors"
@@ -1817,7 +1832,7 @@ def compact_curation(
         off_schema = "_src string, " + ", ".join(
             f"{c} string" for c in key
         ) + ", _off long"
-        off_df = spark.createDataFrame(off_rows, off_schema)
+        off_df = _local_frame(spark, off_rows, off_schema)
         packed = (
             allp.join(F.broadcast(off_df), ["_src", *key], "left")
             .withColumn(
@@ -1871,10 +1886,10 @@ def compact_curation(
         ).parquet(os.path.join(run_dir, "hashes"))
 
         # lineage: one row — compaction drops nothing by construction
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             [(run_id, 0, "compact", n_survivors, n_survivors, 0)],
-            "run_id string, stage_idx int, stage string, n_in long, "
-            "n_out long, n_dropped long",
+            _LINEAGE_SCHEMA,
         ).write.mode("overwrite").parquet(lineage_path)
 
         n = snap["n"] + 1

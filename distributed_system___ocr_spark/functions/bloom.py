@@ -63,6 +63,20 @@ def _hash_cols(col):
     )
 
 
+def fits_broadcast(df: DataFrame) -> bool:
+    """True when Catalyst's size estimate of ``df`` is within the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` — the planner's
+    own rule for broadcasting a join side, so a bloom built for it
+    could prune nothing a broadcast join would not. Reading the
+    estimate plans the frame but runs no job; a threshold of -1 (no
+    broadcasts) always says False."""
+    jdf = df._jdf
+    stats = jdf.queryExecution().optimizedPlan().stats()
+    size = int(stats.sizeInBytes())
+    conf = jdf.sparkSession().sessionState().conf()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
 def build_bloom(df: DataFrame, col: str, expected: int, fpp: float = 0.01) -> Bloom:
     """Aggregate per-partition partial bit arrays, OR them on the
     driver. Driver traffic = nbytes * num_partitions (1.2 MB per 10^6
@@ -120,7 +134,7 @@ def bloom_semi_reduce(
     small: DataFrame,
     large: DataFrame,
     col,
-    expected: int,
+    expected: int | None = None,
     fpp: float = 0.01,
 ) -> DataFrame:
     """Filter ``large`` to rows whose key PROBABLY appears in
@@ -133,9 +147,18 @@ def bloom_semi_reduce(
     negatives are impossible, so the downstream exact join still sees
     every true match; false positives only add join input. ``col`` is
     one column name or a sequence (composite key); ``expected`` sizes
-    the bitset from the small side's row count (over-estimating only
+    the bitset (default: ``small``'s row count; over-estimating only
     costs bits, under-estimating only raises fpp — correctness is
-    unaffected either way)."""
+    unaffected either way).
+
+    While ``large`` fits the broadcast threshold (``fits_broadcast``)
+    it is returned unchanged: the join broadcasts it whole, and the
+    bloom build and probe would be two Python-UDF stages for
+    nothing."""
+    if fits_broadcast(large):
+        return large
+    if expected is None:
+        expected = small.count()
     bloom = build_bloom(small, col, expected, fpp)
     flagged = with_bloom_flag(large, col, bloom, flag="_bloom_hit")
     return flagged.filter(F.col("_bloom_hit")).drop("_bloom_hit")

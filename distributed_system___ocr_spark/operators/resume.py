@@ -6,22 +6,26 @@ MANAGER_TERMINATED, Manager.java:430-437). This module is the
 Spark-native replacement for its count-based completion barrier (O9)
 and at-least-once redelivery (O14): output commits are atomic
 (write to run dir, then single-writer snapshot JSON rename), and a
-restarted job left-anti-joins the input against the processed-url set,
-so killed jobs resume with ZERO reprocessing and duplicates from
-retries are impossible (exactly-once output).
+restarted job left-anti-joins the input against the urls of the
+committed run dirs, so killed jobs resume with ZERO reprocessing and
+duplicates from retries are impossible (exactly-once output).
 
 Layout (plain parquet standing in for Iceberg — no Iceberg runtime jar
 in this container; the snapshot JSON mirrors Iceberg's
 snapshot->manifest-list indirection and a real catalog slots in here):
 
     out_dir/
-      extracted/run_id=<rid>/*.parquet   data files, partitioned by run
+      extracted/run_id=<rid>/*.parquet   data files, partitioned by run;
+                                         their url column is the
+                                         processed set of the run
       lineage/run_id=<rid>/*.parquet     per-partition metrics
       manifest/*.parquet                 final url->count summary
       _checkpoint/
-        processed/<rid>.parquet          (url, text_sha256) per run
         snapshot-<n>.json                {"runs": [...], "n": n}
         LATEST                           name of current snapshot (atomic rename)
+
+Out_dirs written before the processed set was read from the run dirs
+also hold ``_checkpoint/processed/<rid>.parquet``; nothing reads it.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.bloom import build_bloom, with_bloom_flag
+from ..functions.bloom import build_bloom, fits_broadcast, with_bloom_flag
 
 
 def _ckpt(out_dir: str) -> str:
@@ -106,67 +110,59 @@ def all_committed_run_ids(out_dir: str) -> set[str]:
     return runs
 
 
+def run_dirs(out_dir: str, runs: list[str]) -> list[str]:
+    """The data dirs of ``runs`` under ``out_dir/extracted``."""
+    base = os.path.join(out_dir, "extracted")
+    return [os.path.join(base, f"run_id={r}") for r in runs]
+
+
 def processed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Union of processed-url manifests named by the current snapshot.
-    Uncommitted runs (crash before snapshot rename) are invisible —
-    that is the exactly-once property."""
+    """The ``url`` column of the run dirs the current snapshot lists.
+    Only those dirs are read, never a glob over ``extracted/``, so a
+    crashed run dir that never reached a snapshot stays invisible —
+    that is the exactly-once property. The schema is given, so the
+    read plans without a footer-inference job."""
     snap = load_snapshot(out_dir)
     if not snap or not snap["runs"]:
         return None
-    paths = [
-        os.path.join(_ckpt(out_dir), "processed", f"{rid}.parquet")
-        for rid in snap["runs"]
-    ]
-    return spark.read.parquet(*paths)
-
-
-def commit_run(
-    spark: SparkSession,
-    out_dir: str,
-    run_id: str,
-    run_df: DataFrame | None = None,
-) -> dict:
-    """Write this run's processed-url manifest from its *written*
-    extracted data, then atomically publish a new snapshot. Single
-    writer assumed (documented; a real catalog provides CAS here).
-    Pass ``run_df`` (a cached read of the run dir) to avoid a second
-    scan of the just-written files."""
-    ck = _ckpt(out_dir)
-    os.makedirs(os.path.join(ck, "processed"), exist_ok=True)
-    run_data = os.path.join(out_dir, "extracted", f"run_id={run_id}")
-    proc_path = os.path.join(ck, "processed", f"{run_id}.parquet")
-    if run_df is None:
-        run_df = spark.read.parquet(run_data)
-    (
-        run_df
-        .select("url", F.sha2(F.col("text"), 256).alias("text_sha256"))
-        .write.mode("overwrite")
-        .parquet(proc_path)
+    return spark.read.schema("url string").parquet(
+        *run_dirs(out_dir, snap["runs"])
     )
-    prev = load_snapshot(out_dir)
-    n = (prev["n"] + 1) if prev else 0
-    runs = (prev["runs"] if prev else []) + [run_id]
-    snap = {"n": n, "runs": runs}
-    name = f"snapshot-{n}.json"
+
+
+def _publish(out_dir: str, snap: dict) -> None:
+    ck = _ckpt(out_dir)
+    os.makedirs(ck, exist_ok=True)
+    name = f"snapshot-{snap['n']}.json"
     _atomic_write(os.path.join(ck, name), json.dumps(snap))
     _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit point
+
+
+def commit_run(out_dir: str, run_id: str) -> dict:
+    """Atomically publish a snapshot that adds ``run_id``'s written
+    run dir to the committed runs. Single writer assumed (documented;
+    a real catalog provides CAS here)."""
+    prev = load_snapshot(out_dir)
+    snap = {
+        "n": (prev["n"] + 1) if prev else 0,
+        "runs": (prev["runs"] if prev else []) + [run_id],
+    }
+    _publish(out_dir, snap)
     return snap
 
 
-def pending(
-    pages: DataFrame,
-    processed: DataFrame | None,
-    bloom_threshold: int = 10_000,
-) -> DataFrame:
+def pending(pages: DataFrame, processed: DataFrame | None) -> DataFrame:
     """Rows of ``pages`` whose url is not yet processed.
 
-    Exact mechanism: left-anti join on url. When the processed set is
-    large, a bloom prefilter splits the input first — rows whose url
-    hash misses the bloom are DEFINITELY unprocessed and skip the
-    anti-join shuffle entirely; only bloom hits (processed + false
-    positives) pay it. At 10^12 docs with a mostly-complete prior run,
-    that converts the anti-join from full-input-shuffle to
-    tiny-remnant-shuffle.
+    Exact mechanism: left-anti join on url. While Catalyst's size
+    estimate of the processed set fits the broadcast threshold, that
+    is all (the planner broadcasts it). Past it, a bloom prefilter
+    splits the input first — rows whose url hash misses the bloom are
+    DEFINITELY unprocessed and skip the anti-join shuffle entirely;
+    only bloom hits (processed + false positives) pay it. At 10^12
+    docs with a mostly-complete prior run, that converts the anti-join
+    from full-input-shuffle to tiny-remnant-shuffle. Choosing the path
+    runs no job; only the bloom path counts the processed set.
 
     Known cost: the two branches each re-scan ``pages`` (the probe is
     a cheap numpy UDF; payloads are NOT shuffled either way). Caching
@@ -175,11 +171,10 @@ def pending(
     """
     if processed is None:
         return pages
-    n_proc = processed.count()
     keys = processed.select("url")
-    if n_proc < bloom_threshold:
-        return pages.join(F.broadcast(keys), "url", "left_anti")
-    bloom = build_bloom(keys, "url", expected=n_proc, fpp=0.01)
+    if fits_broadcast(keys):
+        return pages.join(keys, "url", "left_anti")
+    bloom = build_bloom(keys, "url", expected=keys.count(), fpp=0.01)
     flagged = with_bloom_flag(pages, "url", bloom)
     definitely_new = flagged.filter(~F.col("_in_bloom")).drop("_in_bloom")
     candidates = flagged.filter(F.col("_in_bloom")).drop("_in_bloom")
@@ -206,7 +201,7 @@ def compact(
         raise FileNotFoundError(f"nothing to compact under {out_dir}")
     base = os.path.join(out_dir, "extracted")
     all_runs = spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, f"run_id={r}") for r in snap["runs"]]
+        *run_dirs(out_dir, snap["runs"])
     ).drop("run_id")
     n = snap["n"] + 1
     new_run = f"compacted-{n}"
@@ -214,18 +209,6 @@ def compact(
     if target_partitions:
         all_runs = all_runs.coalesce(target_partitions)
     all_runs.write.mode("overwrite").parquet(dest)
-
-    ck = _ckpt(out_dir)
-    os.makedirs(os.path.join(ck, "processed"), exist_ok=True)
-    proc_path = os.path.join(ck, "processed", f"{new_run}.parquet")
-    (
-        spark.read.parquet(dest)
-        .select("url", F.sha2(F.col("text"), 256).alias("text_sha256"))
-        .write.mode("overwrite")
-        .parquet(proc_path)
-    )
     new_snap = {"n": n, "runs": [new_run]}
-    name = f"snapshot-{n}.json"
-    _atomic_write(os.path.join(ck, name), json.dumps(new_snap))
-    _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic flip
+    _publish(out_dir, new_snap)  # atomic flip
     return new_snap

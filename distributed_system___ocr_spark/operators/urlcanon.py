@@ -38,22 +38,36 @@ from pyspark.sql import functions as F
 URL_CANON_VERSION = 2
 
 # a url participates in canonicalization only when it starts with the
-# exact scheme shape canonical_parts parses (letters + "://"):
-# canonical_parts returns "" for every component otherwise, which
+# exact scheme shape with_canonical_parts parses (letters + "://"):
+# with_canonical_parts yields "" for every component otherwise, which
 # would collide all unparseable urls on the literal "://"
 _SCHEME_RE = r"^[A-Za-z]+://"
 
 
-def canonical_parts(url: Column):
-    """(scheme, host, path, query) staged columns from a raw url —
-    fragment stripped, scheme/host lowercased, default ports dropped,
-    dot-segments resolved (bounded), query parameters sorted."""
-    nofrag = F.regexp_replace(url, "#.*$", "")
-    scheme = F.lower(F.regexp_extract(nofrag, "^([A-Za-z]+)://", 1))
-    hostport = F.lower(F.regexp_extract(nofrag, "^[A-Za-z]+://([^/?]+)", 1))
-    path = F.regexp_extract(nofrag, "^[A-Za-z]+://[^/?]*([^?]*)", 1)
-    query = F.regexp_extract(nofrag, r"\?(.*)$", 1)
-    return scheme, hostport, path, query
+def with_canonical_parts(
+    df: DataFrame, url_col: str, names=("scheme", "hostport", "path", "query")
+) -> DataFrame:
+    """``df`` plus the raw url's (scheme, host:port, path, query) as
+    columns ``names`` — fragment stripped, scheme/host lowercased.
+
+    The fragment strip is its own projection: the four extracts read
+    it as a column, and the optimizer does not inline a non-trivial
+    expression that more than one consumer reads, so it runs once per
+    row instead of once per part."""
+    staged = df.select(
+        "*", F.regexp_replace(F.col(url_col), "#.*$", "").alias("_uc_nofrag")
+    )
+    nofrag = F.col("_uc_nofrag")
+    scheme, hostport, path, query = names
+    return staged.select(
+        *df.columns,
+        F.lower(F.regexp_extract(nofrag, "^([A-Za-z]+)://", 1)).alias(scheme),
+        F.lower(
+            F.regexp_extract(nofrag, "^[A-Za-z]+://([^/?]+)", 1)
+        ).alias(hostport),
+        F.regexp_extract(nofrag, "^[A-Za-z]+://[^/?]*([^?]*)", 1).alias(path),
+        F.regexp_extract(nofrag, r"\?(.*)$", 1).alias(query),
+    )
 
 
 def canonical_host(scheme: Column, hostport: Column) -> Column:
@@ -89,14 +103,12 @@ def canonicalize_docs(docs: DataFrame, url_col: str = "url") -> DataFrame:
     all see one identity per resource. Output columns == input
     columns (url rewritten); row count can only shrink."""
     cols = docs.columns
-    scheme, hostport, path, query = canonical_parts(F.col(url_col))
-    staged = docs.select(
-        "*", scheme.alias("_uc_s"), hostport.alias("_uc_hp"),
-        path.alias("_uc_p"), query.alias("_uc_q"),
+    staged = with_canonical_parts(
+        docs, url_col, names=("_uc_s", "_uc_hp", "_uc_p", "_uc_q")
     ).select(
         *cols,
         # urls without a parseable scheme keep their RAW identity —
-        # identity, not collapse: canonical_parts yields "" for every
+        # identity, not collapse: with_canonical_parts yields "" for every
         # component of such urls, so without this guard schemeless /
         # mailto: / bare-path urls ALL canonicalized to the literal
         # "://" and keep-first silently destroyed every one but one

@@ -1,9 +1,10 @@
 """End-to-end extraction pipeline (SURVEY.md §3.2 Spark equivalent).
 
-    pages --filter(O2)--> anti-join resume --> [salted repartition(O3)
-    if forced] --> mapInPandas extract (O4/O5/O6) --> last-wins dedup
-    on extracted text (O8) --> write extracted(O11) --> commit snapshot
-    --> lineage(O17) + manifest(O7/O10)
+    pages --filter(O2)--> anti-join resume vs committed run dirs -->
+    [salted repartition(O3) if forced] --> mapInPandas extract
+    (O4/O5/O6) --> last-wins dedup on extracted text (O8) --> write
+    extracted(O11), row count observed --> commit snapshot -->
+    lineage(O17) || manifest(O7/O10), written concurrently
 
 Shuffle budget: ZERO shuffles of raw payload bytes on the default path
 (file scans are byte-uniform; the only exchanges carry extracted text
@@ -22,9 +23,12 @@ fresh out_dir (or a compaction run over the manifest).
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.extract import extract_stage
 from .operators.lineage import lineage_from_extracted
@@ -36,6 +40,7 @@ from .operators.resume import (
     load_snapshot,
     pending,
     processed_urls,
+    run_dirs,
 )
 
 
@@ -67,26 +72,9 @@ def run_pipeline(
         )
     pages = filter_nonblank(pages)
 
-    # Resume: drop urls already committed by a prior snapshot.
+    # Resume: drop urls of the run dirs a prior snapshot committed.
     processed = processed_urls(spark, out_dir)
     todo = pending(pages, processed)
-
-    # Nothing pending -> commit NOTHING. Without this, every scheduled
-    # resubmission appends an empty run dir + processed parquet +
-    # snapshot entry and rebuilds the manifest over the full input —
-    # manufacturing the small-files problem compact() exists to fix.
-    # (The isEmpty probe costs a limit-1 anti-join scan, no extraction;
-    # only paid when a prior snapshot exists.)
-    if processed is not None and todo.isEmpty():
-        return {
-            "run_id": run_id,
-            "snapshot": load_snapshot(out_dir),
-            "n_extracted_this_run": 0,
-            "extracted_path": None,
-            "manifest_path": None,
-            "lineage_path": None,
-            "skipped_empty_run": True,
-        }
 
     # O3: uniform fan-out for the expensive stage. File scans are
     # already byte-uniform (maxPartitionBytes), so by default the
@@ -106,40 +94,53 @@ def run_pipeline(
         extract_stage(todo), order="warc_ts", tie_col="text"
     )
 
-    # O11: commit this run's data files.
-    extracted_dir = os.path.join(out_dir, "extracted")
-    run_dir = os.path.join(extracted_dir, f"run_id={run_id}")
-    extracted.write.mode("overwrite").parquet(run_dir)
+    # O11: write this run's data files. The row count rides along the
+    # write as an observed metric: no read-back, no second job.
+    run_dir = run_dirs(out_dir, [run_id])[0]
+    written = Observation()
+    extracted.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(run_dir)
+    n_extracted = written.get["n"]
 
-    # One cached read-back serves the processed-url manifest, lineage,
-    # and the count (never re-runs extraction).
-    run_extracted = spark.read.parquet(run_dir).persist()
-    try:
-        # Atomic snapshot publish (exactly-once boundary).
-        snap = commit_run(spark, out_dir, run_id, run_df=run_extracted)
+    # Nothing was pending -> commit NOTHING. Without this, every
+    # scheduled resubmission appends an empty run dir + snapshot entry
+    # and rebuilds the manifest over the full input — manufacturing
+    # the small-files problem compact() exists to fix.
+    if processed is not None and n_extracted == 0:
+        shutil.rmtree(run_dir)
+        return {
+            "run_id": run_id,
+            "snapshot": load_snapshot(out_dir),
+            "n_extracted_this_run": 0,
+            "extracted_path": None,
+            "manifest_path": None,
+            "lineage_path": None,
+            "skipped_empty_run": True,
+        }
 
-        # O17: lineage from the written files.
-        lineage_dir = os.path.join(out_dir, "lineage", f"run_id={run_id}")
-        lineage_from_extracted(run_extracted, run_id).write.mode(
-            "overwrite"
-        ).parquet(lineage_dir)
+    # Atomic snapshot publish (exactly-once boundary).
+    snap = commit_run(out_dir, run_id)
 
-        n_extracted = run_extracted.count()
-    finally:
-        run_extracted.unpersist()
-
-    # O7/O10: manifest over the FULL input vs ALL committed runs.
+    # O17 lineage of this run + O7/O10 manifest over the FULL input vs
+    # ALL committed runs, both from the written files (the schema is
+    # the one just written, so the reads plan without a job).
+    lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
+    read = spark.read.schema(extracted.schema)
+    writes = [(
+        lambda: lineage_from_extracted(read.parquet(run_dir), run_id),
+        lineage_path,
+    )]
     manifest_path = None
     if write_manifest:
-        all_extracted = spark.read.option("basePath", extracted_dir).parquet(
-            *[
-                os.path.join(extracted_dir, f"run_id={r}")
-                for r in snap["runs"]
-            ]
-        )
-        manifest_df = build_manifest(pages, all_extracted)
         manifest_path = os.path.join(out_dir, "manifest")
-        manifest_df.write.mode("overwrite").parquet(manifest_path)
+        writes.append((
+            lambda: build_manifest(
+                pages, read.parquet(*run_dirs(out_dir, snap["runs"]))
+            ),
+            manifest_path,
+        ))
+    _write_concurrently(writes)
 
     return {
         "run_id": run_id,
@@ -147,8 +148,39 @@ def run_pipeline(
         "n_extracted_this_run": n_extracted,
         "extracted_path": run_dir,
         "manifest_path": manifest_path,
-        "lineage_path": lineage_dir,
+        "lineage_path": lineage_path,
     }
+
+
+def _write_concurrently(writes) -> None:
+    """Write each ``(build, path)`` frame to parquet on its own thread.
+
+    Each frame is built on the calling thread, and its thread starts
+    right after: an ``InheritableThread`` copies the caller's local
+    properties when it starts (job group, job description, the FAIR
+    pool ``jobs.submit_jobs`` sets), so the jobs of every write carry
+    the caller's labels. Every started thread is joined before this
+    returns or raises; the first error raised by a write is re-raised.
+    """
+    threads: list[InheritableThread] = []
+    errors: list[BaseException] = []
+
+    def write(df: DataFrame, path: str) -> None:
+        try:
+            df.write.mode("overwrite").parquet(path)
+        except BaseException as e:  # re-raised on the calling thread
+            errors.append(e)
+
+    try:
+        for build, path in writes:
+            t = InheritableThread(write, args=(build(), path))
+            t.start()
+            threads.append(t)
+    finally:
+        for t in threads:
+            t.join()
+    if errors:
+        raise errors[0]
 
 
 def read_extracted(
@@ -162,8 +194,6 @@ def read_extracted(
     immutable; the data files they reference are never rewritten)."""
     import json as _json
 
-    from .operators.resume import load_snapshot
-
     if snapshot is None:
         snap = load_snapshot(out_dir)
     else:
@@ -174,5 +204,5 @@ def read_extracted(
         raise FileNotFoundError(f"no committed snapshot under {out_dir}")
     base = os.path.join(out_dir, "extracted")
     return spark.read.option("basePath", base).parquet(
-        *[os.path.join(base, f"run_id={r}") for r in snap["runs"]]
+        *run_dirs(out_dir, snap["runs"])
     )

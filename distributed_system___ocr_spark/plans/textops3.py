@@ -213,9 +213,9 @@ def canonicalize_urls(spark, sf_dir):
     oracle pins it; round-6 one-copy rule)."""
     from ..operators.urlcanon import (
         canonical_host,
-        canonical_parts,
         canonical_path,
         canonical_query,
+        with_canonical_parts,
     )
 
     d = _t(spark, sf_dir, "documents")
@@ -226,12 +226,8 @@ def canonicalize_urls(spark, sf_dir):
         F.lit("?z=2&a=1&m="), (F.col("doc_id") % 3).cast("string"),
         F.lit("#frag"), F.col("doc_id").cast("string"),
     )
-    s1 = d.select("doc_id", raw.alias("url_raw"))
-    scheme, hostport, path, query = canonical_parts(F.col("url_raw"))
-    s2 = s1.select(
-        "doc_id", "url_raw",
-        scheme.alias("scheme"), hostport.alias("hostport"),
-        path.alias("path"), query.alias("query"),
+    s2 = with_canonical_parts(
+        d.select("doc_id", raw.alias("url_raw")), "url_raw"
     )
     s3 = s2.select(
         "doc_id", "url_raw", "scheme",

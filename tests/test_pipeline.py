@@ -237,3 +237,116 @@ def test_error_rows_counted_complete(spark):
     lin = lineage_from_extracted(extract_stage(df), "t").agg(
         F.sum("n_failed")).collect()[0][0]
     assert lin == 1
+
+
+# Spark jobs per call on this file's fixture (`pages`, num_partitions=4):
+# (before the row count was observed on the extraction write, now). Each
+# job costs ~0.1 s JVM-only and 0.3-0.5 s with a Python UDF.
+JOBS_PER_CALL = {"full": (14, 9), "resume": (21, 10), "empty": (5, 3)}
+
+
+def _jobs_of_call(sc, group, fn):
+    """Run ``fn`` under job group ``group``; returns (result, job ids of
+    the group, job ids started during the call WITHOUT any group)."""
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new_ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    return out, set(tracker.getJobIdsForGroup(group)), new_ungrouped
+
+
+def test_calls_run_few_jobs_all_in_callers_group(spark, pages, tmp_path):
+    """A full run, a resume and an empty resume each run at most the
+    measured number of jobs, and every one of them — the lineage and
+    manifest writes on their own threads included — carries the
+    caller's job group (the threads inherit it)."""
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    first = pages.filter(F.abs(F.xxhash64("url")) % 5 != 0)
+    calls = [
+        ("full", first, "j1"),
+        ("resume", pages, "j2"),
+        ("empty", pages, "j3"),
+    ]
+    for name, df, rid in calls:
+        info, grouped, stray = _jobs_of_call(
+            sc, f"jobs-{name}-{tmp_path.name}",
+            lambda: run_pipeline(spark, df, out, run_id=rid,
+                                 num_partitions=4),
+        )
+        before, now = JOBS_PER_CALL[name]
+        assert now < before
+        assert 0 < len(grouped) <= now, (name, len(grouped))
+        assert not stray, (name, sorted(stray))
+    assert info.get("skipped_empty_run") is True
+
+
+def test_orphan_run_dir_is_not_processed(spark, pages, tmp_path):
+    """Resume reads the processed urls from the committed run dirs
+    only: a run dir that was written but never committed does not
+    count, so a resume re-extracts its urls."""
+    out = str(tmp_path / "out")
+    first = pages.filter(F.abs(F.xxhash64("url")) % 3 == 0)
+    info1 = run_pipeline(spark, first, out, run_id="r1", num_partitions=4)
+    n1 = info1["n_extracted_this_run"]
+    orphan_pages = pages.filter(F.abs(F.xxhash64("url")) % 3 == 1)
+    orphan = os.path.join(out, "extracted", "run_id=orphan")
+    extract_stage(latest_per_key(orphan_pages)).write.parquet(orphan)
+
+    info2 = run_pipeline(spark, pages, out, run_id="r2", num_partitions=4)
+    n_all = pages.select("url").distinct().count()
+    assert info2["n_extracted_this_run"] == n_all - n1
+    assert read_extracted(spark, out).count() == n_all
+
+
+def test_manifest_failure_propagates_after_lineage_finishes(
+    spark, pages, tmp_path, monkeypatch
+):
+    """An error in the manifest write leaves run_pipeline only once the
+    concurrent lineage write has finished (its _SUCCESS marker is there
+    when the error arrives), whether it is raised while building the
+    manifest frame or by the write on its thread."""
+    import threading
+    import time
+
+    import pytest
+    from pyspark import InheritableThread
+    from pyspark.sql.functions import udf
+
+    from distributed_system___ocr_spark import pipeline
+
+    @udf("long")
+    def slow(n):
+        time.sleep(0.5)
+        return n
+
+    orig_lineage = pipeline.lineage_from_extracted
+    monkeypatch.setattr(
+        pipeline, "lineage_from_extracted",
+        lambda df, rid: orig_lineage(df, rid).withColumn(
+            "rows_out", slow("rows_out")),
+    )
+
+    def raise_now(pages, extracted):
+        raise RuntimeError("manifest boom")
+
+    def raise_on_write(pages, extracted):
+        return spark.range(1).select(
+            F.raise_error(F.lit("manifest boom")).cast("string").alias("x")
+        )
+
+    for i, broken in enumerate((raise_now, raise_on_write)):
+        monkeypatch.setattr(pipeline, "build_manifest", broken)
+        out = str(tmp_path / f"out{i}")
+        with pytest.raises(Exception, match="manifest boom"):
+            run_pipeline(spark, pages.limit(40), out, run_id="r1",
+                         num_partitions=4)
+        lineage = os.path.join(out, "lineage", "run_id=r1")
+        assert os.path.exists(os.path.join(lineage, "_SUCCESS")), broken
+        assert not [t for t in threading.enumerate()
+                    if isinstance(t, InheritableThread)]

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_system___ocr_spark.functions.bloom import (
@@ -17,6 +18,17 @@ from distributed_system___ocr_spark.operators.partitioning import (
 )
 from distributed_system___ocr_spark.operators.resume import pending
 from distributed_system___ocr_spark.pipeline import read_extracted, run_pipeline
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """Broadcast joins off for one test: nothing fits the threshold, so
+    pending() and bloom_semi_reduce take their bloom paths."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
 
 
 def _skewed_pages(spark, n=4000):
@@ -72,9 +84,9 @@ def test_snapshot_time_travel(spark, pages, tmp_path):
     assert read_extracted(spark, out, snapshot=1).count() == n_latest
 
 
-def test_bloom_prefilter_path_equals_exact(spark, pages):
-    """pending() with the bloom path (threshold forced to 0) returns
-    exactly the anti-join result: false positives fall through, false
+def test_bloom_prefilter_path_equals_exact(spark, pages, no_broadcast):
+    """pending() with the bloom path (broadcasts off) returns exactly
+    the anti-join result: false positives fall through, false
     negatives impossible."""
     done = pages.select("url").distinct().limit(150)
     exact = {
@@ -83,8 +95,9 @@ def test_bloom_prefilter_path_equals_exact(spark, pages):
     }
     got = {
         r["url"]
-        for r in pending(pages, done.withColumnRenamed("url", "url"),
-                         bloom_threshold=0).select("url").collect()
+        for r in pending(
+            pages, done.withColumnRenamed("url", "url")
+        ).select("url").collect()
     }
     assert got == exact
 
@@ -493,7 +506,7 @@ def test_two_phase_pack_equality_randomized(spark):
         assert got == want and len(got) == len(rows), (trial, target)
 
 
-def test_bloom_semi_reduce_prunes_without_false_negatives(spark):
+def test_bloom_semi_reduce_prunes_without_false_negatives(spark, no_broadcast):
     """The increment-direction reduction: every large-side row whose
     key exists on the small side survives (no false negatives — the
     downstream exact join's correctness), and the non-matching bulk
@@ -524,7 +537,7 @@ def test_bloom_semi_reduce_prunes_without_false_negatives(spark):
     assert got.columns == large.columns      # helper cols dropped
 
 
-def test_incremental_dedup_bloom_equals_exact(spark):
+def test_incremental_dedup_bloom_equals_exact(spark, no_broadcast):
     """bloom_prefilter=True must be output-IDENTICAL to the plain
     anti-join path for both incremental dedup helpers (the bloom only
     prunes join input; false positives fall through, false negatives
@@ -579,3 +592,16 @@ def test_incremental_dedup_bloom_equals_exact(spark):
             new, base, bloom_prefilter=True
         ).collect()
     }
+
+
+def test_bloom_semi_reduce_skips_a_broadcastable_side(spark):
+    """A large side within the broadcast threshold comes back unchanged:
+    the join broadcasts it whole, so a bloom build and probe (two
+    Python-UDF stages) would prune nothing."""
+    from distributed_system___ocr_spark.functions.bloom import (
+        bloom_semi_reduce,
+    )
+
+    small = spark.range(10).withColumnRenamed("id", "k")
+    large = spark.range(1000).withColumnRenamed("id", "k")
+    assert bloom_semi_reduce(small, large, "k") is large

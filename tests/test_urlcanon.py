@@ -183,3 +183,26 @@ def test_full_run_processed_manifest_carries_canonical_urls(
     assert {
         r["url"] for r in read_curated(spark, out, run_id="i1").collect()
     } == {"https://z.com/new"}
+
+
+def test_fragment_strip_runs_once_per_row(spark, tmp_path):
+    """The fragment strip feeds all four url parts; staged in its own
+    projection it appears once in the optimized plan of both the chain
+    stage and the registry query, not once per part."""
+    from conftest import TESTDATA
+
+    from distributed_system___ocr_spark.plans.textops3 import (
+        canonicalize_urls,
+    )
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(pd.DataFrame([
+        _doc("HTTPS://A.com:443/x/./y/../z?b=2&a=1#frag", "a"),
+    ])).write.parquet(src)  # a file scan: a local relation would fold
+    plans = [
+        canonicalize_docs(spark.read.parquet(src)),
+        canonicalize_urls(spark, TESTDATA),
+    ]
+    for df in plans:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("#.*$") == 1, plan
