@@ -52,7 +52,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.bucket import split_stamp
@@ -60,7 +60,7 @@ from .functions.minhash import BAND_SIZE, N_HASHES, TOKEN_HASH_VERSION
 from .functions.tokens import dup_bigram_fraction
 from .operators import sampling, textdedup
 from .operators.components import _free_ckpt, connected_components
-from .operators.neardup import minhash_lsh_pairs_scale
+from .operators.neardup import lsh_candidate_pairs, minhash_bands
 from .operators.packing import (
     chunk_text,
     greedy_pack_bins,
@@ -72,6 +72,7 @@ from .operators.diversify import CLUSTER_BALANCE_VERSION
 from .operators.lmquality import lm_quality_tail_drop
 from .operators.semdedup import SEMDEDUP_EMBED_VERSION
 from .operators.urlfilter import URL_FILTER_VERSION, filter_blocked_domains
+from .writes import write_concurrently
 
 _CKPT = "_checkpoint"
 
@@ -511,14 +512,35 @@ def exact_dedup_survivors(docs: DataFrame) -> DataFrame:
     return textdedup.exact_dedup(docs, "url").drop("content_hash")
 
 
-def neardup_survivors(docs: DataFrame) -> DataFrame:
+def _checkpointed_bands(docs: DataFrame) -> DataFrame:
+    """``docs``' minhash bands, localCheckpointed: the band join reads
+    them more than once, and exchange reuse does not cover a side AQE
+    broadcasts, so an unmaterialized band frame runs the minhash
+    kernel once per reference."""
+    return minhash_bands(docs, id_col="url", text_col="text").localCheckpoint()
+
+
+def neardup_survivors(
+    docs: DataFrame, bands: DataFrame | None = None
+) -> DataFrame:
     """Drop near-duplicates: LSH candidate pairs -> connected
     components -> keep the min-url representative of each cluster
-    (component label IS the min reachable url)."""
-    pairs = minhash_lsh_pairs_scale(docs, id_col="url", text_col="text")
-    labels = connected_components(
-        docs.select("url"), pairs, vertex_col="url", src="a_id", dst="b_id"
-    )
+    (component label IS the min reachable url).
+
+    ``bands``: ``docs``' checkpointed bands (``_checkpointed_bands``)
+    when the caller keeps them for later use — the chain writes the
+    survivors' bands from them; computed and released here otherwise."""
+    owned = bands is None
+    if owned:
+        bands = _checkpointed_bands(docs)
+    try:
+        labels = connected_components(
+            docs.select("url"), lsh_candidate_pairs(bands),
+            vertex_col="url", src="a_id", dst="b_id",
+        )
+    finally:
+        if owned:
+            _free_ckpt(bands)  # the labels no longer read the pairs
     keep = labels.filter(F.col("id") == F.col("component")).select(
         F.col("id").alias("url")
     )
@@ -539,23 +561,43 @@ def _band_meta() -> dict:
     }
 
 
-def _write_survivor_bands(survivors: DataFrame, run_dir: str) -> None:
-    """Persist the survivors' LSH band values AND content hashes
-    beside the survivors — 16+1 thin rows per doc — so a future
-    increment band-joins / hash-anti-joins against them directly
-    instead of re-reading the whole committed corpus's text (the
-    difference between O(new) and O(corpus) per increment)."""
-    from .operators.neardup import minhash_bands
+# the schemas the per-run manifests are written with: reading them
+# back with the known schema plans without a footer-inference job
+_BANDS_SCHEMA = "id string, band_idx int, band_val bigint"
+_HASHES_SCHEMA = "url string, content_hash string"
+_PROCESSED_SCHEMA = "url string"
 
-    minhash_bands(
-        survivors.select("url", "text"), id_col="url", text_col="text"
-    ).write.mode("overwrite").parquet(os.path.join(run_dir, "bands"))
-    survivors.select(
+
+def _survivor_band_writes(
+    survivors: DataFrame, run_dir: str, bands: DataFrame | None
+) -> list[tuple]:
+    """The ``write_concurrently`` entries that persist the survivors'
+    LSH band values AND content hashes beside the survivors — 16+1
+    thin rows per doc — so a future increment band-joins /
+    hash-anti-joins against them directly instead of re-reading the
+    whole committed corpus's text (the difference between O(new) and
+    O(corpus) per increment). The caller writes ``_BANDS_META`` once
+    they have landed.
+
+    ``bands``: the near-dup stage's checkpointed bands, semi-joined on
+    the survivor urls. No stage after near-dup rewrites text (each
+    only filters or adds columns), so they are exactly the survivors'
+    bands; they are recomputed from survivor text only without them."""
+    if bands is None:
+        bands = minhash_bands(
+            survivors.select("url", "text"), id_col="url", text_col="text"
+        )
+    else:
+        bands = bands.join(
+            survivors.select(F.col("url").alias("id")), "id", "left_semi"
+        )
+    hashes = survivors.select(
         "url", F.md5(F.col("text").cast("binary")).alias("content_hash")
-    ).write.mode("overwrite").parquet(os.path.join(run_dir, "hashes"))
-    _atomic_write(
-        os.path.join(run_dir, _BANDS_META), json.dumps(_band_meta())
     )
+    return [
+        (lambda: bands, os.path.join(run_dir, "bands")),
+        (lambda: hashes, os.path.join(run_dir, "hashes")),
+    ]
 
 
 def _chain_bands(
@@ -565,7 +607,6 @@ def _chain_bands(
     bands where present AND algorithm-compatible, recomputed from
     survivor text otherwise (runs committed before band persistence,
     or across a minhash version bump)."""
-    from .operators.neardup import minhash_bands
 
     parts = []
     for rid in chain:
@@ -580,7 +621,7 @@ def _chain_bands(
             except (OSError, ValueError):
                 reusable = False
         parts.append(
-            spark.read.parquet(bands_path) if reusable
+            spark.read.schema(_BANDS_SCHEMA).parquet(bands_path) if reusable
             else minhash_bands(
                 spark.read.parquet(
                     _survivors_path(out_dir, rid)
@@ -642,6 +683,7 @@ def neardup_survivors_incremental(
     base: DataFrame,
     base_bands: DataFrame | None = None,
     bloom_prefilter: bool = False,
+    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Keep-first near-dup pruning for an increment: band-join the
     new batch's signatures against (base ∪ new) bands; a new doc in
@@ -652,7 +694,7 @@ def neardup_survivors_incremental(
     identical to the full form.
 
     Scale shape: O(new), not O(corpus) — ``base_bands`` (persisted
-    beside each run's survivors, `_write_survivor_bands`) means the
+    beside each run's survivors, `_survivor_band_writes`) means the
     committed corpus is never re-minhashed, and the pair join keeps
     the NEW batch on one side, so base-base bucket pairs (already
     resolved when those runs committed) are never generated. Without
@@ -665,20 +707,23 @@ def neardup_survivors_incremental(
     band_val) keys in a bloom and prune the corpus-sized band
     manifest in its scan stage — non-colliding base bands (the vast
     bulk) never shuffle into the pair join. Output IDENTICAL (no
-    false negatives; false positives only add join input); the new
-    bands are checkpointed once so the batch is minhashed once, not
-    once per consumer. Neither happens while the band manifest fits
-    the broadcast threshold (``bloom_semi_reduce``)."""
-    from .functions.bloom import bloom_semi_reduce, fits_broadcast
-    from .operators.neardup import minhash_bands
+    false negatives; false positives only add join input). Not done
+    while the band manifest fits the broadcast threshold
+    (``bloom_semi_reduce``).
 
-    new_bands = minhash_bands(new_docs, id_col="url", text_col="text")
+    ``new_bands``: the batch's checkpointed bands
+    (``_checkpointed_bands``) when the caller keeps them for later
+    use; computed and released here otherwise. Checkpointed either
+    way: the bloom build, the pair join's probe side and the union
+    below would each re-run the minhash kernel otherwise."""
+    from .functions.bloom import bloom_semi_reduce, fits_broadcast
+
+    owned = new_bands is None
+    if owned:
+        new_bands = _checkpointed_bands(new_docs)
     if base_bands is None:
         base_bands = minhash_bands(base, id_col="url", text_col="text")
     if bloom_prefilter and not fits_broadcast(base_bands):
-        # materialize: the bloom build, the pair join's probe side and
-        # the union below would each re-run the minhash UDF otherwise
-        new_bands = new_bands.localCheckpoint()
         base_bands = bloom_semi_reduce(
             new_bands, base_bands, ("band_idx", "band_val"),
         )
@@ -698,6 +743,10 @@ def neardup_survivors_incremental(
             F.greatest("a.id", "b.id").alias("b_id"),
         )
         .distinct()
+        # the pairs feed the vertex set, the edges and (through the
+        # returned labels) the final join-back; components' edge
+        # checkpoint materializes them
+        .localCheckpoint(eager=False)
     )
     # vertices: pair-touched ids + the new batch — a committed doc in
     # no candidate pair can't share a component with a new doc, so
@@ -708,16 +757,20 @@ def neardup_survivors_incremental(
         .unionByName(new_docs.select("url"))
         .distinct()
     )
-    labels = connected_components(
-        vertices, pairs,
-        vertex_col="url", src="a_id", dst="b_id",
-    )
-    # new_bands' checkpoint blocks are NOT freed eagerly here: unlike
+    try:
+        labels = connected_components(
+            vertices, pairs,
+            vertex_col="url", src="a_id", dst="b_id",
+        )
+    finally:
+        if owned:
+            _free_ckpt(new_bands)  # read only through the pairs
+    # the pairs' checkpoint blocks are NOT freed here: unlike
     # semdedup_survivors (whose vertex set comes straight from docs),
-    # this vertex set derives from the pair pipeline, so the returned
-    # frame still references new_bands lazily — an early release
-    # throws CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on collect. The blocks
-    # are new-batch-sized; the ContextCleaner reclaims them on GC.
+    # this vertex set derives from the pairs, so the returned frame
+    # still references them lazily — an early release throws
+    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on collect. The blocks are
+    # pair-sized; the ContextCleaner reclaims them on GC.
     base_ids = base.select(F.col("url").alias("id"))
     # components containing ANY committed survivor: everything new in
     # them is a near-dup of committed work
@@ -968,7 +1021,7 @@ def run_curation(
                 "split_fracs must be (train, val) with train > 0, "
                 "val > 0 and train + val < 1 (test takes the rest)"
             )
-    base = parent_run = processed = None
+    base = base_bands = parent_run = processed = None
     if incremental:
         # corpus-global stages compute statistics over the WHOLE
         # corpus (span/tile frequencies, embedding cells, per-lang
@@ -1009,25 +1062,7 @@ def run_curation(
             _chain_url_hashes(spark, out_dir, chain)
             .select("content_hash").distinct()
         )
-        # every url EVALUATED by the chain (processed manifests; runs
-        # committed before the manifest existed fall back to their
-        # survivor urls — a url those runs dropped would be
-        # re-evaluated, and dedup-vs-base re-drops it)
-        parts = []
-        for rid in chain:
-            p = os.path.join(
-                out_dir, "curated", f"run_id={rid}", "processed"
-            )
-            parts.append(
-                spark.read.parquet(p) if os.path.isdir(p)
-                else spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url")
-            )
-        processed = parts[0]
-        for p in parts[1:]:
-            processed = processed.unionByName(p)
-        processed = processed.distinct()
+        processed = _chain_processed(spark, out_dir, chain).distinct()
     # blank rows can't train and would all collide on one content
     # hash; drop them up front, counted in the lineage 'input' stage
     # (raw -> non-blank), mirroring the extraction pipeline's O2
@@ -1131,6 +1166,22 @@ def run_curation(
     lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
 
     n_input = fp["n_docs"]
+
+    # the near-dup stage's checkpointed bands: the survivor-band write
+    # semi-joins them instead of re-minhashing the survivors; released
+    # on every exit below
+    stage_bands: DataFrame | None = None
+
+    def neardup_stage(df: DataFrame) -> DataFrame:
+        nonlocal stage_bands
+        stage_bands = _checkpointed_bands(df)
+        if incremental:
+            return neardup_survivors_incremental(
+                df, base, base_bands=base_bands, bloom_prefilter=True,
+                new_bands=stage_bands,
+            )
+        return neardup_survivors(df, bands=stage_bands)
+
     # the composed doc-level dataflow, in fixed order; fn=None means
     # the opt-in stage is disabled and passes its input through (its
     # lineage row records n_in == n_out)
@@ -1184,7 +1235,7 @@ def run_curation(
             if segment_dedup_n is not None else None,
         ),
         ("exact_dedup", exact_dedup_survivors),
-        ("neardup_prune", neardup_survivors),
+        ("neardup_prune", neardup_stage),
         (
             "semdedup",
             (lambda df: semdedup_prune(
@@ -1268,13 +1319,7 @@ def run_curation(
                     bloom_prefilter=True,
                 ),
             ),
-            (
-                "neardup_prune",
-                lambda df: neardup_survivors_incremental(
-                    df, base, base_bands=base_bands,
-                    bloom_prefilter=True,
-                ),
-            ),
+            ("neardup_prune", neardup_stage),
             ("decontaminate", by_name["decontaminate"]),
         ]
 
@@ -1369,7 +1414,15 @@ def run_curation(
                 # count-preserving: stamps the deterministic split on
                 # the final survivor set just before the write
                 cur = stamp_split(cur, split_fracs[0], split_fracs[1])
-            cur.write.mode("overwrite").parquet(survivors_path)
+            # the row count rides along the write (no read-back
+            # count), and the read-back plans with the schema just
+            # written (no footer-inference job)
+            written = Observation()
+            cur.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(survivors_path)
+            n_survivors = written.get["n"]
+            survivors = spark.read.schema(cur.schema).parquet(survivors_path)
             stage_sec[last_enabled] = round(_time.monotonic() - _t0, 3)
             if not processed_written:
                 # full run: every non-blank input url was evaluated —
@@ -1379,8 +1432,7 @@ def run_curation(
                 # is the LAST enabled stage the survivors carry the
                 # canonical urls, so read them back instead.)
                 src = (
-                    spark.read.parquet(survivors_path)
-                    if canonicalize_urls and not incremental
+                    survivors if canonicalize_urls and not incremental
                     else docs
                 )
                 src.select("url").write.mode("overwrite").parquet(
@@ -1390,16 +1442,7 @@ def run_curation(
             for p in materialized:
                 _free_ckpt(p)
 
-        survivors = spark.read.parquet(survivors_path)
-        n_survivors = survivors.count()
         measured[last_enabled] = n_survivors
-
-        # survivor bands: what a future increment band-joins against
-        # instead of re-minhashing this run's survivors (O(new) vs
-        # O(corpus) per increment); survivors-sized, thin
-        _t0 = _time.monotonic()
-        _write_survivor_bands(survivors, run_dir)
-        stage_sec["_survivor_bands"] = round(_time.monotonic() - _t0, 3)
 
         # per-stage lineage counts: disabled stages pass through
         stage_out: dict[str, int] = {}
@@ -1409,7 +1452,6 @@ def run_curation(
             n_prev = stage_out[nm]
 
         split_extra = ("split",) if split_fracs is not None else ()
-        _t0 = _time.monotonic()
         packed = pack_chunks_greedy(
             chunk_docs(
                 survivors, chunk_size, chunk_stride,
@@ -1422,24 +1464,38 @@ def run_curation(
         # split: a training reader of split=train then PRUNES the
         # val/test files at the directory level (PartitionFilters in
         # the scan) instead of scanning and filtering 100% of the
-        # chunk bytes — the read-side win the stamp exists for
-        writer = packed.write.mode("overwrite")
-        # partition only when there are rows: a zero-survivor run
+        # chunk bytes — the read-side win the stamp exists for.
+        # Partition only when there are rows: a zero-survivor run
         # (e.g. a fully-resumed increment) partitionBy-writes ONLY
         # _SUCCESS — no schema file — and every later schema-less
         # read of the committed dir (read_packed, cumulative unions)
         # would throw UNABLE_TO_INFER_SCHEMA; the non-partitioned
         # empty write keeps a schema file, and a split filter on it
         # is a no-op over zero rows
-        if split_fracs is not None and n_survivors > 0:
-            writer = writer.partitionBy("split")
-        writer.parquet(packed_path)
-        packed_back = spark.read.schema(packed.schema).parquet(packed_path)
-        n_chunks = packed_back.count()
-        n_bins = packed_back.select(
-            "lang", *split_extra, "bin_id"
-        ).distinct().count()
-        stage_sec["_chunk_pack"] = round(_time.monotonic() - _t0, 3)
+        split_part = split_extra if n_survivors > 0 else ()
+        # survivor bands + hashes (what a future increment joins
+        # against instead of this run's text; survivors-sized, thin)
+        # and the packed chunks are independent: written side by side
+        bands_s, hashes_s, pack_s = write_concurrently([
+            *_survivor_band_writes(survivors, run_dir, stage_bands),
+            (lambda: packed, packed_path, *split_part),
+        ])
+        _atomic_write(
+            os.path.join(run_dir, _BANDS_META), json.dumps(_band_meta())
+        )
+        stage_sec["_survivor_bands"] = round(max(bands_s, hashes_s), 3)
+        _t0 = _time.monotonic()
+        # one aggregate; a struct is never null, so a null lang counts
+        # as its own bin key, as in distinct().count()
+        n_chunks, n_bins = spark.read.schema(packed.schema).parquet(
+            packed_path
+        ).agg(
+            F.count(F.lit(1)),
+            F.count_distinct(F.struct("lang", *split_extra, "bin_id")),
+        ).first()
+        stage_sec["_chunk_pack"] = round(
+            pack_s + _time.monotonic() - _t0, 3
+        )
 
         stages = [("input", n_raw, n_input)]  # raw -> non-blank (O2)
         n_prev = n_input
@@ -1480,6 +1536,8 @@ def run_curation(
         _atomic_write(os.path.join(ck, name), json.dumps(snap))
         _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit
     finally:
+        if stage_bands is not None:
+            _free_ckpt(stage_bands)
         try:
             os.remove(sentinel)
         except OSError:
@@ -1852,23 +1910,9 @@ def compact_curation(
         n_bins = packed_back.select(*key, "bin_id").distinct().count()
 
         # processed manifest: everything the chain ever evaluated
-        # (survivor-url fallback for runs committed before the
-        # manifest existed — same rule as the increment path)
-        parts = []
-        for rid in chain:
-            p = os.path.join(
-                out_dir, "curated", f"run_id={rid}", "processed"
-            )
-            parts.append(
-                spark.read.parquet(p) if os.path.isdir(p)
-                else spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url")
-            )
-        processed = parts[0]
-        for p in parts[1:]:
-            processed = processed.unionByName(p)
-        processed.distinct().write.mode("overwrite").parquet(
+        _chain_processed(spark, out_dir, chain).distinct().write.mode(
+            "overwrite"
+        ).parquet(
             os.path.join(run_dir, "processed")
         )
 
@@ -1939,13 +1983,37 @@ def _chain_url_hashes(
     for rid in chain:
         p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")
         parts.append(
-            spark.read.parquet(p) if os.path.isdir(p)
+            spark.read.schema(_HASHES_SCHEMA).parquet(p)
+            if os.path.isdir(p)
             else spark.read.parquet(
                 _survivors_path(out_dir, rid)
             ).select(
                 "url",
                 F.md5(F.col("text").cast("binary")).alias("content_hash"),
             )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _chain_processed(
+    spark: SparkSession, out_dir: str, chain: list[str]
+) -> DataFrame:
+    """Every url EVALUATED by the chain: the per-run processed
+    manifests, and the survivor urls of runs committed before the
+    manifest existed (a url those runs dropped would be re-evaluated,
+    and dedup-vs-base re-drops it)."""
+    parts = []
+    for rid in chain:
+        p = os.path.join(out_dir, "curated", f"run_id={rid}", "processed")
+        parts.append(
+            spark.read.schema(_PROCESSED_SCHEMA).parquet(p)
+            if os.path.isdir(p)
+            else spark.read.parquet(
+                _survivors_path(out_dir, rid)
+            ).select("url")
         )
     out = parts[0]
     for p in parts[1:]:

@@ -8,10 +8,12 @@ small-star for the shuffle-optimal variant, noted below).
 
 Scale shape (round-6 hardening):
 
-- the symmetrized edge set is localCheckpointed ONCE up front —
-  edges typically arrive as an expensive pipeline (the LSH band join,
-  the SemDeDup cell kernel), and every iteration issues actions, so
-  an un-materialized edge frame would re-run that pipeline per round;
+- the projected edge frame is localCheckpointed ONCE up front, then
+  the symmetrized set built from it — edges typically arrive as an
+  expensive pipeline (the LSH band join, the SemDeDup cell kernel),
+  the symmetrizing plan reads them 4 times, and every iteration
+  issues actions, so an un-materialized edge frame would re-run that
+  pipeline per reference and per round;
 - iteration state is bounded by PAIR-TOUCHED vertices only: a vertex
   with no edge is its own component by definition, so the (at web
   scale, vastly larger) untouched remainder never enters the loop —
@@ -77,14 +79,25 @@ def connected_components(
     # labels-sized join for the least() merge and a THIRD join for the
     # changed count, per round (r07 optimization; result-identical,
     # pinned by the existing equality tests).
-    symm = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).unionByName(
-        edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    )
-    sym = (
-        symm.unionByName(symm.select(F.col("s"), F.col("s").alias("d")))
-        .distinct()
-        .localCheckpoint()  # materialize the edge pipeline ONCE
-    )
+    #
+    # The symmetrized plan references the edge frame 4 times; exchange
+    # reuse does not reach a Python kernel above the edges' last
+    # exchange (SemDeDup's pair kernel), so the projected edges are
+    # checkpointed first and the edge pipeline runs once per row.
+    e = edges.select(
+        F.col(src).alias("s"), F.col(dst).alias("d")
+    ).localCheckpoint()
+    try:
+        symm = e.unionByName(
+            e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+        )
+        sym = (
+            symm.unionByName(symm.select(F.col("s"), F.col("s").alias("d")))
+            .distinct()
+            .localCheckpoint()
+        )
+    finally:
+        _free_ckpt(e)  # sym is materialized; e is never read again
 
     # only pair-touched vertices iterate (sym is symmetrized, so the
     # s column alone covers both endpoints; self-loops add no vertex).

@@ -26,7 +26,6 @@ import os
 import shutil
 import uuid
 
-from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +41,7 @@ from .operators.resume import (
     processed_urls,
     run_dirs,
 )
+from .writes import write_concurrently
 
 
 def run_pipeline(
@@ -140,7 +140,7 @@ def run_pipeline(
             ),
             manifest_path,
         ))
-    _write_concurrently(writes)
+    write_concurrently(writes)
 
     return {
         "run_id": run_id,
@@ -150,37 +150,6 @@ def run_pipeline(
         "manifest_path": manifest_path,
         "lineage_path": lineage_path,
     }
-
-
-def _write_concurrently(writes) -> None:
-    """Write each ``(build, path)`` frame to parquet on its own thread.
-
-    Each frame is built on the calling thread, and its thread starts
-    right after: an ``InheritableThread`` copies the caller's local
-    properties when it starts (job group, job description, the FAIR
-    pool ``jobs.submit_jobs`` sets), so the jobs of every write carry
-    the caller's labels. Every started thread is joined before this
-    returns or raises; the first error raised by a write is re-raised.
-    """
-    threads: list[InheritableThread] = []
-    errors: list[BaseException] = []
-
-    def write(df: DataFrame, path: str) -> None:
-        try:
-            df.write.mode("overwrite").parquet(path)
-        except BaseException as e:  # re-raised on the calling thread
-            errors.append(e)
-
-    try:
-        for build, path in writes:
-            t = InheritableThread(write, args=(build(), path))
-            t.start()
-            threads.append(t)
-    finally:
-        for t in threads:
-            t.join()
-    if errors:
-        raise errors[0]
 
 
 def read_extracted(

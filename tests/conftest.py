@@ -24,3 +24,18 @@ def pages_pdf():
 @pytest.fixture(scope="session")
 def pages(spark, pages_pdf):
     return spark.createDataFrame(pages_pdf).repartition(8)
+
+
+def jobs_of_call(sc, group, fn):
+    """Run ``fn`` under job group ``group``; returns (result, job ids of
+    the group, job ids started during the call WITHOUT any group)."""
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new_ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    return out, set(tracker.getJobIdsForGroup(group)), new_ungrouped

@@ -12,6 +12,8 @@ properties of the whole corpus and require a full re-curate."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +24,8 @@ from distributed_system___ocr_spark.curation import (
     run_curation,
     run_curation_increment,
 )
+
+from conftest import jobs_of_call
 
 
 def _base_docs(spark):
@@ -452,3 +456,73 @@ def test_increment_fully_resumed_batch_commits_with_split_fracs(
     tr = read_packed(spark, out, split="train", cumulative=True)
     assert 0 < tr.count() <= cum.count()
     assert read_packed(spark, out).count() == 0  # latest run = i3
+
+
+# Spark jobs per call on this file's fixture (`_base_docs` full run,
+# then the `_inc_docs` increment): (before the near-dup bands and the
+# components' edges were checkpointed and the tail's bookkeeping jobs
+# cut, now). Each job costs ~0.1 s JVM-only and 0.3-0.5 s with a
+# Python UDF.
+CURATION_JOBS_PER_CALL = {"full": (30, 27), "increment": (52, 44)}
+
+
+def test_curation_calls_run_few_jobs_all_in_callers_group(spark, tmp_path):
+    """A full run and an increment each run at most the measured number
+    of jobs, and every one of them — the survivor-band, hash and packed
+    writes on their own threads included — carries the caller's job
+    group."""
+    out = str(tmp_path / "cur")
+    sc = spark.sparkContext
+    base, inc = _base_docs(spark), _inc_docs(spark)
+    calls = [
+        ("full", lambda: run_curation(spark, base, out, run_id="base")),
+        ("increment", lambda: run_curation_increment(
+            spark, inc, out, run_id="inc1")),
+    ]
+    for name, call in calls:
+        info, grouped, stray = jobs_of_call(
+            sc, f"curation-{name}-{tmp_path.name}", call
+        )
+        before, now = CURATION_JOBS_PER_CALL[name]
+        assert now < before
+        assert 0 < len(grouped) <= now, (name, len(grouped))
+        assert not stray, (name, sorted(stray))
+        assert info["n_survivors"] > 0
+
+
+def test_written_bands_equal_minhash_of_survivors(spark, tmp_path):
+    """The bands a run writes beside its survivors (the near-dup
+    stage's bands, semi-joined on the survivor urls) equal the bands
+    recomputed from those survivors' text, as sets — for a full run and
+    an increment, each with a stage after near-dup that drops docs."""
+    from distributed_system___ocr_spark.operators.neardup import (
+        minhash_bands,
+    )
+
+    out = str(tmp_path / "cur")
+    base, inc = _base_docs(spark), _inc_docs(spark)
+    texts = {r["url"]: r["text"] for r in base.unionByName(inc).collect()}
+    # decontamination runs after near-dup and drops one doc per run
+    evals = spark.createDataFrame(pd.DataFrame({"text": [
+        texts["https://a.com/b007"], texts["https://z.com/n002"],
+    ]}))
+    full = run_curation(spark, base, out, run_id="base", decon_eval=evals)
+    step = run_curation_increment(
+        spark, inc, out, run_id="inc1", decon_eval=evals
+    )
+    for info, dropped in ((full, "https://a.com/b007"),
+                          (step, "https://z.com/n002")):
+        assert info["n_after_decon"] < info["n_after_neardup"]
+        run_dir = os.path.dirname(info["survivors_path"])
+        survivors = spark.read.parquet(info["survivors_path"])
+        assert dropped not in {r["url"] for r in survivors.collect()}
+        written = {
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(run_dir, "bands"))
+            .select("id", "band_idx", "band_val").collect()
+        }
+        recomputed = {
+            tuple(r)
+            for r in minhash_bands(survivors, id_col="url").collect()
+        }
+        assert written and written == recomputed

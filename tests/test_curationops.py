@@ -5,6 +5,7 @@ oracled boilerplate/temperature-sampling queries."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from distributed_system___ocr_spark.plans.curationops import (
@@ -679,6 +680,35 @@ def test_connected_components_releases_superseded_blocks(spark):
     # a multi-iteration run leaves exactly one NEW checkpoint (the
     # final labels) — sym and every superseded round were released
     assert len(stored_ids() - base) == 1
+
+
+def test_connected_components_runs_the_edge_pipeline_once(spark):
+    """The edge pipeline runs once per edge row: the symmetrizing plan
+    references the edge frame 4 times, and a Python kernel above the
+    edges' last exchange (SemDeDup's pair kernel) would run once per
+    reference without the edge checkpoint."""
+    from distributed_system___ocr_spark.operators.components import (
+        connected_components,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("long")
+    def counted(s: pd.Series) -> pd.Series:
+        calls.add(len(s))
+        return s
+
+    src, dst = [0, 1, 2, 10, 11], [1, 2, 3, 11, 12]
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": src, "dst": dst})
+    ).select(counted("src").alias("src"), "dst")
+    verts = spark.createDataFrame(pd.DataFrame({"id": list(range(20))}))
+    comp = {
+        r["id"]: r["component"]
+        for r in connected_components(verts, edges).collect()
+    }
+    assert comp[3] == 0 and comp[12] == 10 and comp[19] == 19
+    assert calls.value == len(src)
 
 
 def test_dedup_segments_keep_first_semantics(spark):

@@ -14,6 +14,8 @@ from distributed_system___ocr_spark.operators.partitioning import (
 )
 from distributed_system___ocr_spark.pipeline import read_extracted, run_pipeline
 
+from conftest import jobs_of_call
+
 
 def test_end_to_end(spark, pages, tmp_path):
     out = str(tmp_path / "out")
@@ -245,21 +247,6 @@ def test_error_rows_counted_complete(spark):
 JOBS_PER_CALL = {"full": (14, 9), "resume": (21, 10), "empty": (5, 3)}
 
 
-def _jobs_of_call(sc, group, fn):
-    """Run ``fn`` under job group ``group``; returns (result, job ids of
-    the group, job ids started during the call WITHOUT any group)."""
-    tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    new_ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped
-    return out, set(tracker.getJobIdsForGroup(group)), new_ungrouped
-
-
 def test_calls_run_few_jobs_all_in_callers_group(spark, pages, tmp_path):
     """A full run, a resume and an empty resume each run at most the
     measured number of jobs, and every one of them — the lineage and
@@ -274,7 +261,7 @@ def test_calls_run_few_jobs_all_in_callers_group(spark, pages, tmp_path):
         ("empty", pages, "j3"),
     ]
     for name, df, rid in calls:
-        info, grouped, stray = _jobs_of_call(
+        info, grouped, stray = jobs_of_call(
             sc, f"jobs-{name}-{tmp_path.name}",
             lambda: run_pipeline(spark, df, out, run_id=rid,
                                  num_partitions=4),
