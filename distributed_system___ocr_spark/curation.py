@@ -516,31 +516,26 @@ def _checkpointed_bands(docs: DataFrame) -> DataFrame:
     """``docs``' minhash bands, localCheckpointed: the band join reads
     them more than once, and exchange reuse does not cover a side AQE
     broadcasts, so an unmaterialized band frame runs the minhash
-    kernel once per reference."""
-    return minhash_bands(docs, id_col="url", text_col="text").localCheckpoint()
+    kernel once per reference. Lazy: the first job that reads them
+    (the band join's) stores them, so the kernel runs inside the
+    near-dup call rather than in a job of its own before it."""
+    return minhash_bands(
+        docs, id_col="url", text_col="text"
+    ).localCheckpoint(eager=False)
 
 
-def neardup_survivors(
-    docs: DataFrame, bands: DataFrame | None = None
-) -> DataFrame:
+def neardup_survivors(docs: DataFrame, bands: DataFrame) -> DataFrame:
     """Drop near-duplicates: LSH candidate pairs -> connected
     components -> keep the min-url representative of each cluster
     (component label IS the min reachable url).
 
-    ``bands``: ``docs``' checkpointed bands (``_checkpointed_bands``)
-    when the caller keeps them for later use — the chain writes the
-    survivors' bands from them; computed and released here otherwise."""
-    owned = bands is None
-    if owned:
-        bands = _checkpointed_bands(docs)
-    try:
-        labels = connected_components(
-            docs.select("url"), lsh_candidate_pairs(bands),
-            vertex_col="url", src="a_id", dst="b_id",
-        )
-    finally:
-        if owned:
-            _free_ckpt(bands)  # the labels no longer read the pairs
+    ``bands``: ``docs``' checkpointed bands (``_checkpointed_bands``),
+    owned by the caller — the chain writes the survivors' bands from
+    them after this stage."""
+    labels = connected_components(
+        docs.select("url"), lsh_candidate_pairs(bands),
+        vertex_col="url", src="a_id", dst="b_id",
+    )
     keep = labels.filter(F.col("id") == F.col("component")).select(
         F.col("id").alias("url")
     )
@@ -569,7 +564,7 @@ _PROCESSED_SCHEMA = "url string"
 
 
 def _survivor_band_writes(
-    survivors: DataFrame, run_dir: str, bands: DataFrame | None
+    survivors: DataFrame, run_dir: str, bands: DataFrame
 ) -> list[tuple]:
     """The ``write_concurrently`` entries that persist the survivors'
     LSH band values AND content hashes beside the survivors — 16+1
@@ -582,15 +577,10 @@ def _survivor_band_writes(
     ``bands``: the near-dup stage's checkpointed bands, semi-joined on
     the survivor urls. No stage after near-dup rewrites text (each
     only filters or adds columns), so they are exactly the survivors'
-    bands; they are recomputed from survivor text only without them."""
-    if bands is None:
-        bands = minhash_bands(
-            survivors.select("url", "text"), id_col="url", text_col="text"
-        )
-    else:
-        bands = bands.join(
-            survivors.select(F.col("url").alias("id")), "id", "left_semi"
-        )
+    bands."""
+    bands = bands.join(
+        survivors.select(F.col("url").alias("id")), "id", "left_semi"
+    )
     hashes = survivors.select(
         "url", F.md5(F.col("text").cast("binary")).alias("content_hash")
     )
@@ -1169,7 +1159,8 @@ def run_curation(
 
     # the near-dup stage's checkpointed bands: the survivor-band write
     # semi-joins them instead of re-minhashing the survivors; released
-    # on every exit below
+    # on every exit below. Both stage lists run the near-dup stage, so
+    # they are set whenever the tail runs.
     stage_bands: DataFrame | None = None
 
     def neardup_stage(df: DataFrame) -> DataFrame:

@@ -463,7 +463,7 @@ def test_increment_fully_resumed_batch_commits_with_split_fracs(
 # components' edges were checkpointed and the tail's bookkeeping jobs
 # cut, now). Each job costs ~0.1 s JVM-only and 0.3-0.5 s with a
 # Python UDF.
-CURATION_JOBS_PER_CALL = {"full": (30, 27), "increment": (52, 44)}
+CURATION_JOBS_PER_CALL = {"full": (30, 26), "increment": (52, 43)}
 
 
 def test_curation_calls_run_few_jobs_all_in_callers_group(spark, tmp_path):
