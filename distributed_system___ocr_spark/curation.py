@@ -59,7 +59,11 @@ from .functions.bucket import split_stamp
 from .functions.minhash import BAND_SIZE, N_HASHES, TOKEN_HASH_VERSION
 from .functions.tokens import dup_bigram_fraction
 from .operators import sampling, textdedup
-from .operators.components import _free_ckpt, connected_components
+from .operators.components import (
+    _counted_ckpt,
+    _free_ckpt,
+    connected_components,
+)
 from .operators.neardup import lsh_candidate_pairs, minhash_bands
 from .operators.packing import (
     chunk_text,
@@ -71,7 +75,11 @@ from .operators.urlcanon import URL_CANON_VERSION, canonicalize_docs
 from .operators.diversify import CLUSTER_BALANCE_VERSION
 from .operators.lmquality import lm_quality_tail_drop
 from .operators.semdedup import SEMDEDUP_EMBED_VERSION
-from .operators.urlfilter import URL_FILTER_VERSION, filter_blocked_domains
+from .operators.urlfilter import (
+    URL_FILTER_VERSION,
+    filter_blocked_domains,
+    normalized_domain,
+)
 from .writes import write_concurrently
 
 _CKPT = "_checkpoint"
@@ -321,31 +329,95 @@ def _nonblank():
     return F.col("text").isNotNull() & (F.length("text") > 0)
 
 
-def _fingerprint_and_raw(raw: DataFrame) -> tuple[dict, int]:
-    """ONE aggregation job over the raw frame: raw row count (for the
-    lineage 'input' stage), non-blank row count, and decimal sum of
-    xxhash64(url, text, lang) over non-blank rows (decimal so a
-    10^12-row sum cannot overflow under ANSI; lang is hashed because
-    it drives packing bins and survivor metadata — a re-labelled
-    corpus must re-curate)."""
+def _fingerprints(
+    docs: DataFrame,
+    eval_docs: DataFrame | None = None,
+    embeddings: DataFrame | None = None,
+    blocked: DataFrame | None = None,
+) -> tuple[dict, int, dict]:
+    """Every content fingerprint of a run's inputs from ONE aggregation
+    over the union of the inputs' per-row hashes; each value is the
+    formula its input always had, aggregated over that input's rows
+    only. Returns (the docs' fingerprint, the raw docs count, the
+    other inputs' fingerprints by name).
+
+    - docs: raw row count (for the lineage 'input' stage), non-blank
+      row count, and the decimal sum of xxhash64(url, text, lang) over
+      non-blank rows (decimal so a 10^12-row sum cannot overflow under
+      ANSI; lang is hashed because it drives packing bins and survivor
+      metadata — a re-labelled corpus must re-curate);
+    - ``eval_docs`` (decontamination reads only text): count(text) and
+      the sum of xxhash64(text) over every row, a null text included;
+    - ``embeddings`` (url, v): a changed embedding model changes which
+      docs are semantic near-dups. The vector hashes through its
+      canonical string form (stable Spark double formatting) —
+      xxhash64 over array columns is version-sensitive;
+    - ``blocked`` (first column = domain): hashed over the distinct
+      NORMALIZED domains (the form the filter matches on), so
+      spelling-only edits that cannot change the output don't force a
+      re-curate."""
     nb = _nonblank()
-    row = raw.agg(
-        F.count("*").alias("n_raw"),
-        F.count(F.when(nb, 1)).alias("n"),
-        F.sum(
-            F.when(
-                nb,
-                F.xxhash64(F.col("url"), F.col("text"), F.col("lang")),
-            ).cast("decimal(38,0)")
-        ).alias("h"),
+    yes = F.lit(True)
+
+    def part(src: int, df: DataFrame, counted, summed, h) -> DataFrame:
+        return df.select(
+            F.lit(src).alias("src"), counted.alias("c"), summed.alias("s"),
+            h.alias("h"),
+        )
+
+    parts = [part(0, docs, nb, nb, F.xxhash64("url", "text", "lang"))]
+    if eval_docs is not None:
+        parts.append(part(
+            1, eval_docs, F.col("text").isNotNull(), yes,
+            F.xxhash64("text"),
+        ))
+    if embeddings is not None:
+        parts.append(part(
+            2, embeddings, yes, yes,
+            F.xxhash64(F.col("url"), F.col("v").cast("string")),
+        ))
+    if blocked is not None:
+        dom = normalized_domain(F.col(blocked.columns[0]))
+        parts.append(part(
+            3, blocked.select(dom.alias("d")).distinct(), yes, yes,
+            F.xxhash64("d"),
+        ))
+    folded = parts[0]
+    for p in parts[1:]:
+        folded = folded.unionByName(p)
+    src = F.col("src")
+    row = folded.agg(
+        F.count(F.when(src == 0, 1)).alias("raw"),
+        *[
+            agg
+            for k in range(4)
+            for agg in (
+                F.count(F.when((src == k) & F.col("c"), 1)).alias(f"n{k}"),
+                F.sum(
+                    F.when((src == k) & F.col("s"), F.col("h"))
+                    .cast("decimal(38,0)")
+                ).alias(f"h{k}"),
+            )
+        ],
     ).collect()[0]
-    fp = {"n_docs": row["n"], "content_sum": str(row["h"])}
-    return fp, row["n_raw"]
+
+    def fp(k: int, n_key: str) -> dict:
+        return {n_key: row[f"n{k}"], "content_sum": str(row[f"h{k}"])}
+
+    others = {}
+    for k, name, n_key, df in (
+        (1, "decon", "n_docs", eval_docs),
+        (2, "semdedup", "n_vecs", embeddings),
+        (3, "url_blocklist", "n_domains", blocked),
+    ):
+        if df is not None:
+            others[name] = fp(k, n_key)
+    return fp(0, "n_docs"), row["raw"], others
 
 
 def input_fingerprint(docs: DataFrame) -> dict:
     """Order-independent content identity of a (non-blank) corpus."""
-    return _fingerprint_and_raw(docs)[0]
+    return _fingerprints(docs)[0]
 
 
 def quality_gate(
@@ -671,9 +743,9 @@ def exact_dedup_survivors_incremental(
 def neardup_survivors_incremental(
     new_docs: DataFrame,
     base: DataFrame,
+    new_bands: DataFrame,
     base_bands: DataFrame | None = None,
     bloom_prefilter: bool = False,
-    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Keep-first near-dup pruning for an increment: band-join the
     new batch's signatures against (base ∪ new) bands; a new doc in
@@ -702,15 +774,12 @@ def neardup_survivors_incremental(
     (``bloom_semi_reduce``).
 
     ``new_bands``: the batch's checkpointed bands
-    (``_checkpointed_bands``) when the caller keeps them for later
-    use; computed and released here otherwise. Checkpointed either
-    way: the bloom build, the pair join's probe side and the union
-    below would each re-run the minhash kernel otherwise."""
+    (``_checkpointed_bands``), owned by the caller — the chain writes
+    the survivors' bands from them. Checkpointed because the bloom
+    build, the pair join's probe side and the union below would each
+    re-run the minhash kernel otherwise."""
     from .functions.bloom import bloom_semi_reduce, fits_broadcast
 
-    owned = new_bands is None
-    if owned:
-        new_bands = _checkpointed_bands(new_docs)
     if base_bands is None:
         base_bands = minhash_bands(base, id_col="url", text_col="text")
     if bloom_prefilter and not fits_broadcast(base_bands):
@@ -747,14 +816,9 @@ def neardup_survivors_incremental(
         .unionByName(new_docs.select("url"))
         .distinct()
     )
-    try:
-        labels = connected_components(
-            vertices, pairs,
-            vertex_col="url", src="a_id", dst="b_id",
-        )
-    finally:
-        if owned:
-            _free_ckpt(new_bands)  # read only through the pairs
+    labels = connected_components(
+        vertices, pairs, vertex_col="url", src="a_id", dst="b_id",
+    )
     # the pairs' checkpoint blocks are NOT freed here: unlike
     # semdedup_survivors (whose vertex set comes straight from docs),
     # this vertex set derives from the pairs, so the returned frame
@@ -839,45 +903,6 @@ def pack_chunks_greedy(
         bucketed, pack_target, "_bkt", ["url", "chunk_idx"],
         part_col=list(part_cols),
     ).drop("_bkt")
-
-
-def _eval_fingerprint(eval_docs: DataFrame) -> dict:
-    """Order-independent content identity of a decontamination eval
-    corpus (text column only — that is all decontamination reads)."""
-    row = eval_docs.agg(
-        F.count("text").alias("n"),
-        F.sum(F.xxhash64(F.col("text")).cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return {"n_docs": row["n"], "content_sum": str(row["h"])}
-
-
-def _embeddings_fingerprint(emb: DataFrame) -> dict:
-    """Order-independent content identity of an external SemDeDup
-    embeddings frame (url, v): a changed embedding model changes which
-    docs are semantic near-dups, so it must re-curate. The vector
-    hashes through its canonical string form (stable Spark double
-    formatting) — xxhash64 over array columns is version-sensitive."""
-    row = emb.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.xxhash64(F.col("url"), F.col("v").cast("string"))
-            .cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    return {"n_vecs": row["n"], "content_sum": str(row["h"])}
-
-
-def _blocklist_fingerprint(blocked: DataFrame) -> dict:
-    """Order-independent content identity of a DataFrame blocklist
-    (first column = domain), hashed over the NORMALIZED domain (the
-    form the filter matches on), so spelling-only edits that cannot
-    change the output don't force a re-curate."""
-    dom = F.lower(F.regexp_replace(F.col(blocked.columns[0]), r"^\.", ""))
-    row = blocked.select(dom.alias("d")).distinct().agg(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64(F.col("d")).cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return {"n_domains": row["n"], "content_sum": str(row["h"])}
 
 
 def run_curation(
@@ -1056,10 +1081,16 @@ def run_curation(
     # blank rows can't train and would all collide on one content
     # hash; drop them up front, counted in the lineage 'input' stage
     # (raw -> non-blank), mirroring the extraction pipeline's O2
-    # filter. The raw count and the fingerprint come from ONE
-    # aggregation job over the raw frame.
+    # filter. The raw count and every input's fingerprint come from
+    # ONE aggregation over the raw frame and the other inputs.
     docs = docs.select("url", "text", "lang")
-    fp, n_raw = _fingerprint_and_raw(docs)
+    fp, n_raw, input_fps = _fingerprints(
+        docs, eval_docs=decon_eval, embeddings=semdedup_embeddings,
+        blocked=(
+            blocked_domains if isinstance(blocked_domains, DataFrame)
+            else None
+        ),
+    )
     docs = docs.filter(_nonblank())
     # every knob that changes the output is part of the dataflow
     # identity: the same corpus under a different chunk/pack or gate
@@ -1081,7 +1112,7 @@ def run_curation(
             # re-curate, not falsely no-op-resume
             fp["url_blocklist"] = [
                 URL_FILTER_VERSION,
-                ["external", _blocklist_fingerprint(blocked_domains)],
+                ["external", input_fps["url_blocklist"]],
             ]
         else:
             doms = sorted(
@@ -1110,13 +1141,13 @@ def run_curation(
         provider = (
             ["feature_hash", SEMDEDUP_EMBED_VERSION]
             if semdedup_embeddings is None
-            else ["external", _embeddings_fingerprint(semdedup_embeddings)]
+            else ["external", input_fps["semdedup"]]
         )
         fp["semdedup"] = [semdedup_tau, provider]
     if decon_eval is not None:
         # the EVAL corpus's content is an input: a changed eval suite
         # changes which docs survive, so it must re-curate
-        fp["decon"] = [decon_ngram, _eval_fingerprint(decon_eval)]
+        fp["decon"] = [decon_ngram, input_fps["decon"]]
     if lm_quality_drop_z is not None:
         fp["lm_quality"] = lm_quality_drop_z
     if cluster_alpha is not None:
@@ -1168,8 +1199,8 @@ def run_curation(
         stage_bands = _checkpointed_bands(df)
         if incremental:
             return neardup_survivors_incremental(
-                df, base, base_bands=base_bands, bloom_prefilter=True,
-                new_bands=stage_bands,
+                df, base, stage_bands, base_bands=base_bands,
+                bloom_prefilter=True,
             )
         return neardup_survivors(df, bands=stage_bands)
 
@@ -1320,10 +1351,23 @@ def run_curation(
     # the chain still free memory as soon as a successor materializes
     # — releasing twice is a harmless no-op
     materialized: list[DataFrame] = []
+    # the frame whose urls form this run's processed manifest: every
+    # url the run EVALUATED — what a later increment resume-anti-joins
+    # against. A full run evaluates every non-blank input url (a thin
+    # url-only projection straight off the scan); a canonicalizing
+    # full run's manifest must carry the POST-canonicalization urls
+    # (the identity the increment's resume compares against — the
+    # raw-url manifest missed every respelled committed url; round-6
+    # advice item 1), and an increment evaluated what survived its
+    # resume. Those stage frames are kept (not early-released) until
+    # the tail writes the manifest.
+    processed_src = docs
 
     def _materialize(df: DataFrame, prev: DataFrame | None):
-        """Eagerly localCheckpoint + count a stage output; release the
-        predecessor's blocks once the successor is materialized.
+        """Eagerly localCheckpoint a stage output, counting its rows in
+        the checkpoint's own job (``components._counted_ckpt``);
+        release the predecessor's blocks once the successor is
+        materialized.
 
         Checkpoint, not persist (round-6): persist caches the DATA but
         keeps the full logical plan, and several stages reference
@@ -1338,15 +1382,11 @@ def run_curation(
         cluster scale a lost block fails the run, which then re-runs
         idempotently under the snapshot barrier (recomputing a 12-stage
         chain from the scan was never a real recovery path at 100 TB)."""
-        # lazy + count: the first action materializes AND checkpoints
-        # in ONE job (eager=True would run a materialize job, then
-        # count() would re-scan all the stored blocks a second time)
-        df = df.localCheckpoint(eager=False)
+        df, seen = _counted_ckpt(df)
         materialized.append(df)
-        n = df.count()
-        if prev is not None:
+        if prev is not None and prev is not processed_src:
             _free_ckpt(prev)
-        return df, n
+        return df, seen["n"]
 
     # in-flight sentinel (round-6 advice): makes a concurrent vacuum
     # fail loudly instead of sweeping this run's staging dirs as
@@ -1367,73 +1407,75 @@ def run_curation(
         # per-stage wall seconds (diagnostic only — lineage counts are
         # the contract; this feeds OPTIMIZATION round measurements)
         stage_sec: dict[str, float] = {}
-        enabled = [(nm, fn) for nm, fn in stage_defs if fn is not None]
-        last_enabled = enabled[-1][0]
-        processed_written = False
+        split_extra = ("split",) if split_fracs is not None else ()
         try:
             cur, prev_cached = docs, None
-            for nm, fn in enabled:
+            for nm, fn in stage_defs:
+                if fn is None:
+                    continue
                 _t0 = _time.monotonic()
-                cur = fn(cur)
-                if nm != last_enabled:
-                    # checkpoint + count intermediates: each enabled
-                    # stage's output feeds both its lineage row and
-                    # the successor's (often multi-pass) dataflow
-                    cur, measured[nm] = _materialize(cur, prev_cached)
-                    prev_cached = cur
-                    stage_sec[nm] = round(_time.monotonic() - _t0, 3)
-                    if nm == "resume_anti_join" or (
-                        nm == "url_canonicalize" and not incremental
-                    ):
-                        # processed manifest: every url this run
-                        # EVALUATED — what a later increment
-                        # resume-anti-joins against. Written HERE,
-                        # while the checkpoint's blocks are still
-                        # alive (_materialize frees each stage once
-                        # its successor lands). For a canonicalizing
-                        # FULL run the manifest must carry the
-                        # POST-canonicalization urls (the identity the
-                        # increment's resume compares against — the
-                        # raw-url manifest missed every respelled
-                        # committed url; round-6 advice item 1).
-                        cur.select("url").write.mode(
-                            "overwrite"
-                        ).parquet(os.path.join(run_dir, "processed"))
-                        processed_written = True
-            _t0 = _time.monotonic()
+                # checkpoint + count every enabled stage: its output
+                # feeds both its lineage row and the successor's
+                # (often multi-pass) dataflow, and the last one feeds
+                # every write of the tail
+                cur, n_survivors = _materialize(fn(cur), prev_cached)
+                measured[nm] = n_survivors
+                prev_cached = cur
+                stage_sec[nm] = round(_time.monotonic() - _t0, 3)
+                if nm == "resume_anti_join" or (
+                    nm == "url_canonicalize" and not incremental
+                ):
+                    processed_src = cur
+            survivors = cur
             if split_fracs is not None:
                 # count-preserving: stamps the deterministic split on
                 # the final survivor set just before the write
-                cur = stamp_split(cur, split_fracs[0], split_fracs[1])
-            # the row count rides along the write (no read-back
-            # count), and the read-back plans with the schema just
-            # written (no footer-inference job)
-            written = Observation()
-            cur.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(survivors_path)
-            n_survivors = written.get["n"]
-            survivors = spark.read.schema(cur.schema).parquet(survivors_path)
-            stage_sec[last_enabled] = round(_time.monotonic() - _t0, 3)
-            if not processed_written:
-                # full run: every non-blank input url was evaluated —
-                # a thin url-only projection straight off the scan.
-                # (A canonicalizing chain writes its manifest from the
-                # canonicalize stage output above; when canonicalize
-                # is the LAST enabled stage the survivors carry the
-                # canonical urls, so read them back instead.)
-                src = (
-                    survivors if canonicalize_urls and not incremental
-                    else docs
+                survivors = stamp_split(
+                    survivors, split_fracs[0], split_fracs[1]
                 )
-                src.select("url").write.mode("overwrite").parquet(
-                    os.path.join(run_dir, "processed")
-                )
+            packed = pack_chunks_greedy(
+                chunk_docs(
+                    survivors, chunk_size, chunk_stride,
+                    extra_cols=split_extra,
+                ),
+                pack_target,
+                part_cols=("lang", *split_extra),
+            )
+            # when the split stage is on, partition the packed layout
+            # by split: a training reader of split=train then PRUNES
+            # the val/test files at the directory level
+            # (PartitionFilters in the scan) instead of scanning and
+            # filtering 100% of the chunk bytes — the read-side win
+            # the stamp exists for. Partition only when there are
+            # rows: a zero-survivor run (e.g. a fully-resumed
+            # increment) partitionBy-writes ONLY _SUCCESS — no schema
+            # file — and every later schema-less read of the
+            # committed dir (read_packed, cumulative unions) would
+            # throw UNABLE_TO_INFER_SCHEMA; the non-partitioned empty
+            # write keeps a schema file, and a split filter on it is
+            # a no-op over zero rows
+            split_part = split_extra if n_survivors > 0 else ()
+            # the tail's writes all read checkpointed frames and are
+            # independent: survivors, the processed manifest, the
+            # survivor bands + hashes (what a future increment joins
+            # against instead of this run's text; survivors-sized,
+            # thin) and the packed chunks run side by side
+            _, _, bands_s, hashes_s, pack_s = write_concurrently([
+                (lambda: survivors, survivors_path),
+                (
+                    lambda: processed_src.select("url"),
+                    os.path.join(run_dir, "processed"),
+                ),
+                *_survivor_band_writes(survivors, run_dir, stage_bands),
+                (lambda: packed, packed_path, *split_part),
+            ])
         finally:
             for p in materialized:
                 _free_ckpt(p)
-
-        measured[last_enabled] = n_survivors
+        _atomic_write(
+            os.path.join(run_dir, _BANDS_META), json.dumps(_band_meta())
+        )
+        stage_sec["_survivor_bands"] = round(max(bands_s, hashes_s), 3)
 
         # per-stage lineage counts: disabled stages pass through
         stage_out: dict[str, int] = {}
@@ -1442,42 +1484,12 @@ def run_curation(
             stage_out[nm] = measured.get(nm, n_prev)
             n_prev = stage_out[nm]
 
-        split_extra = ("split",) if split_fracs is not None else ()
-        packed = pack_chunks_greedy(
-            chunk_docs(
-                survivors, chunk_size, chunk_stride,
-                extra_cols=split_extra,
-            ),
-            pack_target,
-            part_cols=("lang", *split_extra),
-        )
-        # when the split stage is on, partition the packed layout by
-        # split: a training reader of split=train then PRUNES the
-        # val/test files at the directory level (PartitionFilters in
-        # the scan) instead of scanning and filtering 100% of the
-        # chunk bytes — the read-side win the stamp exists for.
-        # Partition only when there are rows: a zero-survivor run
-        # (e.g. a fully-resumed increment) partitionBy-writes ONLY
-        # _SUCCESS — no schema file — and every later schema-less
-        # read of the committed dir (read_packed, cumulative unions)
-        # would throw UNABLE_TO_INFER_SCHEMA; the non-partitioned
-        # empty write keeps a schema file, and a split filter on it
-        # is a no-op over zero rows
-        split_part = split_extra if n_survivors > 0 else ()
-        # survivor bands + hashes (what a future increment joins
-        # against instead of this run's text; survivors-sized, thin)
-        # and the packed chunks are independent: written side by side
-        bands_s, hashes_s, pack_s = write_concurrently([
-            *_survivor_band_writes(survivors, run_dir, stage_bands),
-            (lambda: packed, packed_path, *split_part),
-        ])
-        _atomic_write(
-            os.path.join(run_dir, _BANDS_META), json.dumps(_band_meta())
-        )
-        stage_sec["_survivor_bands"] = round(max(bands_s, hashes_s), 3)
         _t0 = _time.monotonic()
         # one aggregate; a struct is never null, so a null lang counts
-        # as its own bin key, as in distinct().count()
+        # as its own bin key, as in distinct().count(). A distinct
+        # count, not a per-key max(bin_id) + 1: a chunk longer than
+        # pack_target skips bin ids (greedy_pack_bins floors the
+        # running length by the target)
         n_chunks, n_bins = spark.read.schema(packed.schema).parquet(
             packed_path
         ).agg(

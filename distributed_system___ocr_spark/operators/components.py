@@ -42,8 +42,19 @@ DataFrame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _counted_ckpt(df: DataFrame, *aggs: Column) -> tuple[DataFrame, dict]:
+    """Eagerly localCheckpoint ``df`` and observe its row count (``n``)
+    plus any named ``aggs`` on the way: the count rides inside the
+    checkpoint's own job. A lazy checkpoint followed by ``count()``
+    runs one more job, and an eager one followed by ``count()`` re-scans
+    the stored blocks. Returns (checkpointed frame, observed values)."""
+    seen = Observation()
+    ck = df.observe(seen, F.count(F.lit(1)).alias("n"), *aggs)
+    return ck.localCheckpoint(), seen.get
 
 
 def _free_ckpt(df: DataFrame) -> None:
@@ -74,8 +85,8 @@ def connected_components(
     # make each round's neighborhood min INCLUDE the vertex's own
     # label, so a round is ONE join + ONE aggregation — the agg
     # carries the old label out via min(when(d == s)) (the self-loop
-    # row), and the changed count becomes a light scan of the freshly
-    # checkpointed result. The previous shape paid a second
+    # row), and the changed count is observed inside the round's
+    # checkpoint job. The previous shape paid a second
     # labels-sized join for the least() merge and a THIRD join for the
     # changed count, per round (r07 optimization; result-identical,
     # pinned by the existing equality tests).
@@ -112,13 +123,14 @@ def connected_components(
         sym.groupBy("s")
         .agg(F.min("d").alias("component"))
         .select(F.col("s").alias("id"), "component")
-        .localCheckpoint(eager=False)  # materialized by round 1's count
+        .localCheckpoint(eager=False)  # stored by round 1's job
     )
 
     try:
         converged = False
         for _ in range(max_iterations):
-            new_labels = (
+            # the changed-count rides inside the checkpoint's job
+            new_labels, seen = _counted_ckpt(
                 sym.join(labels, F.col("d") == labels["id"])
                 .groupBy("s")
                 .agg(
@@ -127,16 +139,12 @@ def connected_components(
                         F.when(F.col("d") == F.col("s"), F.col("component"))
                     ).alias("_old"),
                 )
-                .select(F.col("s").alias("id"), "component", "_old")
-                # lazy: the changed-count below materializes the
-                # checkpoint and counts in ONE job (eager=True ran a
-                # materialize job, then count scanned the blocks again
-                # — two scheduled jobs per round; r07)
-                .localCheckpoint(eager=False)
+                .select(F.col("s").alias("id"), "component", "_old"),
+                F.count(
+                    F.when(F.col("component") != F.col("_old"), 1)
+                ).alias("changed"),
             )
-            changed = new_labels.filter(
-                F.col("component") != F.col("_old")
-            ).count()
+            changed = seen["changed"]
             _free_ckpt(labels)  # superseded — release its blocks now
             labels = new_labels
             if changed == 0:

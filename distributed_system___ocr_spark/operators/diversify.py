@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .components import _counted_ckpt, _free_ckpt
 from .kmeans import kmeans_train
 from .semdedup import feature_hash_embed, semdedup_k
 from ..functions.bucket import salted_bucket
@@ -94,18 +95,26 @@ def cluster_balanced_keep(
             F.col(id_col).alias("_id"),
             F.transform(F.col("v"), lambda x: x.cast("double")).alias("v"),
         )
-    n = emb.count()
+    # checkpoint the embedded frame, counting it in the same job: the
+    # k-means sample collect and the cell assignment both read it, and
+    # each would re-run the embed kernel over an unmaterialized frame
+    emb, seen = _counted_ckpt(emb)
+    n = seen["n"]
     if n == 0:
+        _free_ckpt(emb)
         # nothing to balance: keep everything, unassigned
         return docs.withColumn("cell", F.lit(None).cast("long"))
     kk = k if k is not None else semdedup_k(n)
-    cents = kmeans_train(emb, k=kk, iters=3, vec_col="v", id_col="_id")
+    cents = kmeans_train(
+        emb, k=kk, iters=3, vec_col="v", id_col="_id", n=n
+    )
     # checkpoint the narrow (id, cell) frame: it feeds BOTH the
-    # per-cell counts and the final join, and the embed UDF would
-    # otherwise re-run the full corpus scan once per subtree
+    # per-cell counts and the final join, and the cell UDF would
+    # otherwise re-run once per subtree
     assigned = emb.select(
         F.col("_id"), ivf_cell_udf(cents)(F.col("v")).alias("cell")
     ).localCheckpoint()
+    _free_ckpt(emb)  # assigned carries (id, cell); emb superseded
     # k-sized (<= 65536 rows): a bounded reducing aggregate, safe to
     # broadcast statically at any corpus size
     counts = assigned.groupBy("cell").agg(F.count("*").alias("_n"))

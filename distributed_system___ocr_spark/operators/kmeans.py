@@ -49,15 +49,19 @@ def default_train_cap(k: int) -> int:
     return max(50_000, 256 * k)
 
 
-def bounded_training_input(emb: DataFrame, cap: int) -> DataFrame:
+def bounded_training_input(
+    emb: DataFrame, cap: int, n: int | None = None
+) -> DataFrame:
     """Deterministic md5-bucket sample of ~cap rows from emb(_id, v).
 
     Keep a row iff conv(md5(_id)[:8], 16, 10) % 2^20 < ceil(cap/n *
     2^20): stateless per-row filter, no RNG, identical across reruns,
     resumes and partitionings (the sample_stratified_docs discipline).
-    One count() job sizes the rate; n <= cap returns emb unchanged, so
+    The row count ``n`` sizes the rate (one count() job when the
+    caller does not know it); n <= cap returns emb unchanged, so
     test-scale fixtures always train on the full table."""
-    n = emb.count()
+    if n is None:
+        n = emb.count()
     if n <= cap:
         return emb
     num = -(-cap * _SAMPLE_DENOM // n)  # ceil — never rounds to empty
@@ -150,6 +154,7 @@ def kmeans_train(
     id_col: str = "vec_id",
     sample_cap: int | None = None,
     strategy: str = "auto",
+    n: int | None = None,
 ) -> list[list[float]]:
     """Train k centroids on emb(id, array<double> v); deterministic:
     init = the k lowest-id vectors in the training input, empty cells
@@ -164,7 +169,9 @@ def kmeans_train(
     decimal-exact partial-agg shuffle, driver sees only k x dim
     doubles); "auto" = local when the input is cap-bounded (always
     memory-safe by construction), distributed when sampling was
-    explicitly disabled (never collect an unbounded table).
+    explicitly disabled (never collect an unbounded table). ``n``:
+    ``emb``'s row count when the caller already knows it (spares the
+    sampler's count job).
 
     Determinism contract: each strategy is SELF-deterministic (same
     input + params -> bit-identical model on rerun), but the two are
@@ -178,7 +185,7 @@ def kmeans_train(
         sample_cap = default_train_cap(k)
     emb = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("v"))
     if sample_cap:
-        emb = bounded_training_input(emb, sample_cap)
+        emb = bounded_training_input(emb, sample_cap, n=n)
     if strategy == "auto":
         strategy = "local" if sample_cap else "distributed"
     if strategy == "local":

@@ -41,7 +41,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import ivf_cell_udf
-from .components import _free_ckpt, connected_components
+from .components import (
+    _counted_ckpt,
+    _free_ckpt,
+    connected_components,
+)
 from .kmeans import kmeans_train
 
 _SEMDEDUP_K_MIN = 16
@@ -262,18 +266,20 @@ def semdedup_survivors(
             F.col(id_col).alias("_id"),
             F.transform(F.col("v"), lambda x: x.cast("double")).alias("v"),
         )
-    # checkpoint the embedded frame: it feeds the count, the k-means
-    # training sample, and (via ``assigned``) BOTH subtrees of the
-    # pair stage — un-materialized, the corpus-sized embed UDF scan
-    # re-runs once per consumer (same reason diversify.py checkpoints
-    # its assignment frame)
-    emb = emb.localCheckpoint()
-    n = emb.count()
+    # checkpoint the embedded frame, counting it in the same job: it
+    # feeds the k-means training sample and (via ``assigned``) BOTH
+    # subtrees of the pair stage — un-materialized, the corpus-sized
+    # embed UDF scan re-runs once per consumer (same reason
+    # diversify.py checkpoints it)
+    emb, seen = _counted_ckpt(emb)
+    n = seen["n"]
     if n == 0:
         _free_ckpt(emb)
         return docs
     k = semdedup_k(n)
-    cents = kmeans_train(emb, k=k, iters=3, vec_col="v", id_col="_id")
+    cents = kmeans_train(
+        emb, k=k, iters=3, vec_col="v", id_col="_id", n=n
+    )
     assigned = emb.withColumn(
         "cell", ivf_cell_udf(cents)(F.col("v"))
     ).localCheckpoint()

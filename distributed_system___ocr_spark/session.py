@@ -92,6 +92,14 @@ def get_spark(
         # the increment compiled 79 and the second chain none (that
         # call took 9.3 s instead of 11.7 s).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no Python call-site capture per DataFrame API call: with it
+        # on, PySpark walks the stack (and tries `import ipykernel`)
+        # for every wrapped call, about half the py4j round trips of a
+        # curation call (on perfbench's seed-1 inputs a warm full call
+        # went 10.0k -> 5.5k round trips, its increment 5.1k -> 2.9k).
+        # The price: an analysis error's message no longer names the
+        # Python line that built the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.retainedJobs", "200")
         .config("spark.ui.retainedStages", "200")
         .config("spark.ui.retainedTasks", "10000")

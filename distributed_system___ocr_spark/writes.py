@@ -1,9 +1,10 @@
 """Independent parquet writes of one public call, run concurrently.
 
 The extraction run writes its lineage and manifest side by side, and
-the curation run writes its survivor bands, content hashes and packed
-chunks side by side: each write is its own Spark job, and on a small
-cluster one job leaves cores idle that the next could use.
+the curation run writes its survivors, processed-url manifest,
+survivor bands, content hashes and packed chunks side by side: each
+write is its own Spark job, and on a small cluster one job leaves
+cores idle that the next could use.
 """
 
 from __future__ import annotations

@@ -1155,3 +1155,91 @@ def test_url_blocklist_stage_dataframe_content_fingerprint(
         spark, docs, out2, run_id="e1", blocked_domains=[],
     )
     assert info0["n_after_url_blocklist"] == info0["n_input"]
+
+
+def test_input_fingerprints_fold_equals_separate_aggregates(spark):
+    """The one aggregation over every input gives each fingerprint the
+    value its own aggregate gave, so a committed snapshot's
+    ``input_fingerprint`` still compares equal: a blank doc counts in
+    the raw count only, and a null eval text is summed (xxhash64 of a
+    null is the seed) but not counted."""
+    from distributed_system___ocr_spark.curation import _fingerprints
+
+    docs = _docs(spark, n=8)
+    evals = spark.createDataFrame(pd.DataFrame(
+        {"text": ["an eval prompt here", None, "another eval prompt"]}
+    ))
+    emb = spark.createDataFrame(pd.DataFrame({
+        "url": ["https://ex.com/d000", "https://ex.com/d001"],
+        "v": [[0.5, 1.0], [0.25, -2.0]],
+    }))
+    blocked = spark.createDataFrame(pd.DataFrame(
+        {"d": [".Evil.NET", "evil.net", "Blocked.Example.com", None]}
+    ))
+
+    def agg(df, n, h):
+        row = df.agg(
+            n.alias("n"), F.sum(h.cast("decimal(38,0)")).alias("h")
+        ).collect()[0]
+        return row["n"], str(row["h"])
+
+    nb = F.col("text").isNotNull() & (F.length("text") > 0)
+    n_raw = docs.count()
+    n, h = agg(
+        docs, F.count(F.when(nb, 1)),
+        F.when(nb, F.xxhash64(F.col("url"), F.col("text"), F.col("lang"))),
+    )
+    en, eh = agg(evals, F.count("text"), F.xxhash64(F.col("text")))
+    vn, vh = agg(
+        emb, F.count("*"),
+        F.xxhash64(F.col("url"), F.col("v").cast("string")),
+    )
+    dom = F.lower(F.regexp_replace(F.col("d"), r"^\.", ""))
+    bn, bh = agg(
+        blocked.select(dom.alias("d")).distinct(), F.count("*"),
+        F.xxhash64(F.col("d")),
+    )
+    assert (n_raw - n, en) == (1, 2)  # the fixture has both edge cases
+
+    fp, raw, others = _fingerprints(
+        docs, eval_docs=evals, embeddings=emb, blocked=blocked
+    )
+    assert (fp, raw) == ({"n_docs": n, "content_sum": h}, n_raw)
+    assert others == {
+        "decon": {"n_docs": en, "content_sum": eh},
+        "semdedup": {"n_vecs": vn, "content_sum": vh},
+        "url_blocklist": {"n_domains": bn, "content_sum": bh},
+    }
+    assert _fingerprints(docs) == (fp, raw, {})
+
+
+def test_pack_count_is_distinct_bins_when_chunks_exceed_target(
+    spark, tmp_path
+):
+    """With chunk_size > pack_target a chunk longer than the target
+    skips bin ids (bin_id = floor(running length / target)), so the
+    lineage 'pack' count is the number of DISTINCT bins, not a per-key
+    max(bin_id) + 1."""
+    rows = [
+        {"url": f"https://ex.com/long{i:02d}",
+         "text": " ".join(f"t{i:02d}x{j:03d}" for j in range(250)),
+         "lang": "en"}
+        for i in range(6)
+    ]
+    out = str(tmp_path / "cur")
+    info = run_curation(
+        spark, spark.createDataFrame(pd.DataFrame(rows)), out,
+        run_id="p1", chunk_size=4096, chunk_stride=4096, pack_target=1000,
+    )
+    lin = {
+        r["stage"]: (r["n_in"], r["n_out"])
+        for r in spark.read.parquet(info["lineage_path"]).collect()
+    }
+    assert lin["pack"] == (6, 6) and info["n_bins"] == 6
+    # one 1,999-char chunk per doc: the max + 1 shortcut would report
+    # 10 bins
+    bins = [
+        r["bin_id"]
+        for r in spark.read.parquet(info["packed_path"]).collect()
+    ]
+    assert sorted(bins) == [0, 1, 3, 5, 7, 9]

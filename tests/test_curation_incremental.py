@@ -459,35 +459,79 @@ def test_increment_fully_resumed_batch_commits_with_split_fracs(
 
 
 # Spark jobs per call on this file's fixture (`_base_docs` full run,
-# then the `_inc_docs` increment): (before the near-dup bands and the
-# components' edges were checkpointed and the tail's bookkeeping jobs
-# cut, now). Each job costs ~0.1 s JVM-only and 0.3-0.5 s with a
-# Python UDF.
-CURATION_JOBS_PER_CALL = {"full": (30, 26), "increment": (52, 43)}
+# then the `_inc_docs` increment): (before each checkpoint was counted
+# inside its own job and the tail's writes ran side by side, now).
+# Each job costs ~0.1 s JVM-only and 0.3-0.5 s with a Python UDF.
+CURATION_JOBS_PER_CALL = {"full": (26, 25), "increment": (45, 43)}
+# the same with every opt-in stage on (`_all_stage_kwargs`), which adds
+# the SemDeDup, cluster-balance and components-round checkpoints
+ALL_STAGE_JOBS_PER_CALL = {"full": (98, 80), "increment": (52, 45)}
 
 
-def test_curation_calls_run_few_jobs_all_in_callers_group(spark, tmp_path):
-    """A full run and an increment each run at most the measured number
-    of jobs, and every one of them — the survivor-band, hash and packed
-    writes on their own threads included — carries the caller's job
-    group."""
+def _all_stage_kwargs(spark, n_docs: int) -> tuple[dict, dict]:
+    """Every opt-in stage, in the kwargs shape of the benchmark's
+    curation chain: (full run, increment)."""
+    per_doc = dict(
+        blocked_domains=["host19.example.com"],
+        quality_min_chars=30,
+        domain_cap=max(1, n_docs // 4),
+        decon_eval=spark.createDataFrame(pd.DataFrame(
+            {"text": ["benchmark holdout prompt zq1a zq1b zq1c zq1d"]}
+        )),
+        split_fracs=(0.9, 0.05),
+    )
+    full = dict(
+        per_doc,
+        remove_spans_min_docs=max(2, n_docs // 40),
+        segment_dedup_n=32,
+        semdedup_tau=0.92,
+        lm_quality_drop_z=2.0,
+        cluster_alpha=0.5,
+        sample_alpha=0.7,
+    )
+    return full, per_doc
+
+
+def _assert_few_jobs_in_callers_group(
+    spark, tmp_path, bounds, full_kw=None, inc_kw=None
+):
     out = str(tmp_path / "cur")
     sc = spark.sparkContext
     base, inc = _base_docs(spark), _inc_docs(spark)
     calls = [
-        ("full", lambda: run_curation(spark, base, out, run_id="base")),
+        ("full", lambda: run_curation(
+            spark, base, out, run_id="base", **(full_kw or {}))),
         ("increment", lambda: run_curation_increment(
-            spark, inc, out, run_id="inc1")),
+            spark, inc, out, run_id="inc1", **(inc_kw or {}))),
     ]
     for name, call in calls:
         info, grouped, stray = jobs_of_call(
             sc, f"curation-{name}-{tmp_path.name}", call
         )
-        before, now = CURATION_JOBS_PER_CALL[name]
+        before, now = bounds[name]
         assert now < before
         assert 0 < len(grouped) <= now, (name, len(grouped))
         assert not stray, (name, sorted(stray))
         assert info["n_survivors"] > 0
+
+
+def test_curation_calls_run_few_jobs_all_in_callers_group(spark, tmp_path):
+    """A full run and an increment each run at most the measured number
+    of jobs, and every one of them — the survivors, manifest, band,
+    hash and packed writes on their own threads included — carries the
+    caller's job group."""
+    _assert_few_jobs_in_callers_group(
+        spark, tmp_path, CURATION_JOBS_PER_CALL
+    )
+
+
+def test_all_stage_curation_calls_run_few_jobs(spark, tmp_path):
+    """The same bound with every opt-in stage on, so the SemDeDup,
+    cluster-balance and components-round checkpoints are pinned too."""
+    full_kw, inc_kw = _all_stage_kwargs(spark, _base_docs(spark).count())
+    _assert_few_jobs_in_callers_group(
+        spark, tmp_path, ALL_STAGE_JOBS_PER_CALL, full_kw, inc_kw
+    )
 
 
 def test_written_bands_equal_minhash_of_survivors(spark, tmp_path):

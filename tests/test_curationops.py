@@ -711,6 +711,24 @@ def test_connected_components_runs_the_edge_pipeline_once(spark):
     assert calls.value == len(src)
 
 
+def test_counted_checkpoint_count_equals_count(spark):
+    """The checkpoint helper's observed count equals ``count()``, on a
+    non-empty and on an empty frame, with an extra aggregate riding
+    along."""
+    from distributed_system___ocr_spark.operators.components import (
+        _counted_ckpt,
+    )
+
+    full = spark.range(100).groupBy(
+        (F.col("id") % 7).alias("k")
+    ).count()
+    empty = full.filter(F.col("k") < 0)
+    for df, total in ((full, 100), (empty, None)):
+        ck, seen = _counted_ckpt(df, F.sum("count").alias("total"))
+        assert seen["n"] == df.count() == ck.count()
+        assert seen["total"] == total
+
+
 def test_dedup_segments_keep_first_semantics(spark):
     """Keep-first gate must fire; every distinct tile survives EXACTLY
     once corpus-wide, at its global min-(doc_id, s) occurrence; docs
@@ -798,6 +816,34 @@ def test_cluster_balanced_sample_flattens_and_keeps_smallest(spark):
     assert 230 <= len(big) <= 305
     # flatter than the 9:1 input ratio
     assert len(big) / len(small) < 8
+
+
+def test_cluster_balance_embeds_each_doc_once(spark):
+    """Cluster balance checkpoints its embedded frame once: the count,
+    the k-means sample collect and the cell assignment read it, and
+    each would re-run the embedding kernel without the checkpoint."""
+    from distributed_system___ocr_spark.operators.diversify import (
+        cluster_balanced_keep,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("array<double>")
+    def counted(i: pd.Series) -> pd.Series:
+        calls.add(len(i))
+        # 30 docs on one axis, 10 on another: a dominant cell
+        return i.map(lambda x: [1.0, 0.0] if x < 30 else [0.0, 1.0])
+
+    urls = [f"https://ex.com/d{i:03d}" for i in range(40)]
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"url": urls, "text": [f"doc {i}" for i in range(40)]}
+    ))
+    emb = spark.createDataFrame(pd.DataFrame(
+        {"url": urls, "i": list(range(40))}
+    )).select("url", counted("i").alias("v"))
+    kept = cluster_balanced_keep(docs, alpha=0.5, embeddings=emb, k=2)
+    assert 10 < kept.count() < 40
+    assert calls.value == len(urls)
 
 
 def test_cluster_balance_bucket_independent_of_unsalted_bucket(spark):

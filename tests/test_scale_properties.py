@@ -545,6 +545,7 @@ def test_incremental_dedup_bloom_equals_exact(spark, no_broadcast):
     import pandas as pd
 
     from distributed_system___ocr_spark.curation import (
+        _checkpointed_bands,
         exact_dedup_survivors_incremental,
         neardup_survivors_incremental,
     )
@@ -571,25 +572,26 @@ def test_incremental_dedup_bloom_equals_exact(spark, no_broadcast):
                      "text": base_rows[5]["text"].replace(
                          "b005w30", "tweak"), "lang": "en"})
     new = spark.createDataFrame(pd.DataFrame(new_rows))
+    new_bands = _checkpointed_bands(new)
 
-    for helper in (
-        exact_dedup_survivors_incremental,
-        neardup_survivors_incremental,
+    for helper, kw in (
+        (exact_dedup_survivors_incremental, {}),
+        (neardup_survivors_incremental, {"new_bands": new_bands}),
     ):
         plain = {
             r["url"]
-            for r in helper(new, base, bloom_prefilter=False).collect()
+            for r in helper(new, base, bloom_prefilter=False, **kw).collect()
         }
         bloomed = {
             r["url"]
-            for r in helper(new, base, bloom_prefilter=True).collect()
+            for r in helper(new, base, bloom_prefilter=True, **kw).collect()
         }
         assert bloomed == plain, helper.__name__
         assert "https://z.com/exact" not in bloomed
     assert "https://z.com/near" not in {
         r["url"]
         for r in neardup_survivors_incremental(
-            new, base, bloom_prefilter=True
+            new, base, new_bands, bloom_prefilter=True
         ).collect()
     }
 

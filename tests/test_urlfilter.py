@@ -82,3 +82,28 @@ def test_literal_path_plan_is_scan_stage_only(docs):
     )
     for bad in ("Exchange", "Join", "BatchEvalPython"):
         assert bad not in plan, plan
+
+
+def test_host_of_equals_lower_on_mixed_hosts(spark):
+    """ASCII hosts are lowercased by translate, non-ASCII ones by
+    lower(): the result equals lowering every host with lower()."""
+    urls = [
+        "HTTPS://A.B.Example.COM:8443",
+        "http://ÄB.Example.com",
+        "https://İSTANBUL.example.com",
+        "https://ΣΑΣ.gr",
+        "no-scheme-here",
+        None,
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"url": urls}))
+    authority = F.regexp_extract(
+        F.col("url"), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]+)", 1
+    )
+    no_user = F.regexp_replace(authority, r"^[^@]*@", "")
+    lowered = F.lower(F.regexp_replace(no_user, r":\d+$", ""))
+    rows = df.select(
+        host_of(F.col("url")).alias("h"), lowered.alias("l")
+    ).collect()
+    assert [r["h"] for r in rows] == [r["l"] for r in rows]
+    assert rows[0]["h"] == "a.b.example.com"
+    assert rows[1]["h"] == "äb.example.com"
