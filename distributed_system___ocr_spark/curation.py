@@ -48,13 +48,17 @@ or the span-removal rebuild, which run in the scan stage.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import time
 import uuid
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.bloom import bloom_semi_reduce, fits_broadcast
 from .functions.bucket import split_stamp
 from .functions.minhash import BAND_SIZE, N_HASHES, TOKEN_HASH_VERSION
 from .functions.tokens import dup_bigram_fraction
@@ -70,7 +74,8 @@ from .operators.packing import (
     greedy_pack_bins,
     monotone_hash_bucket,
 )
-from .operators.resume import _atomic_write
+from .operators.resume import _atomic_write, _ckpt, _publish
+from .operators.resume import load_snapshot as load_curation_snapshot
 from .operators.urlcanon import URL_CANON_VERSION, canonicalize_docs
 from .operators.diversify import CLUSTER_BALANCE_VERSION
 from .operators.lmquality import lm_quality_tail_drop
@@ -81,8 +86,6 @@ from .operators.urlfilter import (
     normalized_domain,
 )
 from .writes import write_concurrently
-
-_CKPT = "_checkpoint"
 
 # Version of the curation DATAFLOW itself: bump whenever any stage's
 # algorithm changes its output for the same input + config, so a code
@@ -102,20 +105,6 @@ _CKPT = "_checkpoint"
 # survivor), changing the survivor set of any committed run that
 # passed semdedup_embeddings.
 CURATION_DATAFLOW_VERSION = 5
-
-
-def _ckpt(out_dir: str) -> str:
-    return os.path.join(out_dir, _CKPT)
-
-
-def load_curation_snapshot(out_dir: str) -> dict | None:
-    latest = os.path.join(_ckpt(out_dir), "LATEST")
-    if not os.path.exists(latest):
-        return None
-    with open(latest) as f:
-        name = f.read().strip()
-    with open(os.path.join(_ckpt(out_dir), name)) as f:
-        return json.load(f)
 
 
 def _committed_run_history(out_dir: str, n: int) -> list[str]:
@@ -170,6 +159,60 @@ def _pid_start(pid: int) -> int | None:
         return None
 
 
+@contextlib.contextmanager
+def _inflight(out_dir: str, run_id: str):
+    """Hold ``run_id``'s in-flight sentinel (pid + kernel start time:
+    a recycling-proof liveness identity) for the ``with`` body, so a
+    concurrent vacuum or compaction fails loudly instead of sweeping
+    the run's staging dirs as debris. Removed on EVERY exit, so only a
+    hard process kill leaves one (and those go stale — see
+    ``_live_inflight_runs``)."""
+    os.makedirs(_ckpt(out_dir), exist_ok=True)
+    sentinel = _inflight_path(out_dir, run_id)
+    pid, start = os.getpid(), _pid_start(os.getpid())
+    with open(sentinel, "w") as f:
+        f.write(f"{pid}:{start}" if start is not None else str(pid))
+    try:
+        yield
+    finally:
+        try:
+            os.remove(sentinel)
+        except OSError:
+            pass
+
+
+def _reject_replay(snap: dict | None, run_id: str, error: str) -> None:
+    """Raise ``error`` when ``run_id`` is committed in ``snap`` or was
+    vacuumed: a vacuumed run's data is gone, but reusing its id would
+    make old lineage/export paths ambiguous."""
+    if snap and run_id in (
+        set(snap["runs"]) | set(snap.get("vacuumed_runs", []))
+    ):
+        raise ValueError(error)
+
+
+def _next_snapshot(
+    prev: dict | None, run_id: str, fp: dict | None, parent: str | None
+) -> dict:
+    """The snapshot that commits ``run_id`` over ``prev``, recording
+    which run it extended (``parent``; None for a base): the parent
+    map drives cumulative reads and vacuum's ancestor-retention
+    closure. Vacuumed run_ids carry over into the replay guard."""
+    snap = {
+        "n": (prev["n"] + 1) if prev else 0,
+        "runs": sorted(set(prev["runs"] if prev else ()) | {run_id}),
+        "input_fingerprint": fp,
+        "latest_run": run_id,
+        "run_parents": {
+            **(prev.get("run_parents", {}) if prev else {}),
+            run_id: parent,
+        },
+    }
+    if prev and prev.get("vacuumed_runs"):
+        snap["vacuumed_runs"] = prev["vacuumed_runs"]
+    return snap
+
+
 def _live_inflight_runs(out_dir: str) -> list[str]:
     """Sentinels of curation runs that look alive: pid still running,
     or (pid unreadable/foreign) younger than the staleness bound.
@@ -179,8 +222,6 @@ def _live_inflight_runs(out_dir: str) -> list[str]:
     if not os.path.isdir(ck):
         return []
     live = []
-    import time
-
     for name in os.listdir(ck):
         if not name.startswith(_INFLIGHT_PREFIX):
             continue
@@ -229,6 +270,25 @@ def _live_inflight_runs(out_dir: str) -> list[str]:
     return live
 
 
+def _latest_committed(out_dir: str) -> tuple[dict, str]:
+    """The current snapshot and its latest run (the chain head)."""
+    snap = load_curation_snapshot(out_dir)
+    if not snap:
+        raise FileNotFoundError(f"no committed curation under {out_dir}")
+    return snap, snap.get("latest_run", snap["runs"][-1])
+
+
+def _reject_inflight(out_dir: str, risk: str) -> None:
+    """Fail loudly while another curation run looks in flight."""
+    live = _live_inflight_runs(out_dir)
+    if live:
+        raise RuntimeError(
+            f"curation run(s) {live} appear to be in flight under "
+            f"{out_dir}; {risk} — wait for them or remove the stale "
+            "INFLIGHT-* sentinel if you are sure"
+        )
+
+
 def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
     """Retention maintenance for the curation snapshot layer (the
     curation twin of the extraction pipeline's ``compact``, reference
@@ -258,29 +318,16 @@ def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    live = _live_inflight_runs(out_dir)
-    if live:
-        raise RuntimeError(
-            f"curation run(s) {live} appear to be in flight under "
-            f"{out_dir}; vacuuming now would delete their staging "
-            "data — wait for them or remove the stale INFLIGHT-* "
-            "sentinel if you are sure"
-        )
+    snap, _ = _latest_committed(out_dir)
+    _reject_inflight(out_dir, "vacuuming now would delete their staging data")
     hist = _committed_run_history(out_dir, snap["n"])
     hist = [r for r in hist if r in set(snap["runs"])]
     keep = set(hist[-keep_last:])
     # ancestor closure: an incremental run's cumulative view reads
     # every parent in its chain, so vacuuming a kept run's ancestor
     # would break it — retain the transitive parents too
+    keep = {a for r in keep for a in _run_chain(snap, r)}
     rp = snap.get("run_parents", {})
-    for r in list(keep):
-        cur = rp.get(r)
-        while cur is not None and cur not in keep:
-            keep.add(cur)
-            cur = rp.get(cur)
     drop = sorted(set(snap["runs"]) - keep)
 
     # enumerate removals BEFORE the commit so the persisted snapshot
@@ -313,9 +360,7 @@ def vacuum_curation(out_dir: str, keep_last: int = 1) -> dict:
         # kept by the closure above)
         "run_parents": {r: p for r, p in rp.items() if r in keep},
     }
-    name = f"snapshot-{n}.json"
-    _atomic_write(os.path.join(_ckpt(out_dir), name), json.dumps(new_snap))
-    _atomic_write(os.path.join(_ckpt(out_dir), "LATEST"), name)
+    _publish(out_dir, new_snap)
 
     # data deletion AFTER the commit, exactly the committed list
     for rel in to_remove:
@@ -413,11 +458,6 @@ def _fingerprints(
         if df is not None:
             others[name] = fp(k, n_key)
     return fp(0, "n_docs"), row["raw"], others
-
-
-def input_fingerprint(docs: DataFrame) -> dict:
-    """Order-independent content identity of a (non-blank) corpus."""
-    return _fingerprints(docs)[0]
 
 
 def quality_gate(
@@ -662,6 +702,76 @@ def _survivor_band_writes(
     ]
 
 
+def _run_dir(out_dir: str, run_id: str) -> str:
+    return os.path.join(out_dir, "curated", f"run_id={run_id}")
+
+
+def _read_chain(
+    spark: SparkSession,
+    out_dir: str,
+    chain: list[str],
+    artifact: str,
+    schema: str | None = None,
+    recompute: Callable | None = None,
+    reusable: Callable = os.path.isdir,
+    each: Callable | None = None,
+) -> DataFrame:
+    """The union of one per-run artifact (``survivors``, ``packed``,
+    ``bands``, ...) over the runs of ``chain``, by column name: a
+    column one run lacks reads as NULL, so a split-stamped run unions
+    cleanly over an unstamped one.
+
+    - ``schema``: the artifact's known schema — the read then plans
+      without a footer-inference job;
+    - ``recompute``: the artifact from a run's survivors, for a run
+      whose stored artifact is not ``reusable`` (committed before the
+      artifact existed, or under another algorithm);
+    - ``each(run_id, frame)``: rewrites each run's frame before the
+      union."""
+    out = None
+    for rid in chain:
+        run_dir = _run_dir(out_dir, rid)
+        path = os.path.join(run_dir, artifact)
+        if recompute is not None and not reusable(path):
+            df = recompute(
+                spark.read.parquet(os.path.join(run_dir, "survivors"))
+            )
+        else:
+            df = (spark.read.schema(schema) if schema else spark.read
+                  ).parquet(path)
+        if each is not None:
+            df = each(rid, df)
+        out = df if out is None else out.unionByName(
+            df, allowMissingColumns=True
+        )
+    return out
+
+
+def _chain_packed(
+    spark: SparkSession, out_dir: str, chain: list[str], tag: str | None
+) -> tuple[DataFrame, list[str]]:
+    """The chain's packed chunks, each run's rows tagged with its
+    run_id in column ``tag`` (if given), and the runs that were not
+    split-stamped."""
+    unstamped = []
+
+    def each(rid: str, df: DataFrame) -> DataFrame:
+        if "split" not in df.columns:
+            unstamped.append(rid)
+        return df.withColumn(tag, F.lit(rid)) if tag else df
+
+    return _read_chain(spark, out_dir, chain, "packed", each=each), unstamped
+
+
+def _bands_reusable(path: str) -> bool:
+    """Whether a run's stored bands match the current band layout."""
+    try:
+        with open(os.path.join(os.path.dirname(path), _BANDS_META)) as f:
+            return os.path.isdir(path) and json.load(f) == _band_meta()
+    except (OSError, ValueError):
+        return False
+
+
 def _chain_bands(
     spark: SparkSession, out_dir: str, chain: list[str]
 ) -> DataFrame:
@@ -669,32 +779,41 @@ def _chain_bands(
     bands where present AND algorithm-compatible, recomputed from
     survivor text otherwise (runs committed before band persistence,
     or across a minhash version bump)."""
+    return _read_chain(
+        spark, out_dir, chain, "bands", _BANDS_SCHEMA,
+        recompute=lambda s: minhash_bands(
+            s.select("url", "text"), id_col="url", text_col="text"
+        ),
+        reusable=_bands_reusable,
+    )
 
-    parts = []
-    for rid in chain:
-        run_dir = os.path.join(out_dir, "curated", f"run_id={rid}")
-        meta_path = os.path.join(run_dir, _BANDS_META)
-        bands_path = os.path.join(run_dir, "bands")
-        reusable = False
-        if os.path.isdir(bands_path) and os.path.exists(meta_path):
-            try:
-                with open(meta_path) as f:
-                    reusable = json.load(f) == _band_meta()
-            except (OSError, ValueError):
-                reusable = False
-        parts.append(
-            spark.read.schema(_BANDS_SCHEMA).parquet(bands_path) if reusable
-            else minhash_bands(
-                spark.read.parquet(
-                    _survivors_path(out_dir, rid)
-                ).select("url", "text"),
-                id_col="url", text_col="text",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+def _chain_url_hashes(
+    spark: SparkSession, out_dir: str, chain: list[str]
+) -> DataFrame:
+    """(url, content_hash) of every committed survivor in the chain:
+    stored per-run hash manifests where present, recomputed from
+    survivor text otherwise (md5 has no version knob — only presence
+    is checked)."""
+    return _read_chain(
+        spark, out_dir, chain, "hashes", _HASHES_SCHEMA,
+        recompute=lambda s: s.select(
+            "url", F.md5(F.col("text").cast("binary")).alias("content_hash"),
+        ),
+    )
+
+
+def _chain_processed(
+    spark: SparkSession, out_dir: str, chain: list[str]
+) -> DataFrame:
+    """Every url EVALUATED by the chain: the per-run processed
+    manifests, and the survivor urls of runs committed before the
+    manifest existed (a url those runs dropped would be re-evaluated,
+    and dedup-vs-base re-drops it)."""
+    return _read_chain(
+        spark, out_dir, chain, "processed", _PROCESSED_SCHEMA,
+        recompute=lambda s: s.select("url"),
+    )
 
 
 def exact_dedup_survivors_incremental(
@@ -723,8 +842,6 @@ def exact_dedup_survivors_incremental(
     checkpointed) — the bloom build re-reads it once. No bloom is
     built while the manifest fits the broadcast threshold
     (``bloom_semi_reduce``)."""
-    from .functions.bloom import bloom_semi_reduce
-
     h = F.md5(F.col("text").cast("binary"))
     if base_hashes is None:
         base_hashes = base.select(h.alias("content_hash")).distinct()
@@ -778,8 +895,6 @@ def neardup_survivors_incremental(
     the survivors' bands from them. Checkpointed because the bloom
     build, the pair join's probe side and the union below would each
     re-run the minhash kernel otherwise."""
-    from .functions.bloom import bloom_semi_reduce, fits_broadcast
-
     if base_bands is None:
         base_bands = minhash_bands(base, id_col="url", text_col="text")
     if bloom_prefilter and not fits_broadcast(base_bands):
@@ -905,6 +1020,267 @@ def pack_chunks_greedy(
     ).drop("_bkt")
 
 
+def _on(v) -> bool:
+    """Whether a stage's switch kwarg turns it on."""
+    return v is not None and v is not False
+
+
+def _must(ok: Callable, msg: str) -> Callable:
+    """A stage check: ``msg`` when the stage is on and ``ok(value)``
+    fails."""
+    return lambda v, r: _on(v) and not ok(v) and msg
+
+
+def _semdedup_check(tau, r: dict):
+    if tau is None:
+        return r["semdedup_embeddings"] is not None and (
+            "semdedup_embeddings has no effect without semdedup_tau "
+            "(the stage switch)"
+        )
+    return not 0.0 < tau <= 1.0 and "semdedup_tau must be in (0, 1]"
+
+
+def _stage_bands(df: DataFrame, r: dict) -> DataFrame:
+    """The near-dup stage's checkpointed bands, kept in ``r`` for the
+    survivor-band write, which semi-joins them instead of
+    re-minhashing the survivors."""
+    r["bands"] = _checkpointed_bands(df)
+    return r["bands"]
+
+
+class _Stage(NamedTuple):
+    """One curation stage. A build takes (the stage input, the run
+    dict ``r``: run_curation's kwargs plus the run's frames) and names
+    its kernel inside a lambda, so the kernel is looked up in this
+    module's globals when the stage runs — a patched kernel is the
+    one that runs.
+
+    - ``key``: its n_after_* result key;
+    - ``switch``: the kwarg that turns it on (None: always on);
+    - ``full``: its full-run build (None: increment only);
+    - ``inc``: its increment build — True reuses ``full``, False marks
+      a corpus-global stage, which an increment rejects;
+    - ``fp``/``fp_val(value, r)``: its input_fingerprint key and value;
+    - ``check(value, r)``: its validation error, or falsy;
+    - ``ckpt``: its output is materialized and counted;
+    - ``evaluated``: its output is the run's processed manifest (the
+      last such stage of the mode wins)."""
+
+    name: str
+    key: str | None
+    switch: str | None
+    full: Callable | None
+    inc: Callable | bool
+    fp: str | None = None
+    fp_val: Callable = lambda v, r: v
+    check: Callable | None = None
+    ckpt: bool = True
+    evaluated: bool = False
+
+    def on(self, r: dict) -> bool:
+        return self.switch is None or _on(r[self.switch])
+
+    def build(self, incremental: bool) -> Callable | None:
+        """The build this mode runs; None where the mode has no such
+        stage."""
+        if incremental and self.inc is not True:
+            return self.inc or None
+        return self.full
+
+
+# The composed doc-level dataflow, in fixed order: the one place a
+# curation stage is defined, and each opt-in kwarg documented. Every
+# switch and knob enters the fingerprint, so toggling or
+# reconfiguring a stage re-curates rather than falsely
+# no-op-resuming. A disabled stage passes its input through (its
+# lineage row records n_in == n_out).
+_STAGES = (
+    # ``canonicalize_urls``: identity first — spelling twins collapse
+    # BEFORE any url-keyed decision (resume, dedup tie-breaks, host
+    # quotas, packing keys); one hash window, scan-stage string ops
+    # otherwise (operators/urlcanon.py). Its version is fingerprinted:
+    # a changed canonicalization changes every url-keyed decision
+    _Stage(
+        "url_canonicalize", None, "canonicalize_urls",
+        full=lambda df, r: canonicalize_docs(df), inc=True,
+        fp="url_canon", fp_val=lambda v, r: URL_CANON_VERSION,
+        evaluated=True,
+    ),
+    # an increment's already-evaluated urls are not new work. Bloom
+    # semi-reduction: the processed manifest is corpus-sized and the
+    # batch is small — prune the manifest in its scan stage (no false
+    # negatives, so the exact anti-join still drops every processed
+    # url; false positives only add join input)
+    _Stage(
+        "resume_anti_join", "n_after_resume", None, full=None,
+        inc=lambda df, r: df.join(bloom_semi_reduce(
+            df.select("url"), r["processed"], "url",
+            expected=r["n_input"],
+        ), "url", "left_anti"),
+        evaluated=True,
+    ),
+    # ``blocked_domains``: C4/RefinedWeb-style URL blocklist as the
+    # FIRST cut — provenance-only, it reads no text, so every later
+    # stage's input shrinks by the block rate. A doc from a blocked
+    # domain (or any subdomain, label-boundary matched) drops; a
+    # ``list[str]`` runs as a scan-stage literal filter, a DataFrame
+    # blocklist anti-joins at scale and its normalized CONTENT enters
+    # the fingerprint (a grown list must re-curate)
+    _Stage(
+        "url_blocklist", "n_after_url_blocklist", "blocked_domains",
+        full=lambda df, r: filter_blocked_domains(df, r["blocked_domains"]),
+        inc=True, fp="url_blocklist", fp_val=lambda v, r: [
+            URL_FILTER_VERSION,
+            ["external", r["fps"]["url_blocklist"]]
+            if isinstance(v, DataFrame) else v,
+        ],
+    ),
+    # ``quality_min_chars``: length bounds + Gopher repetition cut
+    # ahead of dedup
+    _Stage(
+        "quality_gate", "n_after_quality_gate", "quality_min_chars",
+        full=lambda df, r: quality_gate(
+            df, r["quality_min_chars"], r["quality_max_chars"],
+            r["quality_dup_bigram_max"],
+        ),
+        inc=True, fp="quality_gate", fp_val=lambda v, r: [
+            v, r["quality_max_chars"], r["quality_dup_bigram_max"],
+        ],
+    ),
+    # ``domain_cap``: C4-style per-url-host quota right after the gate
+    # (longest-texts-win, url tie-break); an increment fills only each
+    # host's remaining headroom
+    _Stage(
+        "domain_cap", "n_after_domain_cap", "domain_cap",
+        full=lambda df, r: domain_cap_docs(df, r["domain_cap"]),
+        inc=lambda df, r: domain_cap_docs_incremental(
+            df, r["base"], r["domain_cap"]
+        ),
+        fp="domain_cap",
+        check=_must(lambda v: v >= 1, "domain_cap must be >= 1"),
+    ),
+    # ``remove_spans_min_docs``: cross-doc boilerplate span removal. It
+    # rewrites text BEFORE dedup, so de-boilerplated twins collapse;
+    # docs emptied by the removal drop here — they cannot train and
+    # would all collide on one content hash
+    _Stage(
+        "span_removal", "n_after_span_removal", "remove_spans_min_docs",
+        full=lambda df, r: remove_boilerplate_spans(
+            df, r["remove_spans_min_docs"], r["span_ngram"]
+        ).filter(_nonblank()),
+        inc=False, fp="span_removal", fp_val=lambda v, r: [v, r["span_ngram"]],
+    ),
+    # ``segment_dedup_n``: keep-first global segment dedup (C4/CCNet
+    # rule) BEFORE exact dedup — later occurrences of any n-token tile
+    # drop corpus-wide, the first survives; docs reduced to
+    # previously-seen boilerplate empty and drop here
+    _Stage(
+        "segment_dedup", "n_after_segment_dedup", "segment_dedup_n",
+        full=lambda df, r: dedup_segments_first(
+            df, r["segment_dedup_n"]
+        ).filter(_nonblank()),
+        inc=False, fp="segment_dedup",
+        check=_must(lambda v: v >= 1, "segment_dedup_n must be >= 1"),
+    ),
+    # an increment drops a new doc whose text matches a committed
+    # survivor's, against the chain's stored hashes
+    _Stage(
+        "exact_dedup", "n_after_exact_dedup", None,
+        full=lambda df, r: exact_dedup_survivors(df),
+        inc=lambda df, r: exact_dedup_survivors_incremental(
+            df, r["base"], base_hashes=r["base_hashes"],
+            bloom_prefilter=True,
+        ),
+    ),
+    # an increment band-joins its batch against the chain's stored bands
+    _Stage(
+        "neardup_prune", "n_after_neardup", None,
+        full=lambda df, r: neardup_survivors(df, bands=_stage_bands(df, r)),
+        inc=lambda df, r: neardup_survivors_incremental(
+            df, r["base"], _stage_bands(df, r),
+            base_bands=r["base_bands"], bloom_prefilter=True,
+        ),
+    ),
+    # ``semdedup_tau``: SemDeDup semantic near-dup pruning of the
+    # syntactic (MinHash) survivors — k ~ sqrt(N) trained quantizer +
+    # within-cell cosine pairs + min-url representative
+    # (operators/semdedup.py). The embedding provider is part of the
+    # identity: the versioned feature-hash featurization, or the
+    # CONTENT of ``semdedup_embeddings`` (url, v) model vectors
+    _Stage(
+        "semdedup", "n_after_semdedup", "semdedup_tau",
+        full=lambda df, r: semdedup_prune(
+            df, r["semdedup_tau"], embeddings=r["semdedup_embeddings"]
+        ),
+        inc=False, fp="semdedup", fp_val=lambda v, r: [v, (
+            ["feature_hash", SEMDEDUP_EMBED_VERSION]
+            if r["semdedup_embeddings"] is None
+            else ["external", r["fps"]["semdedup"]]
+        )],
+        check=_semdedup_check,
+    ),
+    # ``decon_eval``: n-gram decontamination of the dedup survivors
+    # against an eval corpus; its CONTENT enters the fingerprint (a new
+    # eval suite must re-curate)
+    _Stage(
+        "decontaminate", "n_after_decon", "decon_eval",
+        full=lambda df, r: decontaminate_against(
+            df, r["decon_eval"], n=r["decon_ngram"]
+        ),
+        inc=True, fp="decon",
+        fp_val=lambda v, r: [r["decon_ngram"], r["fps"]["decon"]],
+    ),
+    # ``lm_quality_drop_z``: CCNet-style LM-quality tail drop (keep docs
+    # scoring >= mu_lang - z * sigma_lang)
+    _Stage(
+        "lm_quality", "n_after_lm_quality", "lm_quality_drop_z",
+        full=lambda df, r: lm_quality_survivors(df, r["lm_quality_drop_z"]),
+        inc=False, fp="lm_quality",
+        check=_must(lambda v: v >= 0, "lm_quality_drop_z must be >= 0"),
+    ),
+    # ``cluster_alpha``: cluster-balanced sampling (D4-style
+    # diversification) — temperature-flatten the survivors across
+    # k ~ sqrt(N) trained embedding cells toward the uniform per-cell
+    # share; cells at or below it keep 100%. The featurization and
+    # acceptance-rule versions are part of the identity
+    _Stage(
+        "cluster_balance", "n_after_cluster_balance", "cluster_alpha",
+        full=lambda df, r: cluster_balance_docs(df, r["cluster_alpha"]),
+        inc=False, fp="cluster_balance", fp_val=lambda v, r: [
+            v, CLUSTER_BALANCE_VERSION, SEMDEDUP_EMBED_VERSION,
+        ],
+        check=_must(
+            lambda v: 0.0 <= v <= 1.0,
+            "cluster_alpha must be in [0, 1] (0 = flatten fully to "
+            "the uniform cell share, 1 = keep everything)",
+        ),
+    ),
+    # ``sample_alpha``: temperature-based language rebalancing as the
+    # final doc-level selection
+    _Stage(
+        "temperature_sample", None, "sample_alpha",
+        full=lambda df, r: temperature_sample(df, r["sample_alpha"]),
+        inc=False, fp="sample_alpha",
+    ),
+    # ``split_fracs`` (train, val): stamp the deterministic
+    # growth-stable train/val/test ``split`` on the final survivors
+    # (count-preserving, not materialized); chunks and packed bins
+    # carry it, and bins are split-pure (pack partitions by
+    # (lang, split))
+    _Stage(
+        "split_stamp", None, "split_fracs",
+        full=lambda df, r: stamp_split(df, *r["split_fracs"]),
+        inc=True, fp="split", fp_val=lambda v, r: list(v),
+        check=_must(
+            lambda v: len(v) == 2 and min(v) > 0 and sum(v) < 1,
+            "split_fracs must be (train, val) with train > 0, "
+            "val > 0 and train + val < 1 (test takes the rest)",
+        ),
+        ckpt=False,
+    ),
+)
+
+
 def run_curation(
     spark: SparkSession,
     docs: DataFrame,
@@ -942,66 +1318,21 @@ def run_curation(
     the committed survivor chain, and corpus-global stages are
     rejected — see the wrapper's docstring for the full contract.
 
-    Opt-in stages (each fingerprinted, so toggling or reconfiguring
-    any of them re-curates rather than falsely no-op-resuming —
-    round-3/4/5 lesson, now covering the round-5 additions too):
+    The opt-in stages and the kwargs that switch and tune them are
+    documented at their rows of ``_STAGES``; each is fingerprinted, so
+    toggling or reconfiguring one re-curates.
 
-    - ``blocked_domains``: C4/RefinedWeb-style URL blocklist as the
-      FIRST cut — a doc from a blocked domain (or any subdomain,
-      label-boundary matched) drops before any text is read; a
-      ``list[str]`` runs as a scan-stage literal filter, a DataFrame
-      blocklist anti-joins at scale (its normalized CONTENT enters
-      the fingerprint);
-    - ``quality_min_chars``: length bounds + Gopher repetition cut
-      ahead of dedup;
-    - ``domain_cap``: C4-style per-url-host quota right after the
-      gate (longest-texts-win, url tie-break);
-    - ``remove_spans_min_docs``: cross-doc boilerplate span removal
-      (rewrites text BEFORE dedup, so de-boilerplated twins collapse;
-      docs emptied by the removal drop here);
-    - ``segment_dedup_n``: keep-first global segment dedup (C4/CCNet
-      rule): later occurrences of any ``n``-token tile drop corpus-
-      wide, first occurrence survives; docs emptied by it drop here;
-    - ``semdedup_tau``: SemDeDup semantic near-dup pruning of the
-      syntactic (MinHash) survivors — k ~ sqrt(N) trained quantizer +
-      within-cell cosine pairs + min-url representative
-      (operators/semdedup.py); embeds via the versioned feature-hash
-      featurization unless ``semdedup_embeddings`` (url, v) supplies
-      model vectors, whose CONTENT then enters the fingerprint;
-    - ``decon_eval``: n-gram decontamination of the dedup survivors
-      against an eval corpus (its CONTENT enters the fingerprint — a
-      new eval suite must re-curate);
-    - ``lm_quality_drop_z``: CCNet-style LM-quality tail drop (keep
-      docs scoring >= mu_lang - z * sigma_lang);
-    - ``cluster_alpha``: cluster-balanced sampling (D4-style
-      diversification) — temperature-flatten the survivors across
-      k ~ sqrt(N) trained embedding cells (built-in versioned
-      feature-hash featurization) toward the uniform per-cell share;
-      cells at or below the share keep 100%;
-    - ``sample_alpha``: temperature-based language rebalancing as the
-      final doc-level selection before chunking;
-    - ``split_fracs`` (train, val): stamp the deterministic
-      growth-stable train/val/test ``split`` on survivors, chunks and
-      packed bins — bins are split-pure (pack partitions by
-      (lang, split)).
-
-    Full order: url blocklist -> gate -> domain cap -> span removal ->
-    segment dedup -> exact dedup -> near-dup prune -> semdedup ->
-    decontaminate -> lm quality -> cluster balance ->
-    temperature sample -> split stamp -> chunk -> pack."""
+    Order: the rows of ``_STAGES``, then chunk -> pack."""
+    # the stage rows read their kwargs, and the frames set up below,
+    # by name from this one dict
+    r = dict(locals())
     run_id = run_id or uuid.uuid4().hex[:12]
     prev = load_curation_snapshot(out_dir)
-    committed = set(prev["runs"]) if prev else set()
-    # vacuumed run_ids stay guarded: their data is gone but reusing
-    # the id would make old lineage/export paths ambiguous
-    replay_guard = committed | (
-        set(prev.get("vacuumed_runs", [])) if prev else set()
+    _reject_replay(
+        prev, run_id,
+        f"run_id {run_id!r} is already committed in {out_dir}; "
+        "rerun with a fresh run_id",
     )
-    if run_id in replay_guard:
-        raise ValueError(
-            f"run_id {run_id!r} is already committed in {out_dir}; "
-            "rerun with a fresh run_id"
-        )
     if chunk_size <= 0 or chunk_stride <= 0 or pack_target <= 0:
         raise ValueError(
             "chunk_size, chunk_stride and pack_target must be positive"
@@ -1011,80 +1342,72 @@ def run_curation(
             "chunk_stride > chunk_size would leave uncovered gaps "
             "between chunks"
         )
-    if domain_cap is not None and domain_cap < 1:
-        raise ValueError("domain_cap must be >= 1")
-    if segment_dedup_n is not None and segment_dedup_n < 1:
-        raise ValueError("segment_dedup_n must be >= 1")
-    if semdedup_tau is not None and not (0.0 < semdedup_tau <= 1.0):
-        raise ValueError("semdedup_tau must be in (0, 1]")
-    if semdedup_embeddings is not None and semdedup_tau is None:
-        raise ValueError(
-            "semdedup_embeddings has no effect without semdedup_tau "
-            "(the stage switch)"
-        )
-    if lm_quality_drop_z is not None and lm_quality_drop_z < 0:
-        raise ValueError("lm_quality_drop_z must be >= 0")
-    if cluster_alpha is not None and not (0.0 <= cluster_alpha <= 1.0):
-        raise ValueError(
-            "cluster_alpha must be in [0, 1] (0 = flatten fully to "
-            "the uniform cell share, 1 = keep everything)"
-        )
-    if split_fracs is not None:
-        tr, va = split_fracs
-        if not (tr > 0 and va > 0 and tr + va < 1):
-            raise ValueError(
-                "split_fracs must be (train, val) with train > 0, "
-                "val > 0 and train + val < 1 (test takes the rest)"
-            )
-    base = base_bands = parent_run = processed = None
+    for s in _STAGES:
+        err = s.check and s.check(r[s.switch], r)
+        if err:
+            raise ValueError(err)
+    if blocked_domains is not None and not isinstance(
+        blocked_domains, DataFrame
+    ):
+        # an empty list blocks nothing: disable the stage so it
+        # doesn't enter the fingerprint (same output either way)
+        r["blocked_domains"] = sorted(
+            {d.lower().lstrip(".") for d in blocked_domains if d}
+        ) or None
+    parent_run = None
     if incremental:
         # corpus-global stages compute statistics over the WHOLE
         # corpus (span/tile frequencies, embedding cells, per-lang
         # quality stats, language/cell shares): running them over one
         # batch silently changes their semantics, so they demand a
         # full re-curate instead
-        for knob, nm in (
-            (remove_spans_min_docs, "remove_spans_min_docs"),
-            (segment_dedup_n, "segment_dedup_n"),
-            (semdedup_tau, "semdedup_tau"),
-            (lm_quality_drop_z, "lm_quality_drop_z"),
-            (cluster_alpha, "cluster_alpha"),
-            (sample_alpha, "sample_alpha"),
-        ):
-            if knob is not None:
+        for s in _STAGES:
+            if s.inc is False and s.on(r):
                 raise ValueError(
-                    f"{nm} is a corpus-global stage — its statistics "
-                    "are properties of the whole corpus, so it needs "
-                    "a full re-curate, not an increment"
+                    f"{s.switch} is a corpus-global stage — its "
+                    "statistics are properties of the whole corpus, so "
+                    "it needs a full re-curate, not an increment"
                 )
         if prev is None:
             raise FileNotFoundError(
                 f"no committed curation under {out_dir} to increment "
                 "— run a full run_curation first"
             )
+        # the committed chain's url identity and the batch's must
+        # agree: a canonicalized batch over a raw-url base (or the
+        # reverse) silently misses every resume/dedup collision
+        base_canon = "url_canon" in (prev.get("input_fingerprint") or {})
+        if canonicalize_urls != base_canon:
+            raise ValueError(
+                "canonicalize_urls must match the committed chain "
+                f"(base {'did' if base_canon else 'did not'} "
+                "canonicalize; this increment "
+                f"{'does' if canonicalize_urls else 'does not'}) — "
+                "url identity drives resume and keep-first dedup"
+            )
         parent_run = prev.get("latest_run", prev["runs"][-1])
         chain = _run_chain(prev, parent_run)
-        base = read_curated(
-            spark, out_dir, run_id=parent_run, cumulative=True
-        ).select("url", "text", "lang")
         # stored survivor bands + content hashes (recomputed per run
         # only when absent or algorithm-incompatible): on the happy
         # path the increment never re-reads the committed corpus's
         # TEXT at all — resume/cap touch urls, exact dedup touches
         # stored hashes, near-dup touches stored bands
-        base_bands = _chain_bands(spark, out_dir, chain)
-        base_hashes = (
-            _chain_url_hashes(spark, out_dir, chain)
-            .select("content_hash").distinct()
+        r.update(
+            base=read_curated(
+                spark, out_dir, run_id=parent_run, cumulative=True
+            ).select("url", "text", "lang"),
+            base_bands=_chain_bands(spark, out_dir, chain),
+            base_hashes=_chain_url_hashes(spark, out_dir, chain)
+            .select("content_hash").distinct(),
+            processed=_chain_processed(spark, out_dir, chain).distinct(),
         )
-        processed = _chain_processed(spark, out_dir, chain).distinct()
     # blank rows can't train and would all collide on one content
     # hash; drop them up front, counted in the lineage 'input' stage
     # (raw -> non-blank), mirroring the extraction pipeline's O2
     # filter. The raw count and every input's fingerprint come from
     # ONE aggregation over the raw frame and the other inputs.
     docs = docs.select("url", "text", "lang")
-    fp, n_raw, input_fps = _fingerprints(
+    fp, n_raw, r["fps"] = _fingerprints(
         docs, eval_docs=decon_eval, embeddings=semdedup_embeddings,
         blocked=(
             blocked_domains if isinstance(blocked_domains, DataFrame)
@@ -1102,65 +1425,9 @@ def run_curation(
         CURATION_DATAFLOW_VERSION, TOKEN_HASH_VERSION, N_HASHES, BAND_SIZE,
     ]
     fp["config"] = [chunk_size, chunk_stride, pack_target]
-    if canonicalize_urls:
-        # a changed canonicalization changes url identity, hence every
-        # url-keyed decision downstream
-        fp["url_canon"] = URL_CANON_VERSION
-    if blocked_domains is not None:
-        if isinstance(blocked_domains, DataFrame):
-            # the blocklist's CONTENT is an input: a grown list must
-            # re-curate, not falsely no-op-resume
-            fp["url_blocklist"] = [
-                URL_FILTER_VERSION,
-                ["external", input_fps["url_blocklist"]],
-            ]
-        else:
-            doms = sorted(
-                {d.lower().lstrip(".") for d in blocked_domains if d}
-            )
-            # an empty list blocks nothing: disable the stage so it
-            # doesn't enter the fingerprint (same output either way)
-            blocked_domains = doms or None
-            if doms:
-                fp["url_blocklist"] = [URL_FILTER_VERSION, doms]
-    if quality_min_chars is not None:
-        fp["quality_gate"] = [
-            quality_min_chars, quality_max_chars, quality_dup_bigram_max,
-        ]
-    if domain_cap is not None:
-        fp["domain_cap"] = domain_cap
-    if remove_spans_min_docs is not None:
-        fp["span_removal"] = [remove_spans_min_docs, span_ngram]
-    if segment_dedup_n is not None:
-        fp["segment_dedup"] = segment_dedup_n
-    if semdedup_tau is not None:
-        # the embedding provider is part of the dataflow identity: the
-        # versioned built-in featurization, or the CONTENT of an
-        # externally supplied embeddings frame (a new embedding model
-        # changes which docs are semantic near-dups)
-        provider = (
-            ["feature_hash", SEMDEDUP_EMBED_VERSION]
-            if semdedup_embeddings is None
-            else ["external", input_fps["semdedup"]]
-        )
-        fp["semdedup"] = [semdedup_tau, provider]
-    if decon_eval is not None:
-        # the EVAL corpus's content is an input: a changed eval suite
-        # changes which docs survive, so it must re-curate
-        fp["decon"] = [decon_ngram, input_fps["decon"]]
-    if lm_quality_drop_z is not None:
-        fp["lm_quality"] = lm_quality_drop_z
-    if cluster_alpha is not None:
-        # the featurization and dataflow versions are part of the
-        # identity: a changed embed or train/acceptance rule changes
-        # which docs survive
-        fp["cluster_balance"] = [
-            cluster_alpha, CLUSTER_BALANCE_VERSION, SEMDEDUP_EMBED_VERSION,
-        ]
-    if sample_alpha is not None:
-        fp["sample_alpha"] = sample_alpha
-    if split_fracs is not None:
-        fp["split"] = [split_fracs[0], split_fracs[1]]
+    for s in _STAGES:
+        if s.fp and s.on(r):
+            fp[s.fp] = s.fp_val(r[s.switch], r)
     if incremental:
         # mode flag, not the parent id: a resubmission of the SAME
         # batch right after its own commit must compare equal to that
@@ -1174,265 +1441,77 @@ def run_curation(
         # completion barrier: same corpus already curated — rerunning
         # the whole dataflow would reproduce byte-identical output
         return {
-            "run_id": run_id,
-            "snapshot": prev,
-            "skipped_noop": True,
-            **{k: None for k in ("survivors_path", "packed_path",
-                                 "lineage_path")},
+            "run_id": run_id, "snapshot": prev, "skipped_noop": True,
+            "survivors_path": None, "packed_path": None,
+            "lineage_path": None,
         }
 
-    run_dir = os.path.join(out_dir, "curated", f"run_id={run_id}")
+    run_dir = _run_dir(out_dir, run_id)
     survivors_path = os.path.join(run_dir, "survivors")
     packed_path = os.path.join(run_dir, "packed")
     lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
+    r["n_input"] = n_input = fp["n_docs"]
 
-    n_input = fp["n_docs"]
-
-    # the near-dup stage's checkpointed bands: the survivor-band write
-    # semi-joins them instead of re-minhashing the survivors; released
-    # on every exit below. Both stage lists run the near-dup stage, so
-    # they are set whenever the tail runs.
-    stage_bands: DataFrame | None = None
-
-    def neardup_stage(df: DataFrame) -> DataFrame:
-        nonlocal stage_bands
-        stage_bands = _checkpointed_bands(df)
-        if incremental:
-            return neardup_survivors_incremental(
-                df, base, stage_bands, base_bands=base_bands,
-                bloom_prefilter=True,
-            )
-        return neardup_survivors(df, bands=stage_bands)
-
-    # the composed doc-level dataflow, in fixed order; fn=None means
-    # the opt-in stage is disabled and passes its input through (its
-    # lineage row records n_in == n_out)
-    stage_defs: list[tuple[str, object]] = [
-        (
-            "url_canonicalize",
-            # identity first: spelling twins must collapse BEFORE any
-            # url-keyed decision (resume, dedup tie-breaks, host
-            # quotas, packing keys) — one hash window, scan-stage
-            # string ops otherwise (operators/urlcanon.py)
-            canonicalize_docs if canonicalize_urls else None,
-        ),
-        (
-            "url_blocklist",
-            # first cut: provenance-only, reads no text — at 100 TB
-            # every downstream stage's input shrinks by the block rate
-            (lambda df: filter_blocked_domains(df, blocked_domains))
-            if blocked_domains is not None else None,
-        ),
-        (
-            "quality_gate",
-            (lambda df: quality_gate(
-                df,
-                min_chars=quality_min_chars,
-                max_chars=quality_max_chars,
-                dup_bigram_max=quality_dup_bigram_max,
-            )) if quality_min_chars is not None else None,
-        ),
-        (
-            "domain_cap",
-            (lambda df: domain_cap_docs(df, domain_cap))
-            if domain_cap is not None else None,
-        ),
-        (
-            "span_removal",
-            # rewrites text BEFORE dedup (de-boilerplated twins
-            # collapse); docs emptied by the removal drop here — they
-            # cannot train and would all collide on one content hash
-            (lambda df: remove_boilerplate_spans(
-                df, min_docs=remove_spans_min_docs, n=span_ngram
-            ).filter(_nonblank()))
-            if remove_spans_min_docs is not None else None,
-        ),
-        (
-            "segment_dedup",
-            # keep-first tile dedup rewrites text BEFORE exact dedup
-            # (docs reduced to previously-seen boilerplate empty here)
-            (lambda df: dedup_segments_first(
-                df, n=segment_dedup_n
-            ).filter(_nonblank()))
-            if segment_dedup_n is not None else None,
-        ),
-        ("exact_dedup", exact_dedup_survivors),
-        ("neardup_prune", neardup_stage),
-        (
-            "semdedup",
-            (lambda df: semdedup_prune(
-                df, semdedup_tau, embeddings=semdedup_embeddings
-            )) if semdedup_tau is not None else None,
-        ),
-        (
-            "decontaminate",
-            (lambda df: decontaminate_against(
-                df, decon_eval, n=decon_ngram
-            )) if decon_eval is not None else None,
-        ),
-        (
-            "lm_quality",
-            (lambda df: lm_quality_survivors(df, lm_quality_drop_z))
-            if lm_quality_drop_z is not None else None,
-        ),
-        (
-            "cluster_balance",
-            (lambda df: cluster_balance_docs(df, cluster_alpha))
-            if cluster_alpha is not None else None,
-        ),
-        (
-            "temperature_sample",
-            (lambda df: temperature_sample(df, sample_alpha))
-            if sample_alpha is not None else None,
-        ),
+    # this mode's stages with their builds, None where the stage is off
+    plan = [
+        (s, build if s.on(r) else None)
+        for s in _STAGES
+        if (build := s.build(incremental)) is not None
     ]
-    if incremental:
-        # the increment's dataflow: resume first (already-evaluated
-        # urls are not new work), the per-doc stages unchanged, both
-        # dedup stages in their keep-first against-the-chain form;
-        # corpus-global stages were rejected above
-        by_name = dict(stage_defs)
-        from .functions.bloom import bloom_semi_reduce
-
-        # the committed chain's url identity and the batch's must
-        # agree: a canonicalized batch over a raw-url base (or the
-        # reverse) silently misses every resume/dedup collision
-        base_canon = "url_canon" in (prev.get("input_fingerprint") or {})
-        if canonicalize_urls != base_canon:
-            raise ValueError(
-                "canonicalize_urls must match the committed chain "
-                f"(base {'did' if base_canon else 'did not'} "
-                "canonicalize; this increment "
-                f"{'does' if canonicalize_urls else 'does not'}) — "
-                "url identity drives resume and keep-first dedup"
-            )
-        stage_defs = [
-            (
-                "url_canonicalize",
-                by_name["url_canonicalize"],
-            ),
-            (
-                "resume_anti_join",
-                # bloom semi-reduction: the processed manifest is
-                # corpus-sized and the batch is small — prune the
-                # manifest in its scan stage (no false negatives, so
-                # the exact anti-join still drops every processed
-                # url; false positives only add join input)
-                lambda df: df.join(
-                    bloom_semi_reduce(
-                        df.select("url"), processed, "url",
-                        expected=n_input,
-                    ),
-                    "url", "left_anti",
-                ),
-            ),
-            ("url_blocklist", by_name["url_blocklist"]),
-            ("quality_gate", by_name["quality_gate"]),
-            (
-                "domain_cap",
-                (lambda df: domain_cap_docs_incremental(
-                    df, base, domain_cap
-                )) if domain_cap is not None else None,
-            ),
-            (
-                "exact_dedup",
-                lambda df: exact_dedup_survivors_incremental(
-                    df, base, base_hashes=base_hashes,
-                    bloom_prefilter=True,
-                ),
-            ),
-            ("neardup_prune", neardup_stage),
-            ("decontaminate", by_name["decontaminate"]),
-        ]
-
-    # every materialized frame releases on ANY exit (round-4 advice:
-    # an exception between materialize and the early release leaked
-    # the blocks for the life of the session); early releases inside
-    # the chain still free memory as soon as a successor materializes
-    # — releasing twice is a harmless no-op
-    materialized: list[DataFrame] = []
     # the frame whose urls form this run's processed manifest: every
-    # url the run EVALUATED — what a later increment resume-anti-joins
-    # against. A full run evaluates every non-blank input url (a thin
-    # url-only projection straight off the scan); a canonicalizing
-    # full run's manifest must carry the POST-canonicalization urls
-    # (the identity the increment's resume compares against — the
-    # raw-url manifest missed every respelled committed url; round-6
-    # advice item 1), and an increment evaluated what survived its
-    # resume. Those stage frames are kept (not early-released) until
-    # the tail writes the manifest.
+    # url the run EVALUATED, in the identity a later increment's resume
+    # compares against — the non-blank input (a thin url-only
+    # projection off the scan), the POST-canonicalization urls of a
+    # canonicalizing full run, what survived an increment's resume.
+    # That frame is kept (not early-released) until the tail writes it.
     processed_src = docs
+    evaluated_at = max(
+        (i for i, (s, build) in enumerate(plan) if build and s.evaluated),
+        default=None,
+    )
 
-    def _materialize(df: DataFrame, prev: DataFrame | None):
-        """Eagerly localCheckpoint a stage output, counting its rows in
-        the checkpoint's own job (``components._counted_ckpt``);
-        release the predecessor's blocks once the successor is
-        materialized.
-
-        Checkpoint, not persist (round-6): persist caches the DATA but
-        keeps the full logical plan, and several stages reference
-        their input more than once (segment dedup joins winners back,
-        semdedup/decon anti-join their own survivors), so the analyzed
-        tree — and the plan-description string the SQL listener builds
-        per execution — MULTIPLIES through the chain; with every stage
-        enabled it OOM'd an 8g driver before the survivors write. The
-        checkpoint truncates lineage at each stage boundary, so every
-        stage plans against a flat LogicalRDD. Cost: within-run
-        recompute-on-executor-loss is gone at stage boundaries — at
-        cluster scale a lost block fails the run, which then re-runs
-        idempotently under the snapshot barrier (recomputing a 12-stage
-        chain from the scan was never a real recovery path at 100 TB)."""
-        df, seen = _counted_ckpt(df)
-        materialized.append(df)
-        if prev is not None and prev is not processed_src:
-            _free_ckpt(prev)
-        return df, seen["n"]
-
-    # in-flight sentinel (round-6 advice): makes a concurrent vacuum
-    # fail loudly instead of sweeping this run's staging dirs as
-    # debris; removed on EVERY exit, so only a hard process kill
-    # leaves one (and those go stale — see _live_inflight_runs)
-    ck = _ckpt(out_dir)
-    os.makedirs(ck, exist_ok=True)
-    sentinel = _inflight_path(out_dir, run_id)
-    with open(sentinel, "w") as f:
-        # pid + kernel start time: recycling-proof liveness identity
-        _st = _pid_start(os.getpid())
-        f.write(f"{os.getpid()}:{_st}" if _st is not None
-                else str(os.getpid()))
-    try:
-        import time as _time
-
-        measured: dict[str, int] = {}
+    with _inflight(out_dir, run_id):
         # per-stage wall seconds (diagnostic only — lineage counts are
         # the contract; this feeds OPTIMIZATION round measurements)
         stage_sec: dict[str, float] = {}
         split_extra = ("split",) if split_fracs is not None else ()
+        # every materialized frame releases on ANY exit (round-4
+        # advice: an exception between materialize and the early
+        # release leaked the blocks for the life of the session);
+        # releasing twice is a harmless no-op
+        materialized: list[DataFrame] = []
+        # per-stage lineage counts: disabled stages pass through
+        stages = [("input", n_raw, n_input)]  # raw -> non-blank (O2)
         try:
-            cur, prev_cached = docs, None
-            for nm, fn in stage_defs:
-                if fn is None:
-                    continue
-                _t0 = _time.monotonic()
-                # checkpoint + count every enabled stage: its output
-                # feeds both its lineage row and the successor's
-                # (often multi-pass) dataflow, and the last one feeds
-                # every write of the tail
-                cur, n_survivors = _materialize(fn(cur), prev_cached)
-                measured[nm] = n_survivors
-                prev_cached = cur
-                stage_sec[nm] = round(_time.monotonic() - _t0, 3)
-                if nm == "resume_anti_join" or (
-                    nm == "url_canonicalize" and not incremental
-                ):
-                    processed_src = cur
-            survivors = cur
-            if split_fracs is not None:
-                # count-preserving: stamps the deterministic split on
-                # the final survivor set just before the write
-                survivors = stamp_split(
-                    survivors, split_fracs[0], split_fracs[1]
-                )
+            cur = docs
+            for i, (s, build) in enumerate(plan):
+                n = stages[-1][2]
+                if build is not None and not s.ckpt:
+                    cur = build(cur, r)
+                elif build is not None:
+                    t0 = time.monotonic()
+                    # eagerly localCheckpoint every enabled stage,
+                    # counted in the checkpoint's own job: its output
+                    # feeds its lineage row, the successor's (often
+                    # multi-pass) dataflow and, last, the tail's
+                    # writes. Not persist: stages that read their input
+                    # twice (segment dedup, semdedup, decon) multiply
+                    # the kept logical plan through the chain — with
+                    # every stage on it OOM'd an 8g driver. A lost
+                    # block fails the run, which re-runs idempotently
+                    # under the snapshot barrier.
+                    cur, seen = _counted_ckpt(build(cur, r))
+                    n = seen["n"]
+                    # the predecessor's blocks go once its successor is
+                    # materialized, unless the tail still writes it
+                    if materialized and materialized[-1] is not processed_src:
+                        _free_ckpt(materialized[-1])
+                    materialized.append(cur)
+                    stage_sec[s.name] = round(time.monotonic() - t0, 3)
+                    if i == evaluated_at:
+                        processed_src = cur
+                stages.append((s.name, stages[-1][2], n))
+            survivors, n_survivors = cur, stages[-1][2]
             packed = pack_chunks_greedy(
                 chunk_docs(
                     survivors, chunk_size, chunk_stride,
@@ -1466,25 +1545,19 @@ def run_curation(
                     lambda: processed_src.select("url"),
                     os.path.join(run_dir, "processed"),
                 ),
-                *_survivor_band_writes(survivors, run_dir, stage_bands),
+                *_survivor_band_writes(survivors, run_dir, r["bands"]),
                 (lambda: packed, packed_path, *split_part),
             ])
         finally:
-            for p in materialized:
-                _free_ckpt(p)
+            for p in [*materialized, r.get("bands")]:
+                if p is not None:
+                    _free_ckpt(p)
         _atomic_write(
             os.path.join(run_dir, _BANDS_META), json.dumps(_band_meta())
         )
         stage_sec["_survivor_bands"] = round(max(bands_s, hashes_s), 3)
 
-        # per-stage lineage counts: disabled stages pass through
-        stage_out: dict[str, int] = {}
-        n_prev = n_input
-        for nm, _fn in stage_defs:
-            stage_out[nm] = measured.get(nm, n_prev)
-            n_prev = stage_out[nm]
-
-        _t0 = _time.monotonic()
+        t0 = time.monotonic()
         # one aggregate; a struct is never null, so a null lang counts
         # as its own bin key, as in distinct().count(). A distinct
         # count, not a per-key max(bin_id) + 1: a chunk longer than
@@ -1497,16 +1570,11 @@ def run_curation(
             F.count_distinct(F.struct("lang", *split_extra, "bin_id")),
         ).first()
         stage_sec["_chunk_pack"] = round(
-            pack_s + _time.monotonic() - _t0, 3
+            pack_s + time.monotonic() - t0, 3
         )
 
-        stages = [("input", n_raw, n_input)]  # raw -> non-blank (O2)
-        n_prev = n_input
-        for nm, _fn in stage_defs:
-            stages.append((nm, n_prev, stage_out[nm]))
-            n_prev = stage_out[nm]
+        stage_out = {nm: n_out for nm, _, n_out in stages}
         stages += [
-            ("split_stamp", n_survivors, n_survivors),
             ("chunk", n_survivors, n_chunks),
             ("pack", n_chunks, n_bins),
         ]
@@ -1519,52 +1587,17 @@ def run_curation(
             _LINEAGE_SCHEMA,
         ).write.mode("overwrite").parquet(lineage_path)
 
-        n = (prev["n"] + 1) if prev else 0
-        snap = {
-            "n": n,
-            "runs": sorted(committed | {run_id}),
-            "input_fingerprint": fp,
-            "latest_run": run_id,
-            # which run each committed run extended (None for full
-            # runs): drives cumulative reads and vacuum's
-            # ancestor-retention closure
-            "run_parents": {
-                **(prev.get("run_parents", {}) if prev else {}),
-                run_id: parent_run,
-            },
-        }
-        if prev and prev.get("vacuumed_runs"):
-            snap["vacuumed_runs"] = prev["vacuumed_runs"]
-        name = f"snapshot-{n}.json"
-        _atomic_write(os.path.join(ck, name), json.dumps(snap))
-        _atomic_write(os.path.join(ck, "LATEST"), name)  # atomic commit
-    finally:
-        if stage_bands is not None:
-            _free_ckpt(stage_bands)
-        try:
-            os.remove(sentinel)
-        except OSError:
-            pass
+        snap = _next_snapshot(prev, run_id, fp, parent_run)
+        _publish(out_dir, snap)  # atomic commit
 
     return {
         "run_id": run_id,
         "snapshot": snap,
         "n_raw_input": n_raw,
         "n_input": n_input,
-        # .get: an incremental run's stage set omits the
-        # corpus-global stages (and a full run has no resume stage)
-        "n_after_resume": stage_out.get("resume_anti_join"),
-        "n_after_url_blocklist": stage_out.get("url_blocklist"),
-        "n_after_quality_gate": stage_out.get("quality_gate"),
-        "n_after_domain_cap": stage_out.get("domain_cap"),
-        "n_after_span_removal": stage_out.get("span_removal"),
-        "n_after_segment_dedup": stage_out.get("segment_dedup"),
-        "n_after_exact_dedup": stage_out.get("exact_dedup"),
-        "n_after_neardup": stage_out.get("neardup_prune"),
-        "n_after_semdedup": stage_out.get("semdedup"),
-        "n_after_decon": stage_out.get("decontaminate"),
-        "n_after_lm_quality": stage_out.get("lm_quality"),
-        "n_after_cluster_balance": stage_out.get("cluster_balance"),
+        # None where this mode has no such stage: an increment omits
+        # the corpus-global stages, and a full run has no resume stage
+        **{s.key: stage_out.get(s.name) for s in _STAGES if s.key},
         "n_survivors": n_survivors,
         "n_chunks": n_chunks,
         "n_bins": n_bins,
@@ -1642,29 +1675,16 @@ def read_packed(
     key over a chain is (run_id, lang[, split], bin_id). Requesting a
     ``split`` fails loudly if any chain run was not split-stamped
     (silently dropping a whole run's rows would be worse)."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    rid = snap.get("latest_run", snap["runs"][-1])
-    chain = _run_chain(snap, rid) if cumulative else [rid]
-    frames, unstamped = [], []
-    for r in chain:
-        df = spark.read.parquet(
-            os.path.join(out_dir, "curated", f"run_id={r}", "packed")
-        )
-        if cumulative:
-            df = df.withColumn("run_id", F.lit(r))
-        if split is not None and "split" not in df.columns:
-            unstamped.append(r)
-        frames.append(df)
+    snap, rid = _latest_committed(out_dir)
+    out, unstamped = _chain_packed(
+        spark, out_dir, _run_chain(snap, rid) if cumulative else [rid],
+        "run_id" if cumulative else None,
+    )
     if split is not None and unstamped:
         raise ValueError(
             f"run(s) {unstamped} were not split-stamped (run with "
             "split_fracs to enable train/val/test reads)"
         )
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
     if split is not None:
         out = out.filter(F.col("split") == split)
     return out
@@ -1716,12 +1736,6 @@ def _local_frame(spark: SparkSession, rows: list[tuple], schema: str):
     return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
-def _survivors_path(out_dir: str, run_id: str) -> str:
-    return os.path.join(
-        out_dir, "curated", f"run_id={run_id}", "survivors"
-    )
-
-
 def read_curated(
     spark: SparkSession,
     out_dir: str,
@@ -1738,25 +1752,18 @@ def read_curated(
     handoff for a base + increments chain). Schemas are aligned by
     name with missing columns as NULL, so a split-stamped increment
     unions cleanly over a splitless base."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
+    snap, head = _latest_committed(out_dir)
     if run_id is None:
-        run_id = snap.get("latest_run", snap["runs"][-1])
+        run_id = head
     elif run_id not in snap["runs"]:
         raise FileNotFoundError(
             f"run_id {run_id!r} is not committed in {out_dir} "
             f"(committed: {snap['runs']})"
         )
-    if not cumulative:
-        return spark.read.parquet(_survivors_path(out_dir, run_id))
-    out = None
-    for rid in _run_chain(snap, run_id):
-        df = spark.read.parquet(_survivors_path(out_dir, rid))
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
-    return out
+    return _read_chain(
+        spark, out_dir, _run_chain(snap, run_id) if cumulative else [run_id],
+        "survivors",
+    )
 
 
 def compact_curation(
@@ -1804,92 +1811,58 @@ def compact_curation(
     preserved exactly and bin_ids stay contiguous per key. The offset
     table is runs x languages x splits — metadata-sized, broadcast.
     """
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    live = _live_inflight_runs(out_dir)
-    if live:
-        raise RuntimeError(
-            f"curation run(s) {live} appear to be in flight under "
-            f"{out_dir}; compacting now would race their commit — "
-            "wait for them or remove the stale INFLIGHT-* sentinel "
-            "if you are sure"
-        )
-    head = snap.get("latest_run", snap["runs"][-1])
+    snap, head = _latest_committed(out_dir)
+    _reject_inflight(out_dir, "compacting now would race their commit")
     chain = _run_chain(snap, head)
     # replay guard BEFORE the chain-of-one no-op: an explicitly passed
     # committed/vacuumed run_id is a caller error and must fail loudly
     # even when there is nothing to compact
     run_id = run_id or "compact-" + uuid.uuid4().hex[:12]
-    replay_guard = set(snap["runs"]) | set(snap.get("vacuumed_runs", []))
-    if run_id in replay_guard:
-        raise ValueError(
-            f"run_id {run_id!r} is already committed (or was vacuumed) "
-            f"in {out_dir}; compacted runs need a fresh run_id"
-        )
+    _reject_replay(
+        snap, run_id,
+        f"run_id {run_id!r} is already committed (or was vacuumed) "
+        f"in {out_dir}; compacted runs need a fresh run_id",
+    )
     if len(chain) == 1:
         return {"run_id": head, "snapshot": snap, "skipped_noop": True}
 
     oldest_first = list(reversed(chain))
-    packed_frames = {
-        rid: spark.read.parquet(
-            os.path.join(out_dir, "curated", f"run_id={rid}", "packed")
-        )
-        for rid in oldest_first
-    }
-    stamped = ["split" in df.columns for df in packed_frames.values()]
-    if any(stamped) and not all(stamped):
-        unstamped = [
-            rid for rid, s in zip(oldest_first, stamped) if not s
-        ]
+    allp, unstamped = _chain_packed(spark, out_dir, oldest_first, "_src")
+    if unstamped and len(unstamped) < len(oldest_first):
         raise ValueError(
             f"run(s) {unstamped} in the chain were not split-stamped; "
             "compacting a mixed chain would silently drop their rows "
             "from split reads — re-curate with split_fracs instead"
         )
-    key = ["lang", "split"] if all(stamped) else ["lang"]
+    key = ["lang"] if unstamped else ["lang", "split"]
 
-    run_dir = os.path.join(out_dir, "curated", f"run_id={run_id}")
+    run_dir = _run_dir(out_dir, run_id)
     survivors_path = os.path.join(run_dir, "survivors")
     packed_path = os.path.join(run_dir, "packed")
     lineage_path = os.path.join(out_dir, "lineage", f"run_id={run_id}")
-    ck = _ckpt(out_dir)
-    sentinel = _inflight_path(out_dir, run_id)
-    with open(sentinel, "w") as f:
-        # pid + kernel start time: recycling-proof liveness identity
-        _st = _pid_start(os.getpid())
-        f.write(f"{os.getpid()}:{_st}" if _st is not None
-                else str(os.getpid()))
-    try:
+    with _inflight(out_dir, run_id):
         # survivors: the cumulative corpus, one directory
-        surv = None
-        for rid in oldest_first:
-            df = spark.read.parquet(_survivors_path(out_dir, rid))
-            surv = df if surv is None else surv.unionByName(
-                df, allowMissingColumns=True
-            )
-        surv.write.mode("overwrite").parquet(survivors_path)
+        _read_chain(spark, out_dir, oldest_first, "survivors").write.mode(
+            "overwrite"
+        ).parquet(survivors_path)
         survivors = spark.read.parquet(survivors_path)
         n_survivors = survivors.count()
 
         # packed: per-run bins shifted into one contiguous space per
         # partition key. Offsets come from each run's max bin_id per
-        # key (bins are contiguous from 0 per run) — runs x keys rows,
-        # collected driver-side and broadcast back.
+        # key (bins are contiguous from 0 per run), accumulated oldest
+        # run first — runs x keys rows, collected driver-side and
+        # broadcast back.
+        order = {rid: i for i, rid in enumerate(oldest_first)}
+        mx = allp.groupBy("_src", *key).agg(
+            F.max("bin_id").alias("_mx")
+        ).collect()
         next_off: dict[tuple, int] = {}
         off_rows: list[tuple] = []
-        for rid in oldest_first:
-            mx = packed_frames[rid].groupBy(*key).agg(
-                F.max("bin_id").alias("_mx")
-            ).collect()
-            for r in mx:
-                k = tuple(r[c] for c in key)
-                off_rows.append((rid, *k, next_off.get(k, 0)))
-                next_off[k] = next_off.get(k, 0) + int(r["_mx"]) + 1
-        allp = None
-        for rid in oldest_first:
-            f_ = packed_frames[rid].withColumn("_src", F.lit(rid))
-            allp = f_ if allp is None else allp.unionByName(f_)
+        for r in sorted(mx, key=lambda r: order[r["_src"]]):
+            k = tuple(r[c] for c in key)
+            off_rows.append((r["_src"], *k, next_off.get(k, 0)))
+            next_off[k] = next_off.get(k, 0) + int(r["_mx"]) + 1
         off_schema = "_src string, " + ", ".join(
             f"{c} string" for c in key
         ) + ", _off long"
@@ -1905,7 +1878,7 @@ def compact_curation(
         writer = packed.write.mode("overwrite")
         # same empty-write rule as run_curation: a zero-row
         # partitionBy leaves no schema file
-        if all(stamped) and n_survivors > 0:
+        if not unstamped and n_survivors > 0:
             writer = writer.partitionBy("split")
         writer.parquet(packed_path)
         packed_back = spark.read.schema(packed.schema).parquet(packed_path)
@@ -1939,28 +1912,12 @@ def compact_curation(
             _LINEAGE_SCHEMA,
         ).write.mode("overwrite").parquet(lineage_path)
 
-        n = snap["n"] + 1
-        new_snap = {
-            "n": n,
-            "runs": sorted(set(snap["runs"]) | {run_id}),
-            "input_fingerprint": snap.get("input_fingerprint"),
-            "latest_run": run_id,
-            # a compacted run IS a base: no parent, chain of one —
-            # vacuum's ancestor closure then retains nothing extra
-            "run_parents": {
-                **snap.get("run_parents", {}), run_id: None,
-            },
-        }
-        if snap.get("vacuumed_runs"):
-            new_snap["vacuumed_runs"] = snap["vacuumed_runs"]
-        name = f"snapshot-{n}.json"
-        _atomic_write(os.path.join(ck, name), json.dumps(new_snap))
-        _atomic_write(os.path.join(ck, "LATEST"), name)
-    finally:
-        try:
-            os.remove(sentinel)
-        except OSError:
-            pass
+        # a compacted run IS a base: no parent, chain of one — vacuum's
+        # ancestor closure then retains nothing extra
+        new_snap = _next_snapshot(
+            snap, run_id, snap.get("input_fingerprint"), None
+        )
+        _publish(out_dir, new_snap)
 
     return {
         "run_id": run_id,
@@ -1973,55 +1930,6 @@ def compact_curation(
         "packed_path": packed_path,
         "lineage_path": lineage_path,
     }
-
-
-def _chain_url_hashes(
-    spark: SparkSession, out_dir: str, chain: list[str]
-) -> DataFrame:
-    """(url, content_hash) of every committed survivor in the chain:
-    stored per-run hash manifests where present, recomputed from
-    survivor text otherwise (md5 has no version knob — only presence
-    is checked)."""
-    parts = []
-    for rid in chain:
-        p = os.path.join(out_dir, "curated", f"run_id={rid}", "hashes")
-        parts.append(
-            spark.read.schema(_HASHES_SCHEMA).parquet(p)
-            if os.path.isdir(p)
-            else spark.read.parquet(
-                _survivors_path(out_dir, rid)
-            ).select(
-                "url",
-                F.md5(F.col("text").cast("binary")).alias("content_hash"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _chain_processed(
-    spark: SparkSession, out_dir: str, chain: list[str]
-) -> DataFrame:
-    """Every url EVALUATED by the chain: the per-run processed
-    manifests, and the survivor urls of runs committed before the
-    manifest existed (a url those runs dropped would be re-evaluated,
-    and dedup-vs-base re-drops it)."""
-    parts = []
-    for rid in chain:
-        p = os.path.join(out_dir, "curated", f"run_id={rid}", "processed")
-        parts.append(
-            spark.read.schema(_PROCESSED_SCHEMA).parquet(p)
-            if os.path.isdir(p)
-            else spark.read.parquet(
-                _survivors_path(out_dir, rid)
-            ).select("url")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def dedup_invariant_violations(
@@ -2087,10 +1995,7 @@ def audit_curation_chain(spark: SparkSession, out_dir: str) -> DataFrame:
     under an older algorithm that collide under today's surface here
     — the signal that the corpus needs a full re-curate even though
     every individual run committed cleanly."""
-    snap = load_curation_snapshot(out_dir)
-    if not snap:
-        raise FileNotFoundError(f"no committed curation under {out_dir}")
-    head = snap.get("latest_run", snap["runs"][-1])
+    snap, head = _latest_committed(out_dir)
     chain = _run_chain(snap, head)
     return dedup_invariant_violations(
         _chain_url_hashes(spark, out_dir, chain),

@@ -35,15 +35,12 @@ _BLOCK_TAGS = {
     "br", "hr",
 }
 
-_HEADINGS = {"h1", "h2", "h3", "h4", "h5", "h6"}
-
 # jusText-style thresholds (public heuristics; values fixed here and
 # versioned — changing them changes golden output).
 MIN_BLOCK_CHARS = 25
 MAX_LINK_DENSITY = 0.33
 MAX_HEADING_LINK_DENSITY = 0.50
 
-_WS_RE = re.compile(r"\s+")
 _CHARSET_RE = re.compile(
     rb"""charset\s*=\s*["']?\s*([A-Za-z0-9_\-]+)""", re.IGNORECASE
 )

@@ -132,19 +132,6 @@ def _seq_nearest(
     return out
 
 
-def cosine_udf():
-    """(array<double>, array<double>) -> double cosine similarity."""
-
-    @F.pandas_udf("double")
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a, b = _stack(va), _stack(vb)
-        num = _seq_dot(a, b)
-        den = np.sqrt(_seq_dot(a, a)) * np.sqrt(_seq_dot(b, b))
-        return pd.Series(num / den)
-
-    return cos
-
-
 def lsh_bucket_udf(planes: list[list[float]]):
     """array<double> -> bigint sign-bucket over fixed hyperplanes."""
     ps = [np.asarray(p, dtype=np.float64) for p in planes]
@@ -182,12 +169,3 @@ def ivf_cell_udf(centroids: list[list[float]]):
         return pd.Series(_seq_nearest(a, C, sq, vv) + 1)
 
     return cell
-
-
-def l2_norm_udf():
-    @F.pandas_udf("double")
-    def norm(v: pd.Series) -> pd.Series:
-        a = _stack(v)
-        return pd.Series(np.sqrt(_seq_dot(a, a)))
-
-    return norm

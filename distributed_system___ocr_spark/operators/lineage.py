@@ -13,13 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "run_id string, part_id int, rows_out bigint, n_ok bigint, "
-    "n_pdf bigint, n_empty bigint, n_failed bigint, wall_ms bigint, "
-    "bytes_text bigint"
-)
-
-
 def lineage_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
     """extracted (with part_id/elapsed_ms lineage columns) ->
     one metrics row per extraction partition.

@@ -146,3 +146,39 @@ def test_cli_export_cumulative_requires_export_jsonl(tmp_path):
             "--export-cumulative",
         ])
     assert exc.value.code == 2
+
+
+def test_cli_curate_forwards_every_run_curation_keyword(
+    tmp_path, monkeypatch
+):
+    """``--curate`` passes every keyword of ``run_curation`` (all but
+    spark, docs and out_dir), so a stage cannot ship without its flag.
+    run_curation, the session and the input read are stubbed."""
+    import inspect
+    import types
+
+    from distributed_system___ocr_spark import (
+        cli,
+        curation,
+        pipeline,
+        session,
+    )
+
+    expected = set(inspect.signature(curation.run_curation).parameters)
+    seen = {}
+
+    def fake_run_curation(spark, docs, out_dir, **kw):
+        seen.update(kw)
+        return {}
+
+    monkeypatch.setattr(curation, "run_curation", fake_run_curation)
+    monkeypatch.setattr(pipeline, "read_extracted", lambda spark, path: None)
+    monkeypatch.setattr(
+        session, "get_spark",
+        lambda *a, **k: types.SimpleNamespace(stop=lambda: None),
+    )
+    assert cli.main([
+        "--input", str(tmp_path), "--curate", "--output",
+        str(tmp_path / "o"), "--run-id", "x",
+    ]) == 0
+    assert set(seen) == expected - {"spark", "docs", "out_dir"}

@@ -570,3 +570,123 @@ def test_written_bands_equal_minhash_of_survivors(spark, tmp_path):
             for r in minhash_bands(survivors, id_col="url").collect()
         }
         assert written and written == recomputed
+
+
+# The committed input fingerprints, lineage rows and result keys of an
+# all-stage full run and increment on this file's fixture: a snapshot
+# committed by an earlier build of the stage table must still
+# no-op-resume, and every stage keeps its lineage row and result key.
+ALL_STAGE_FINGERPRINTS = {
+    "full": {
+        "n_docs": 12, "content_sum": "42998731835482491915",
+        "algo": [5, 1, 128, 8], "config": [2048, 1792, 8192],
+        "url_blocklist": [1, ["host19.example.com"]],
+        "quality_gate": [30, None, 0.05], "domain_cap": 3,
+        "span_removal": [2, 5], "segment_dedup": 32,
+        "semdedup": [0.92, ["feature_hash", 1]],
+        "decon": [5, {"n_docs": 1, "content_sum": "6327784786072708681"}],
+        "lm_quality": 2.0, "cluster_balance": [0.5, 3, 1],
+        "sample_alpha": 0.7, "split": [0.9, 0.05],
+    },
+    "increment": {
+        "n_docs": 10, "content_sum": "22933065016927666060",
+        "algo": [5, 1, 128, 8], "config": [2048, 1792, 8192],
+        "url_blocklist": [1, ["host19.example.com"]],
+        "quality_gate": [30, None, 0.05], "domain_cap": 3,
+        "decon": [5, {"n_docs": 1, "content_sum": "6327784786072708681"}],
+        "split": [0.9, 0.05], "incremental": True,
+    },
+}
+ALL_STAGE_LINEAGE = {
+    "full": [
+        (0, "input", 12, 12), (1, "url_canonicalize", 12, 12),
+        (2, "url_blocklist", 12, 12), (3, "quality_gate", 12, 12),
+        (4, "domain_cap", 12, 3), (5, "span_removal", 3, 3),
+        (6, "segment_dedup", 3, 3), (7, "exact_dedup", 3, 3),
+        (8, "neardup_prune", 3, 3), (9, "semdedup", 3, 3),
+        (10, "decontaminate", 3, 3), (11, "lm_quality", 3, 3),
+        (12, "cluster_balance", 3, 3), (13, "temperature_sample", 3, 3),
+        (14, "split_stamp", 3, 3), (15, "chunk", 3, 3), (16, "pack", 3, 1),
+    ],
+    "increment": [
+        (0, "input", 11, 10), (1, "url_canonicalize", 10, 10),
+        (2, "resume_anti_join", 10, 9), (3, "url_blocklist", 9, 9),
+        (4, "quality_gate", 9, 9), (5, "domain_cap", 9, 3),
+        (6, "exact_dedup", 3, 3), (7, "neardup_prune", 3, 3),
+        (8, "decontaminate", 3, 3), (9, "split_stamp", 3, 3),
+        (10, "chunk", 3, 3), (11, "pack", 3, 2),
+    ],
+}
+RESULT_KEYS = {
+    "run_id", "snapshot", "n_raw_input", "n_input", "n_after_resume",
+    "n_after_url_blocklist", "n_after_quality_gate", "n_after_domain_cap",
+    "n_after_span_removal", "n_after_segment_dedup", "n_after_exact_dedup",
+    "n_after_neardup", "n_after_semdedup", "n_after_decon",
+    "n_after_lm_quality", "n_after_cluster_balance", "n_survivors",
+    "n_chunks", "n_bins", "stage_sec", "survivors_path", "packed_path",
+    "lineage_path",
+}
+# the stage kernels the benchmark's traced run wraps to label each stage
+TRACED_KERNELS = (
+    "remove_boilerplate_spans", "dedup_segments_first",
+    "exact_dedup_survivors", "neardup_survivors", "semdedup_prune",
+    "decontaminate_against", "lm_quality_survivors",
+    "cluster_balance_docs", "temperature_sample",
+)
+CORPUS_GLOBAL = {
+    "remove_spans_min_docs": 2, "segment_dedup_n": 32, "semdedup_tau": 0.9,
+    "lm_quality_drop_z": 2.0, "cluster_alpha": 0.5, "sample_alpha": 0.7,
+}
+
+
+def test_all_stage_chain_pins_fingerprints_lineage_and_kernels(
+    spark, tmp_path, monkeypatch
+):
+    """An all-stage full run and increment commit the pinned
+    fingerprints, lineage rows and result keys; each stage kernel is
+    looked up in the module when it runs (a patched kernel runs, once
+    per full call); and each corpus-global kwarg is rejected in an
+    increment with its message."""
+    from distributed_system___ocr_spark import curation
+
+    calls = dict.fromkeys(TRACED_KERNELS, 0)
+    for name in TRACED_KERNELS:
+        def counted(*a, _kernel=getattr(curation, name), _name=name, **k):
+            calls[_name] += 1
+            return _kernel(*a, **k)
+
+        monkeypatch.setattr(curation, name, counted)
+    out = str(tmp_path / "cur")
+    base, inc = _base_docs(spark), _inc_docs(spark)
+    full_kw, inc_kw = _all_stage_kwargs(spark, base.count())
+    info = run_curation(spark, base, out, run_id="base", **full_kw)
+    assert calls == dict.fromkeys(TRACED_KERNELS, 1)
+    for knob, value in CORPUS_GLOBAL.items():
+        with pytest.raises(ValueError) as exc:
+            run_curation_increment(
+                spark, inc, out, run_id="ix", **inc_kw, **{knob: value}
+            )
+        assert str(exc.value) == (
+            f"{knob} is a corpus-global stage — its statistics are "
+            "properties of the whole corpus, so it needs a full "
+            "re-curate, not an increment"
+        )
+    infos = {"full": info}
+    snaps = {"full": load_curation_snapshot(out)}
+    infos["increment"] = run_curation_increment(
+        spark, inc, out, run_id="inc1", **inc_kw
+    )
+    snaps["increment"] = load_curation_snapshot(out)
+    for mode in ("full", "increment"):
+        assert snaps[mode]["input_fingerprint"] == (
+            ALL_STAGE_FINGERPRINTS[mode]
+        )
+        lineage = spark.read.parquet(infos[mode]["lineage_path"])
+        assert sorted(
+            tuple(r) for r in lineage.select(
+                "stage_idx", "stage", "n_in", "n_out"
+            ).collect()
+        ) == ALL_STAGE_LINEAGE[mode]
+        assert set(infos[mode]) == RESULT_KEYS
+    assert infos["full"]["n_after_resume"] is None
+    assert infos["increment"]["n_after_semdedup"] is None

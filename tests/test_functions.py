@@ -7,8 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from distributed_system___ocr_spark.functions.vectors import (
-    cosine_udf,
-    l2_norm_udf,
+    _seq_dot,
     lsh_bucket_udf,
 )
 
@@ -24,25 +23,21 @@ def _vec_df(spark, n=50, d=16, seed=3):
     )
 
 
-def test_cosine_udf_matches_catalyst_fold(spark):
+def test_seq_dot_matches_catalyst_fold(spark):
+    """``_seq_dot`` sums in strict dim order, bit-identical to the
+    Catalyst ``aggregate(zip_with(...))`` left fold (operators/pq.py
+    relies on it); numpy's pairwise/BLAS dot differs in ulps."""
     df = _vec_df(spark)
     fold = F.aggregate(
         F.zip_with("a", "b", lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    ) / (
-        F.sqrt(F.aggregate(F.zip_with("a", "a", lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x))
-        * F.sqrt(F.aggregate(F.zip_with("b", "b", lambda x, y: x * y),
-                             F.lit(0.0), lambda acc, x: acc + x))
     )
-    rows = df.select(
-        "id",
-        cosine_udf()(F.col("a"), F.col("b")).alias("u"),
-        fold.alias("f"),
-    ).collect()
-    for r in rows:
-        assert r["u"] == r["f"], (r["id"], r["u"], r["f"])  # bit-exact
+    rows = df.select("a", "b", fold.alias("f")).collect()
+    got = _seq_dot(
+        np.array([r["a"] for r in rows]), np.array([r["b"] for r in rows])
+    )
+    assert got.tolist() == [r["f"] for r in rows]  # bit-exact
 
 
 def test_ivf_cell_udf_matches_catalyst_fold(spark):
@@ -96,20 +91,15 @@ def test_winnow_kernel_matches_definition():
     assert winnow("a b c d e f").shape[0] == 1  # exactly one full window
 
 
-def test_l2_and_bucket_udfs(spark):
+def test_lsh_bucket_udf(spark):
     df = _vec_df(spark, d=8)
     planes = [[0.5] * 8, [-0.25] * 8]
     rows = df.select(
         "id", "a",
-        l2_norm_udf()(F.col("a")).alias("norm"),
         lsh_bucket_udf(planes)(F.col("a")).alias("bucket"),
     ).collect()
     for r in rows:
         a = np.array(r["a"])
-        acc = 0.0
-        for x in a:
-            acc += x * x
-        assert r["norm"] == np.sqrt(acc)
         expected = sum(
             (1 << i)
             for i, p in enumerate(planes)

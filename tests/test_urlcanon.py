@@ -18,6 +18,8 @@ from distributed_system___ocr_spark.operators.urlcanon import (
     canonicalize_docs,
 )
 
+from conftest import jobs_of_call
+
 
 def _doc(url, text):
     return {"url": url, "text": text, "lang": "en"}
@@ -85,12 +87,19 @@ def test_increment_canonicalization_must_match_chain(spark, tmp_path):
     ]))
     run_curation(spark, base, out, run_id="b", canonicalize_urls=True)
 
-    # mismatched increment fails loudly
+    # mismatched increment fails loudly, before any Spark job
     inc_raw = spark.createDataFrame(pd.DataFrame([
         _doc("https://z.com/new", _BODY + " new"),
     ]))
-    with pytest.raises(ValueError, match="must match the committed"):
-        run_curation_increment(spark, inc_raw, out, run_id="i0")
+
+    def mismatched():
+        with pytest.raises(ValueError, match="must match the committed"):
+            run_curation_increment(spark, inc_raw, out, run_id="i0")
+
+    _, jobs, stray = jobs_of_call(
+        spark.sparkContext, f"canon-mismatch-{tmp_path.name}", mismatched
+    )
+    assert not jobs and not stray
 
     # matched increment: a new SPELLING of a committed url
     # canonicalizes to the same identity and resume-drops
