@@ -18,6 +18,14 @@ surveyed in SURVEY.md) as an idiomatic PySpark batch engine:
 
 Everything here is plain public PySpark API (DataFrame / pandas UDFs);
 no custom Catalyst rules are needed (SURVEY.md §4).
+
+Importing the package (as every Python worker does when it unpickles
+an engine UDF) stops the worker from re-reading unchanged zip archives
+on its path before each task (``_zipdirs``).
 """
+
+from ._zipdirs import reuse_unchanged_zip_directories
+
+reuse_unchanged_zip_directories()
 
 __version__ = "0.1.0"

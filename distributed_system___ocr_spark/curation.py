@@ -1280,6 +1280,9 @@ _STAGES = (
     ),
 )
 
+# the switches of the corpus-global stages, which no increment runs
+CORPUS_GLOBAL_SWITCHES = tuple(s.switch for s in _STAGES if s.inc is False)
+
 
 def run_curation(
     spark: SparkSession,
@@ -1361,10 +1364,10 @@ def run_curation(
         # quality stats, language/cell shares): running them over one
         # batch silently changes their semantics, so they demand a
         # full re-curate instead
-        for s in _STAGES:
-            if s.inc is False and s.on(r):
+        for k in CORPUS_GLOBAL_SWITCHES:
+            if _on(r[k]):
                 raise ValueError(
-                    f"{s.switch} is a corpus-global stage — its "
+                    f"{k} is a corpus-global stage — its "
                     "statistics are properties of the whole corpus, so "
                     "it needs a full re-curate, not an increment"
                 )

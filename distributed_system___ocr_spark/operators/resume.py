@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bloom import build_bloom, fits_broadcast, with_bloom_flag
+from .extract import EXTRACTED_SCHEMA
 
 
 def _ckpt(out_dir: str) -> str:
@@ -200,9 +201,9 @@ def compact(
     if not snap or not snap["runs"]:
         raise FileNotFoundError(f"nothing to compact under {out_dir}")
     base = os.path.join(out_dir, "extracted")
-    all_runs = spark.read.option("basePath", base).parquet(
-        *run_dirs(out_dir, snap["runs"])
-    ).drop("run_id")
+    all_runs = spark.read.schema(EXTRACTED_SCHEMA).option(
+        "basePath", base
+    ).parquet(*run_dirs(out_dir, snap["runs"])).drop("run_id")
     n = snap["n"] + 1
     new_run = f"compacted-{n}"
     dest = os.path.join(base, f"run_id={new_run}")

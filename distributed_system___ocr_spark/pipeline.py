@@ -29,7 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.extract import extract_stage
+from .operators.extract import EXTRACTED_SCHEMA, extract_stage
 from .operators.lineage import lineage_from_extracted
 from .operators.manifest import build_manifest, filter_nonblank, latest_per_key
 from .operators.partitioning import salted_repartition
@@ -172,6 +172,8 @@ def read_extracted(
     if not snap or not snap["runs"]:
         raise FileNotFoundError(f"no committed snapshot under {out_dir}")
     base = os.path.join(out_dir, "extracted")
-    return spark.read.option("basePath", base).parquet(
-        *run_dirs(out_dir, snap["runs"])
-    )
+    # the written schema, so the read plans without a footer-inference
+    # job; the run_id partition column is still discovered from paths
+    return spark.read.schema(EXTRACTED_SCHEMA).option(
+        "basePath", base
+    ).parquet(*run_dirs(out_dir, snap["runs"]))

@@ -385,15 +385,13 @@ def curate_foreach_batch(
     stage knobs are rejected HERE (fail fast) rather than on batch 2
     inside the stream."""
     from ..curation import (
+        CORPUS_GLOBAL_SWITCHES,
         load_curation_snapshot,
         run_curation,
         run_curation_increment,
     )
 
-    for k in (
-        "remove_spans_min_docs", "segment_dedup_n", "semdedup_tau",
-        "lm_quality_drop_z", "cluster_alpha", "sample_alpha",
-    ):
+    for k in CORPUS_GLOBAL_SWITCHES:
         if curation_kwargs.get(k) is not None:
             raise ValueError(
                 f"{k} is a corpus-global stage — its statistics are "

@@ -337,3 +337,29 @@ def test_manifest_failure_propagates_after_lineage_finishes(
         assert os.path.exists(os.path.join(lineage, "_SUCCESS")), broken
         assert not [t for t in threading.enumerate()
                     if isinstance(t, InheritableThread)]
+
+
+def test_read_extracted_plans_without_a_job(spark, pages, tmp_path):
+    """``read_extracted`` reads with the written schema, so it runs no
+    footer-inference job, and it still discovers the ``run_id``
+    partition column with the type a schema-less read infers: int for
+    numeric-only run ids, string once any id is not a number."""
+    from distributed_system___ocr_spark.operators.resume import run_dirs
+
+    sc = spark.sparkContext
+    half = pages.filter(F.abs(F.xxhash64("url")) % 2 == 0)
+    for run_ids, run_id_type in ((["0001"], "int"),
+                                 (["0001", "r2"], "string")):
+        out = str(tmp_path / "-".join(run_ids))
+        for rid, df in zip(run_ids, (half, pages)):
+            run_pipeline(spark, df, out, run_id=rid, num_partitions=4)
+        df, grouped, stray = jobs_of_call(
+            sc, f"read-{len(run_ids)}-{tmp_path.name}",
+            lambda: read_extracted(spark, out),
+        )
+        assert not grouped and not stray
+        inferred = spark.read.option(
+            "basePath", os.path.join(out, "extracted")
+        ).parquet(*run_dirs(out, run_ids))
+        assert df.schema == inferred.schema
+        assert dict(df.dtypes)["run_id"] == run_id_type

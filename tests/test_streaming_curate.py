@@ -126,7 +126,22 @@ def test_streaming_curation_replayed_batch_skips(spark, tmp_path):
 
 
 def test_streaming_curation_rejects_corpus_global_knobs(spark, tmp_path):
-    with pytest.raises(ValueError, match="corpus-global"):
-        curate_foreach_batch(
-            spark, str(tmp_path), str(tmp_path / "o"), semdedup_tau=0.9,
+    """Every corpus-global stage of the curation table (``inc=False``)
+    is rejected up front, before any stream starts, with its message."""
+    from distributed_system___ocr_spark.curation import _STAGES
+
+    switches = [s.switch for s in _STAGES if s.inc is False]
+    assert len(switches) == 6
+    ck = tmp_path / "ck"
+    for k in switches:
+        with pytest.raises(ValueError) as exc:
+            curate_foreach_batch(
+                spark, str(tmp_path / "missing"), str(tmp_path / "o"),
+                checkpoint_dir=str(ck), **{k: 1},
+            )
+        assert str(exc.value) == (
+            f"{k} is a corpus-global stage — its statistics are "
+            "properties of the whole corpus, so it cannot run per "
+            "micro-batch; run a full batch re-curate instead"
         )
+    assert not ck.exists() and not spark.streams.active
